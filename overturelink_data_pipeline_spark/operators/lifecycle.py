@@ -43,6 +43,7 @@ lifted from per-country GeoParquet caches to dedup indexes.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import re
@@ -66,6 +67,7 @@ from overturelink_data_pipeline_spark.operators.dedup import (
     _probe_pair_counts,
     minhash_signatures_agg,
 )
+from overturelink_data_pipeline_spark.session import _conf_bytes
 
 __all__ = [
     "PostingIndex",
@@ -79,27 +81,53 @@ __all__ = [
     "reap_dead_process_indexes",
 ]
 
-#: Bucket count for the index tables. Sized for the test/bench corpora;
-#: a real deployment picks buckets so each holds O(100 MB) AND gives
-#: enough writer parallelism (see _bucket_aligned) — the knob is
-#: per-index via the ``buckets`` build argument.
-DEFAULT_BUCKETS = 16
+def _derived_buckets(df: DataFrame) -> int:
+    """Bucket count for an index built over ``df``: ``max(1,
+    ceil(input_bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes))``,
+    so each bucket holds about one AQE target partition of input and a
+    test-sized corpus gets one bucket instead of one task and one file
+    per bucket per write (framework overhead at that scale, not
+    compute). ``input_bytes`` sums Catalyst's size estimates of the
+    optimized plan's leaves, driver-side and without a job; the leaves,
+    not the root, because the root estimate of a join is the product of
+    its children. A leaf Catalyst cannot size (an RDD-backed frame, such
+    as ``createDataFrame`` over a Python list, reports
+    ``spark.sql.defaultSizeInBytes``) adds nothing: measuring it would
+    cost a job."""
+    spark = df.sparkSession
+    unsized = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = (leaves.apply(i).stats().sizeInBytes() for i in range(leaves.size()))
+    input_bytes = sum(b for b in sizes if b < unsized)
+    target = _conf_bytes(
+        spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes", 64 << 20
+    )
+    return max(1, math.ceil(input_bytes / target))
+
+
+def _stored_buckets(spark: SparkSession, table: str) -> int:
+    """The bucket count of a stored index table, from its catalog bucket
+    spec (driver-side, no job). Appends, compaction and repair reuse it:
+    Spark refuses an append whose bucket spec differs from the table's,
+    so the count is fixed at build and never re-derived."""
+    for r in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
+        if r["col_name"] == "Num Buckets":
+            return int(r["data_type"])
+    raise ValueError(f"{table} has no bucket spec")
 
 
 def _bucket_aligned(df: DataFrame, buckets: int, *cols: str) -> DataFrame:
     """Repartition to EXACTLY the table's bucket partitioning before a
     bucketed write. Spark's V1 bucketed write never adds an exchange:
-    every input task writes its own file for every bucket it holds
-    rows for, so a 32-task frame × 16 buckets committed ~512 files PER
-    WRITE — the r9 profile found 1,025 files under one posting table
-    (two generations), and the file count, not the data, dominated
-    build/append/probe wall at sf1. ``repartition(buckets, cols)``
-    uses the same Murmur3-pmod HashPartitioning as the bucket
-    assignment, so partition i holds exactly bucket i and each write
-    lands ONE file per bucket. At 100 TB this is also the small-file
-    guard (a month of appends × 512 files/write is an object-store
-    listing pathology); writer parallelism == buckets, so deployments
-    size ``buckets`` for both file size and write width."""
+    every input task writes its own file for every bucket it holds rows
+    for, so an unaligned 32-task frame × 16 buckets commits ~512 files
+    per write. ``repartition(buckets, cols)`` uses the same
+    Murmur3-pmod HashPartitioning as the bucket assignment, so
+    partition i holds exactly bucket i and each write lands ONE file
+    per bucket (also the small-file guard for a month of appends on an
+    object store). ``buckets`` is the count derived from the build's
+    input bytes (_derived_buckets) or, after the build, the stored
+    table's own (_stored_buckets); writer parallelism equals it."""
     return df.repartition(buckets, *[F.col(c) for c in cols])
 
 
@@ -135,24 +163,6 @@ def _postings(docs: DataFrame) -> DataFrame:
 def _drop(spark: SparkSession, *tables: str) -> None:
     for t in tables:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def _run_overlapped(*thunks) -> list:
-    """Run independent driver actions SEQUENTIALLY.
-
-    NOTE (r14, measured negative result): a thread-pool variant (guide
-    §2.6 — overlap the build/append write trios, which are independent
-    writes to distinct tables over a shared read-only cache) was tried
-    and REVERTED. Warm-session cold-path interleaved A/B on
-    dedup_lifecycle_probe at sf0.1 (4 cold rebuilds per child, tables
-    dropped between, bench-identical cache-clear+GC): overlapped med
-    12.87 / 8.52 s vs sequential 7.21 / 8.16 s across two rounds —
-    three concurrent 32-core write stages oversubscribe the local
-    executor (≈96 runnable tasks on 32 cores) and contend on one disk's
-    commit path, costing more than the saved scheduler round-trips. On
-    a real cluster with idle executors the overlap is the right call —
-    re-evaluate there; the helper keeps the call sites ready."""
-    return [t() for t in thunks]
 
 
 def _clean_orphan_location(spark: SparkSession, table: str) -> None:
@@ -193,10 +203,8 @@ def process_index_name(base: str) -> str:
     directory is shared, so two processes using the same index name
     race each other's table files: process B's ``_clean_orphan_location``
     (whose catalog cannot see A's live table) deletes the directory
-    process A is scanning — exactly the ``FileNotFoundException`` under
-    ``spark-warehouse/dlp_index_ns`` that killed the round-13 driver
-    pytest gate (VERIFY_r13) and the builder's own concurrent plan-dump
-    session before it. Keying the namespace by pid makes every
+    process A is scanning (a ``FileNotFoundException`` in A). Keying the
+    namespace by pid makes every
     process's release private: warm-path stamp skips still work across
     invocations WITHIN a process (same name, same catalog), and no
     process can ever read — or delete — another's live index. A real
@@ -212,9 +220,10 @@ _REAPED: set[str] = set()
 
 
 def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
-    """Best-effort GC for ``{base}_p{pid}_*`` warehouse directories left
-    by DEAD processes (once per process per base — driver-side listdir,
-    zero Spark jobs). A directory is deleted only when its embedded pid
+    """Best-effort GC for ``{base}_p{pid}_*`` warehouse entries (table
+    directories and the ``_stamp`` sidecar file) left by DEAD processes
+    (once per process per base — driver-side listdir, zero Spark jobs).
+    An entry is deleted only when its embedded pid
     provably no longer exists (``os.kill(pid, 0)`` → ESRCH); a live or
     unverifiable pid is left alone, so a concurrently running process's
     index is never touched — the deletion race this namespace exists to
@@ -242,7 +251,12 @@ def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
         try:
             os.kill(pid, 0)
         except ProcessLookupError:
-            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
+            path = os.path.join(root, d)
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                with contextlib.suppress(OSError):
+                    os.remove(path)
         except Exception:
             continue
 
@@ -267,14 +281,10 @@ def release_stamp(spark: SparkSession, name: str) -> str | None:
     The stamp is written LAST (after every index write), so a job that
     died mid-build leaves a stale/absent stamp and the retry rebuilds.
 
-    Storage (r14): a sidecar FILE in the warehouse, not a 1-row
-    catalog table — the table write was the single most expensive job
-    of the registered query's cold path (0.74 s for one row: write +
-    commit + catalog), and the warm path paid a scan leg to read it
-    back; the file is a driver-side FS op both ways, zero Spark jobs
-    (the sources/cache.py sidecar-meta precedent). Durability is
-    unchanged: same storage as the tables, written last, and a partial
-    write reads as absent (readUTF raises → None → rebuild)."""
+    Storage: a sidecar FILE in the warehouse, not a 1-row catalog
+    table — a driver-side FS op both ways, zero Spark jobs. It shares
+    the tables' storage, is written last, and a partial write reads as
+    absent (readUTF raises → None → rebuild)."""
     path, fs = _stamp_file(spark, name)
     try:
         if not fs.exists(path):
@@ -364,12 +374,10 @@ def fingerprint_leg(docs: DataFrame, cols, kind: str = "fp") -> DataFrame:
 def release_current(
     spark: SparkSession, name: str, docs: DataFrame, *cols: str
 ) -> tuple[str, bool]:
-    """``(fingerprint, is_current)`` in ONE Spark job (r10 warm-path
-    shave, VERDICT r9 ask #4): the corpus-fingerprint aggregate is the
-    only job; the stored stamp is a driver-side sidecar-file read
-    (release_stamp — free since r14, previously a 1-row table fold).
-    Fingerprint column choice: see corpus_fingerprint's
-    content-blindness note."""
+    """``(fingerprint, is_current)`` in ONE Spark job: the
+    corpus-fingerprint aggregate; the stored stamp is a driver-side
+    sidecar-file read (release_stamp). Fingerprint column choice: see
+    corpus_fingerprint's content-blindness note."""
     stored = release_stamp(spark, name)
     row = _fingerprint_agg(docs, cols).first()
     stamp = _stamp(row["n"], row["hs"])
@@ -423,14 +431,11 @@ _UB_PROP = "overturelink.ub"
 
 def _write_ub(spark: SparkSession, table: str, ub: int) -> None:
     """Persist the stored-census upper bound as a TABLE PROPERTY on the
-    count sidecar — catalog metadata, zero Spark jobs (an earlier r10
-    cut used a separate 1-row stats table: two write jobs per
-    build/append plus a read leg per probe, ~1 s of pure maintenance on
-    the cold path — the bench_diff regression that prompted this).
-    Durability matches the index itself: the in-memory catalog loses
-    properties with the process exactly when it loses the tables (a
-    fresh process rebuilds anyway); a shared metastore persists them
-    with the table."""
+    count sidecar — catalog metadata, zero Spark jobs. Durability
+    matches the index itself: the in-memory catalog loses properties
+    with the process exactly when it loses the tables (a fresh process
+    rebuilds anyway); a shared metastore persists them with the
+    table."""
     spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES('{_UB_PROP}'='{int(ub)}')")
 
 
@@ -518,8 +523,7 @@ def _preflight_dmax(rows: list, key: str, what: str) -> int:
     """Consume collected _preflight_frame rows: raise on overlap,
     return the delta-side per-key max (0 for an empty delta). The one
     implementation behind both the probe verdict and the fused append
-    preflight (r14 — append used to pay separate guard-collect and
-    generation-max jobs; see PostingIndex.append)."""
+    preflight (see PostingIndex.append)."""
     clash_ids = [r["id"] for r in rows if r["kind"] == "clash"]
     if clash_ids:
         # the union leg carries ids as strings; report them native so
@@ -568,19 +572,16 @@ class PendingProbe:
         )
 
 
-def _compact_counts(
-    spark: SparkSession, table: str, keys: list[str], buckets: int
-) -> None:
+def _compact_counts(spark: SparkSession, table: str, keys: list[str]) -> None:
     """Rewrite a count sidecar as ONE row per key under the SAME bucket
-    spec (VERDICT r8 ask #5): every append adds a row per key per crawl,
-    so after many monthly appends the probe's bucket-local SUM scans
-    rows ∝ appends×keys. The aggregation is partition-local on the
-    bucket layout (groupBy ⊆ bucket keys), so compaction itself never
-    exchanges; the rewrite goes through a temp table + catalog rename
-    because Spark refuses to overwrite a table it is reading. The
-    drop→rename window is the non-atomic step. Recovery (ADVICE r9,
-    both crash scopes handled in code rather than by a docstring
-    claim):
+    spec (the stored table's own count): every append adds a row per
+    key per crawl, so after many monthly appends the probe's
+    bucket-local SUM scans rows ∝ appends×keys. The aggregation is
+    partition-local on the bucket layout (groupBy ⊆ bucket keys), so
+    compaction itself never exchanges; the rewrite goes through a temp
+    table + catalog rename because Spark refuses to overwrite a table
+    it is reading. The drop→rename window is the non-atomic step.
+    Recovery (both crash scopes handled in code):
 
     - **Same-process retry** (an exception between DROP and RENAME):
       the catalog still knows ``{table}_compact_tmp`` but not
@@ -601,7 +602,9 @@ def _compact_counts(
     spark.sql(f"DROP TABLE IF EXISTS {tmp}")
     _clean_orphan_location(spark, tmp)
     agg = spark.table(table).groupBy(*keys).agg(F.sum("n").alias("n"))
-    agg.write.bucketBy(buckets, *keys).mode("overwrite").saveAsTable(tmp)
+    agg.write.bucketBy(_stored_buckets(spark, table), *keys).mode(
+        "overwrite"
+    ).saveAsTable(tmp)
     spark.sql(f"DROP TABLE {table}")
     spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
 
@@ -627,7 +630,6 @@ class PostingIndex:
 
     spark: SparkSession
     name: str
-    buckets: int = DEFAULT_BUCKETS
     cap: int = field(default_factory=lambda: NGRAM_DF_CAP)
     guard_overlap: bool = True
     #: append() auto-compacts when the drifted pre-flight bound exceeds
@@ -657,6 +659,12 @@ class PostingIndex:
     def _hcount(self) -> str:
         return f"{self.name}_hcount"
 
+    @property
+    def buckets(self) -> int:
+        """The stored bucket count, derived from the input size at
+        build() and shared by all three tables."""
+        return _stored_buckets(self.spark, self._post)
+
     def exists(self) -> bool:
         """All index tables present in the catalog — the guard a
         stamped caller pairs with release_stamp before skipping a
@@ -667,33 +675,26 @@ class PostingIndex:
         )
 
     def build(self, docs: DataFrame) -> "PostingIndex":
-        """Release-time build: write all three sidecars from scratch.
-        The postings frame is persisted ONCE so the three write jobs
-        share one tokenize/explode pass (ADVICE r8); the pre-flight
+        """Release-time build: write all three sidecars from scratch,
+        bucketed by a count derived from ``docs``' input bytes
+        (_derived_buckets). The postings frame is persisted ONCE so the
+        three write jobs share one tokenize/explode pass; the pre-flight
         upper-bound aggregate MATERIALIZES the cache first, then the
-        three independent table writes run OVERLAPPED (r14, guide
-        §2.6 — previously four sequential driver actions)."""
+        three table writes run one after another."""
         for t in (self._post, self._ns, self._hcount):
             _clean_orphan_location(self.spark, t)
+        n = _derived_buckets(docs)
         # persisted ALREADY bucket-aligned: the postings write lands one
         # file per bucket, and the hcount groupBy(h) below is
         # partition-local on the same layout
         post = _fresh_persist(
-            f"{self.name}_build_post",
-            _bucket_aligned(_postings(docs), self.buckets, "h"),
+            f"{self.name}_build_post", _bucket_aligned(_postings(docs), n, "h")
         )
         # exact per-key max over the fresh index (one partition-local
         # agg) — the probe pre-flight's skip bound; running it FIRST
         # also populates the cache the three writes below share
         ub = _exact_max(self.spark, self._hcount, ["h"], post)
-        _run_overlapped(
-            lambda: post.write.bucketBy(self.buckets, "h")
-            .sortBy("h")
-            .mode("overwrite")
-            .saveAsTable(self._post),
-            lambda: self._write_ns(post, "overwrite"),
-            lambda: self._write_hcount(post, "overwrite"),
-        )
+        self._write_trio(post, n, "overwrite")
         # stored as a table property (zero write jobs), AFTER the
         # hcount table exists
         _write_ub(self.spark, self._hcount, ub)
@@ -701,20 +702,20 @@ class PostingIndex:
 
     def append(self, crawl: DataFrame) -> None:
         """Admit a crawl: append its postings and sidecar rows under
-        the SAME bucket spec — no rebuild, no corpus-wide exchange.
-        Current per-key/per-doc counts are SUMs over appended rows,
+        the SAME bucket spec (the stored count, never re-derived from
+        the crawl) — no rebuild, no corpus-wide exchange. Current
+        per-key/per-doc counts are SUMs over appended rows,
         partition-local on the bucket layout. The crawl's postings are
         persisted once for the guard + three writes; see the class
         docstring for recovery if the job dies mid-trio.
 
-        r14 wall shave (guide §2.1/§2.6): the admission guard and the
-        generation per-key max — previously two driver actions — ride
-        ONE tagged-union collect (the probe pre-flight recipe), which
-        also materializes the persisted crawl postings; the three
-        independent table writes then run OVERLAPPED."""
+        The admission guard and the generation per-key max ride ONE
+        tagged-union collect (the probe pre-flight recipe), which also
+        materializes the persisted crawl postings; the three table
+        writes then run one after another."""
+        n = self.buckets
         post = _fresh_persist(
-            f"{self.name}_append_post",
-            _bucket_aligned(_postings(crawl), self.buckets, "h"),
+            f"{self.name}_append_post", _bucket_aligned(_postings(crawl), n, "h")
         )
         clash = (
             _clash_frame(self.spark.table(self._ns), post, "doc_id")
@@ -738,39 +739,29 @@ class PostingIndex:
         ub = None if prev is None else prev + gen_max
         if ub is not None:
             _write_ub(self.spark, self._hcount, ub)
-        _run_overlapped(
-            lambda: post.write.bucketBy(self.buckets, "h")
-            .sortBy("h")
-            .mode("append")
-            .saveAsTable(self._post),
-            lambda: self._write_ns(post, "append"),
-            lambda: self._write_hcount(post, "append"),
-        )
+        self._write_trio(post, n, "append")
         _settle_ub_after_append(self, self._hcount, ["h"], ub)
 
-    def _write_ns(self, post: DataFrame, mode: str) -> None:
+    def _write_trio(self, post: DataFrame, n: int, mode: str) -> None:
+        # sequential on purpose: overlapping the three writes on a thread
+        # pool measured a 2× loss (oversubscribed local executor)
+        post.write.bucketBy(n, "h").sortBy("h").mode(mode).saveAsTable(self._post)
+        self._write_ns(post, n, mode)
+        self._write_hcount(post, n, mode)
+
+    def _write_ns(self, post: DataFrame, n: int, mode: str) -> None:
         # ns changes keys (doc_id), so it aligns explicitly
         _bucket_aligned(
-            post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")),
-            self.buckets,
-            "doc_id",
-        ).write.bucketBy(self.buckets, "doc_id").mode(mode).saveAsTable(self._ns)
+            post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")), n, "doc_id"
+        ).write.bucketBy(n, "doc_id").mode(mode).saveAsTable(self._ns)
 
-    def _write_hcount(self, post: DataFrame, mode: str) -> None:
+    def _write_hcount(self, post: DataFrame, n: int, mode: str) -> None:
         # hcount's groupBy(h) inherits the caller's h-aligned layout
         # (the persisted build/append frame, or the bucketed table read
         # in repair()) and is already one partition per bucket
         post.groupBy("h").agg(F.count(F.lit(1)).alias("n")).write.bucketBy(
-            self.buckets, "h"
+            n, "h"
         ).mode(mode).saveAsTable(self._hcount)
-
-    def _write_sidecars(self, post: DataFrame, mode: str) -> None:
-        # repair()'s rebuild path — the two sidecar rewrites are
-        # independent, so they overlap too
-        _run_overlapped(
-            lambda: self._write_ns(post, mode),
-            lambda: self._write_hcount(post, mode),
-        )
 
     def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
         """(new_id, match_id, jaccard) for the crawl vs (index ∪ crawl).
@@ -919,7 +910,7 @@ class PostingIndex:
         appends (guarded), so it is already one row per doc. Also
         re-tightens the probe pre-flight's upper bound to the exact
         stored max (append drift is one-directional — see append)."""
-        _compact_counts(self.spark, self._hcount, ["h"], self.buckets)
+        _compact_counts(self.spark, self._hcount, ["h"])
         _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
 
     def reconcile(self) -> dict[str, int | bool]:
@@ -944,7 +935,10 @@ class PostingIndex:
         bucket layout; the ns rewrite is the one full exchange
         (groupBy doc_id over a bucketed-by-h table), acceptable for a
         one-off recovery."""
-        self._write_sidecars(self.spark.table(self._post), mode="overwrite")
+        n = self.buckets
+        post = self.spark.table(self._post)
+        self._write_ns(post, n, "overwrite")
+        self._write_hcount(post, n, "overwrite")
         _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
 
     def drop(self) -> None:
@@ -977,7 +971,6 @@ class BandIndex:
 
     spark: SparkSession
     name: str
-    buckets: int = DEFAULT_BUCKETS
     cap: int = field(default_factory=lambda: BAND_BUCKET_CAP)
     guard_overlap: bool = True
     #: bound-based auto-compact — see PostingIndex.auto_compact_ub_frac
@@ -994,6 +987,11 @@ class BandIndex:
     @property
     def _bcount(self) -> str:
         return f"{self.name}_bcount"
+
+    @property
+    def buckets(self) -> int:
+        """See PostingIndex.buckets."""
+        return _stored_buckets(self.spark, self._bands)
 
     def _band_rows(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         # postings via the inline-explode shape (_postings docstring);
@@ -1015,36 +1013,25 @@ class BandIndex:
         # different lineage (arrays, not postings) and writes once
         for t in (self._bands, self._sh, self._bcount):
             _clean_orphan_location(self.spark, t)
+        n = _derived_buckets(docs)
         bands, sh = self._band_rows(docs)
         bands = _fresh_persist(
-            f"{self.name}_build_bands",
-            _bucket_aligned(bands, self.buckets, "band", "bucket"),
+            f"{self.name}_build_bands", _bucket_aligned(bands, n, "band", "bucket")
         )
         # pre-flight bound agg first (materializes the band cache),
-        # then the three independent writes run OVERLAPPED (r14 —
-        # same shape as PostingIndex.build)
+        # then the three writes — same shape as PostingIndex.build
         ub = _exact_max(self.spark, self._bcount, ["band", "bucket"], bands)
-        _run_overlapped(
-            lambda: bands.write.bucketBy(self.buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("overwrite")
-            .saveAsTable(self._bands),
-            lambda: _bucket_aligned(sh, self.buckets, "doc_id")
-            .write.bucketBy(self.buckets, "doc_id")
-            .mode("overwrite")
-            .saveAsTable(self._sh),
-            lambda: self._write_counts(bands, mode="overwrite"),
-        )
+        self._write_trio(bands, sh, n, "overwrite")
         _write_ub(self.spark, self._bcount, ub)
         return self
 
     def append(self, crawl: DataFrame) -> None:
+        n = self.buckets  # the stored count — see PostingIndex.append
         bands, sh = self._band_rows(crawl)
         bands = _fresh_persist(
-            f"{self.name}_append_bands",
-            _bucket_aligned(bands, self.buckets, "band", "bucket"),
+            f"{self.name}_append_bands", _bucket_aligned(bands, n, "band", "bucket")
         )
-        # guard + generation max fused into ONE collect (r14 — see
+        # guard + generation max fused into ONE collect (see
         # PostingIndex.append); materializes the band cache too
         clash = (
             _clash_frame(self.spark.table(self._sh), bands, "doc_id")
@@ -1066,28 +1053,26 @@ class BandIndex:
         ub = None if prev is None else prev + gen_max
         if ub is not None:
             _write_ub(self.spark, self._bcount, ub)
-        _run_overlapped(
-            lambda: bands.write.bucketBy(self.buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .mode("append")
-            .saveAsTable(self._bands),
-            lambda: _bucket_aligned(sh, self.buckets, "doc_id")
-            .write.bucketBy(self.buckets, "doc_id")
-            .mode("append")
-            .saveAsTable(self._sh),
-            lambda: self._write_counts(bands, mode="append"),
-        )
+        self._write_trio(bands, sh, n, "append")
         _settle_ub_after_append(self, self._bcount, ["band", "bucket"], ub)
 
-    def _write_counts(self, bands: DataFrame, mode: str) -> None:
+    def _write_trio(self, bands: DataFrame, sh: DataFrame, n: int, mode: str) -> None:
+        # sequential on purpose — see PostingIndex._write_trio
+        bands.write.bucketBy(n, "band", "bucket").sortBy("band", "bucket").mode(
+            mode
+        ).saveAsTable(self._bands)
+        _bucket_aligned(sh, n, "doc_id").write.bucketBy(n, "doc_id").mode(
+            mode
+        ).saveAsTable(self._sh)
+        self._write_counts(bands, n, mode)
+
+    def _write_counts(self, bands: DataFrame, n: int, mode: str) -> None:
         # partition-local + one file per bucket: the caller's frame is
         # (band, bucket)-aligned (persisted build/append frame or the
         # bucketed table read in repair())
         bands.groupBy("band", "bucket").agg(
             F.count(F.lit(1)).alias("n")
-        ).write.bucketBy(self.buckets, "band", "bucket").mode(mode).saveAsTable(
-            self._bcount
-        )
+        ).write.bucketBy(n, "band", "bucket").mode(mode).saveAsTable(self._bcount)
 
     def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
         spark = self.spark
@@ -1189,7 +1174,7 @@ class BandIndex:
         """Collapse the per-bucket count sidecar to one row per
         (band, bucket) — see PostingIndex.compact. Re-tightens the
         pre-flight upper bound to the exact stored max."""
-        _compact_counts(self.spark, self._bcount, ["band", "bucket"], self.buckets)
+        _compact_counts(self.spark, self._bcount, ["band", "bucket"])
         _write_ub(
             self.spark, self._bcount,
             _exact_max(self.spark, self._bcount, ["band", "bucket"]),
@@ -1218,7 +1203,7 @@ class BandIndex:
         repaired from the index alone — re-append the missing crawl's
         rows or rebuild; the docstring IS the documented recovery
         contract (ADVICE r8)."""
-        self._write_counts(self.spark.table(self._bands), mode="overwrite")
+        self._write_counts(self.spark.table(self._bands), self.buckets, "overwrite")
         _write_ub(
             self.spark, self._bcount,
             _exact_max(self.spark, self._bcount, ["band", "bucket"]),
@@ -1286,7 +1271,6 @@ class SemanticRelease:
 
     spark: SparkSession
     name: str
-    buckets: int = DEFAULT_BUCKETS
     k: int | None = None
     guard_overlap: bool = True
     _frozen_df: DataFrame | None = field(default=None, repr=False, compare=False)
@@ -1304,6 +1288,11 @@ class SemanticRelease:
     def _cents(self) -> str:
         return f"{self.name}_cents"
 
+    @property
+    def buckets(self) -> int:
+        """See PostingIndex.buckets."""
+        return _stored_buckets(self.spark, self._assigned)
+
     def exists(self) -> bool:
         """See PostingIndex.exists."""
         return all(
@@ -1313,9 +1302,10 @@ class SemanticRelease:
 
     def build(self, emb: DataFrame) -> "SemanticRelease":
         """Fit k-means on the release corpus (frozen thereafter), write
-        the assigned corpus bucketed by cell + the centroid sidecar.
-        With ``k=None``, k is chosen here from the corpus size (one
-        count job — release-time, amortized)."""
+        the assigned corpus bucketed by cell (count derived from
+        ``emb``'s input bytes) + the centroid sidecar. With ``k=None``,
+        k is chosen here from the corpus size (one count job —
+        release-time, amortized)."""
         from overturelink_data_pipeline_spark.operators.similarity import (
             _lloyd_assign,
             _lloyd_fit,
@@ -1326,11 +1316,12 @@ class SemanticRelease:
         if self.k is None:
             self.k = max(8, math.ceil(emb.count() / self.TARGET_CELL))
         cents = _lloyd_fit(emb, k=self.k, kernel="arrow")
+        n = _derived_buckets(emb)
         _bucket_aligned(
-            _lloyd_assign(emb, cents, kernel="arrow"), self.buckets, "cl"
-        ).write.bucketBy(self.buckets, "cl").sortBy("cl").mode(
-            "overwrite"
-        ).saveAsTable(self._assigned)
+            _lloyd_assign(emb, cents, kernel="arrow"), n, "cl"
+        ).write.bucketBy(n, "cl").sortBy("cl").mode("overwrite").saveAsTable(
+            self._assigned
+        )
         self._frozen_df = None  # release contents changed
         self.spark.createDataFrame(
             [(cl, list(map(float, c))) for cl, c in sorted(cents.items())],
@@ -1380,9 +1371,10 @@ class SemanticRelease:
                 self.spark.table(self._assigned), crawl, "vec_id",
                 f"SemanticRelease({self.name}).append",
             )
-        _bucket_aligned(self._assign(crawl), self.buckets, "cl").write.bucketBy(
-            self.buckets, "cl"
-        ).sortBy("cl").mode("append").saveAsTable(self._assigned)
+        n = self.buckets
+        _bucket_aligned(self._assign(crawl), n, "cl").write.bucketBy(n, "cl").sortBy(
+            "cl"
+        ).mode("append").saveAsTable(self._assigned)
         self._frozen_df = None  # release contents changed
 
     def probe(self, crawl: DataFrame, tau: float | None = None) -> DataFrame:

@@ -1,27 +1,32 @@
-"""First-invocation pin for a set of queries (VERDICT r13 ask #2):
-one fresh subprocess per sample, q1 warm-up (JVM/footers/Arrow), then
-the query's FIRST noop-sink invocation timed — the bench's protocol —
-plus the bench's fixed Spark calibration job so a degraded-box sample
-is recognizable. ROUND-ROBIN over the query list (not per-query
-batches) so a box drift mid-session hits all queries equally.
+"""First-invocation pin for a set of queries: one fresh subprocess per
+sample, q1 warm-up (JVM/footers/Arrow), then the query's FIRST
+noop-sink invocation timed — the bench's protocol — plus the bench's
+fixed Spark calibration job so a degraded-box sample is recognizable.
+ROUND-ROBIN over the query list (not per-query batches) so a box drift
+mid-session hits all queries equally.
 
-Usage: python scripts/pin_query.py <sf_dir> <rounds> <query> [query ...]
+Usage: python scripts/pin_query.py [--cpus N] <sf_dir> <rounds> <query> [query ...]
+(``--cpus`` defaults to this machine's core count).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
+import os
 import subprocess
 import sys
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+name, sf, root, cpus = sys.argv[1:5]
+sys.path.insert(0, root)
 from overturelink_data_pipeline_spark.session import get_spark
 from overturelink_data_pipeline_spark import registry
 registry.load_all()
-spark = get_spark(app_name="pin-child", cpus="32")
-name, sf = sys.argv[1], sys.argv[2]
+spark = get_spark(app_name="pin-child", cpus=cpus)
 
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
@@ -40,14 +45,18 @@ print("CHILD_RESULT " + json.dumps({"first_s": first, "calib_s": calib}))
 
 
 def main() -> None:
-    sf = sys.argv[1]
-    rounds = int(sys.argv[2])
-    names = sys.argv[3:]
+    ap = argparse.ArgumentParser(description="First-invocation pin for queries.")
+    ap.add_argument("sf_dir")
+    ap.add_argument("rounds", type=int)
+    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--cpus", default=str(os.cpu_count()))
+    args = ap.parse_args()
+    names = args.queries
     results: dict[str, list] = {n: [] for n in names}
-    for r in range(rounds):
+    for r in range(args.rounds):
         for name in names:
             out = subprocess.run(
-                [sys.executable, "-c", _CHILD, name, sf],
+                [sys.executable, "-c", _CHILD, name, args.sf_dir, REPO_ROOT, args.cpus],
                 capture_output=True,
                 text=True,
                 timeout=900,

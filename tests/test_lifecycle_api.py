@@ -473,6 +473,7 @@ def test_release_stamp_idempotence(spark):
     → skip; changed corpus → different fingerprint; stamp absent until
     written; and a rebuild-after-change is what the caller does."""
     from overturelink_data_pipeline_spark.operators.lifecycle import (
+        _stamp_file,
         corpus_fingerprint,
         release_stamp,
         write_release_stamp,
@@ -497,4 +498,85 @@ def test_release_stamp_idempotence(spark):
         write_release_stamp(spark, name, fp_b)  # re-stamp after change
         assert release_stamp(spark, name) == fp_b
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_meta")
+        path, fs = _stamp_file(spark, name)
+        fs.delete(path, False)
+
+
+# ---------------------------------------------------------------------------
+# Bucket count: derived from the build input's bytes, then a property of
+# the stored tables.
+# ---------------------------------------------------------------------------
+
+_ADVISORY = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+
+#: per class: input schema, release/crawl/probe rows, bucketed tables
+_BUCKET_CASES = {
+    PostingIndex: (
+        "doc_id long, text string", RELEASE, CRAWL_B, CRAWL_C,
+        ("_post", "_ns", "_hcount"),
+    ),
+    BandIndex: (
+        "doc_id long, text string", RELEASE, CRAWL_B, CRAWL_C,
+        ("_bands", "_sh", "_bcount"),
+    ),
+    SemanticRelease: (
+        "vec_id long, v array<double>",
+        lambda: [(i, [float(i), 1.0, 0.0]) for i in range(12)],
+        lambda: [(1_000_001, [1.0, 2.0, 3.0])],
+        lambda: [(2_000_002, [2.0, 1.001, 0.0]), (2_000_099, [-7.0, 1.0, 1.0])],
+        ("_assigned",),
+    ),
+}
+
+
+def _num_buckets(spark, table: str) -> int:
+    """The table's bucket count, straight from the session catalog."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    return state.catalog().getTableMetadata(ident).bucketSpec().get().numBuckets()
+
+
+@pytest.mark.parametrize("cls", list(_BUCKET_CASES))
+def test_bucket_count_derived_at_build_and_kept(spark, cls):
+    """build() stores max(1, ceil(input bytes / advisory partition
+    size)) buckets on every bucketed table; append (of a crawl that
+    would derive a different count), compact() and repair() keep the
+    stored count, and probe results do not depend on it."""
+    import pandas as pd
+
+    schema, release, crawl, probe, tables = _BUCKET_CASES[cls]
+    kw = {"k": 3} if cls is SemanticRelease else {}
+    one = cls(spark, temp_name("nb_one"), **kw)
+    three = cls(spark, temp_name("nb_three"), **kw)
+
+    def counts(idx):
+        return {_num_buckets(spark, getattr(idx, t)) for t in tables}
+
+    try:
+        # a list-built frame is RDD-backed: Catalyst cannot size it
+        one.build(spark.createDataFrame(release(), schema))
+        assert counts(one) == {1} and one.buckets == 1
+        # a pandas-built frame is a sized local relation: an advisory
+        # size just over a third of it derives three buckets
+        cols = [c.split()[0] for c in schema.split(", ")]
+        sized = spark.createDataFrame(pd.DataFrame(release(), columns=cols), schema)
+        nbytes = sized._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        spark.conf.set(_ADVISORY, str(nbytes // 3 + 1))
+        try:
+            three.build(sized)
+        finally:
+            spark.conf.unset(_ADVISORY)
+        assert counts(three) == {3} and three.buckets == 3
+        for idx in (one, three):
+            idx.append(spark.createDataFrame(crawl(), schema))
+        assert counts(one) == {1} and counts(three) == {3}
+        if cls is not SemanticRelease:
+            three.compact()
+            three.repair()
+            assert counts(three) == {3}
+        crawl_c = spark.createDataFrame(probe(), schema)
+        got = [{tuple(r) for r in idx.probe(crawl_c).collect()} for idx in (one, three)]
+        assert got[0] == got[1]
+    finally:
+        one.drop()
+        three.drop()

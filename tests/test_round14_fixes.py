@@ -102,6 +102,8 @@ def test_lifecycle_probe_survives_foreign_live_index(spark, sf_dir):
 
 
 def test_reaper_spares_live_pids(spark):
+    """A dead pid's table directory AND its release-stamp sidecar file
+    are reaped; a live pid's index is not."""
     from overturelink_data_pipeline_spark.operators import lifecycle
 
     root = _warehouse_root(spark)
@@ -110,14 +112,20 @@ def test_reaper_spares_live_pids(spark):
     os.makedirs(live, exist_ok=True)
     dead = os.path.join(root, f"{base}_p99999998_post")
     os.makedirs(dead, exist_ok=True)
+    dead_stamp = os.path.join(root, f"{base}_p99999998_stamp")
+    with open(dead_stamp, "w") as f:
+        f.write("v1:0:0")
     try:
         lifecycle._REAPED.discard(base)
         lifecycle.reap_dead_process_indexes(spark, base)
         assert os.path.exists(live)
         assert not os.path.exists(dead)
+        assert not os.path.exists(dead_stamp)
     finally:
         shutil.rmtree(live, ignore_errors=True)
         shutil.rmtree(dead, ignore_errors=True)
+        if os.path.exists(dead_stamp):
+            os.remove(dead_stamp)
 
 
 def test_lifecycle_warm_path_still_skips_rebuild(spark, sf_dir):
