@@ -246,6 +246,10 @@ def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
         if not m or m.group("base") != base.lower():
             continue
         pid = int(m.group("pid"))
+        # Caveat: a recycled pid makes a dead predecessor's leftovers
+        # look like this process's own, so they are kept (and reused);
+        # the fix, an owner marker with the process start time, is
+        # ROADMAP item 8.
         if pid == me:
             continue
         try:

@@ -16,7 +16,9 @@ Single place that encodes the engine's execution-model choices:
 - nested-schema pruning + nested pushdown explicitly on: the Overture
   data model filters/projects struct fields (``bbox.xmin``,
   ``names.primary``) and those must reach the parquet row-group stats
-  (reference relies on the same pushdown, source.py:496-507).
+  (reference relies on the same pushdown, source.py:496-507);
+- Python workers fork from the engine's daemon entry (``pyworker.py``)
+  and import this checkout whatever the cwd (docs/OPERATIONS.md §12).
 """
 
 from __future__ import annotations
@@ -91,6 +93,9 @@ def s3a_conf(base_url: str = DEFAULT_OVERTURE_BASE_URL) -> dict[str, str]:
     }
 
 
+#: Directory holding the package: workers import the engine from here.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _OPEN_COST_DEFAULT = 4 * 1024 * 1024
 _OPEN_COST_SMALL = 128 * 1024
 
@@ -148,13 +153,24 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # Python workers fork from the engine's daemon entry, which keeps
+        # each task from re-reading pyspark.zip (see pyworker.py)
+        .config(
+            "spark.python.daemon.module", "overturelink_data_pipeline_spark.pyworker"
+        )
     )
     if s3 or os.environ.get("SPARK_GRAFT_S3") == "1":
         for k, v in s3a_conf(
             os.environ.get("OVERTURE_BASE_URL", DEFAULT_OVERTURE_BASE_URL)
         ).items():
             builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # workers import this checkout (the daemon entry, the UDF modules)
+    # whatever the cwd; a caller's entries follow it
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -12,8 +12,11 @@ read (source.py:1464-1481). Getting this wrong silently truncates
 results for any query whose filter differs from the cached one.
 
 Scale notes: the cache write is a plain distributed parquet write
-(zstd); the sidecar's count/bbox come from ONE aggregate job over the
-per-row bbox struct — never a driver-side collect of the data.
+(zstd). The sidecar's count/bbox come from re-reading the written file
+(a schema-inference job) and aggregating the per-row bbox struct, or
+``st_bbox`` of the geometry when the struct was projected away — never
+a driver-side collect of the data. ROADMAP item 4 computes them inside
+the write instead.
 """
 
 from __future__ import annotations

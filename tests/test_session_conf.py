@@ -4,6 +4,8 @@ no network, no bucket access (the container is offline)."""
 
 from __future__ import annotations
 
+import os
+
 from overturelink_data_pipeline_spark.session import (
     DEFAULT_OVERTURE_BASE_URL,
     region_from_url,
@@ -112,3 +114,117 @@ def test_region_from_url_multitoken_partitions():
     assert region_from_url("s3://mirror-us-gov-west-1/x") == "us-gov-west-1"
     assert region_from_url("s3://mirror-us-iso-east-1/x") == "us-iso-east-1"
     assert region_from_url("s3://data-us-west-2/x") == "us-west-2"
+
+
+def _worker_report(spark):
+    """(file of the worker's importlib.invalidate_caches, file the worker
+    imports the package from), read inside a Python UDF."""
+    from pyspark.sql import functions as F
+
+    @F.udf("array<string>")
+    def report(_):
+        import importlib
+
+        import overturelink_data_pipeline_spark as pkg
+
+        return [importlib.invalidate_caches.__code__.co_filename, pkg.__file__]
+
+    return spark.range(1).select(report("id").alias("r")).first().r
+
+
+def test_python_workers_run_the_engine_daemon(spark):
+    """Workers fork from pyworker.py: their invalidate_caches is the
+    engine's, and they import the same package file as the driver."""
+    import importlib.util
+
+    import overturelink_data_pipeline_spark as pkg
+
+    invalidate_file, pkg_file = _worker_report(spark)
+    entry = importlib.util.find_spec("overturelink_data_pipeline_spark.pyworker")
+    assert os.path.samefile(invalidate_file, entry.origin)
+    assert os.path.samefile(pkg_file, pkg.__file__)
+
+
+def test_added_py_file_importable_after_workers_started(spark, tmp_path):
+    """A zip shipped with addPyFile once workers are running is a new
+    path entry the daemon does not exempt: a later UDF imports it."""
+    import uuid
+    import zipfile
+
+    from pyspark.sql import functions as F
+
+    _worker_report(spark)  # workers are up before the zip exists
+    mod = f"late_{uuid.uuid4().hex}"
+    archive = tmp_path / f"{mod}.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{mod}.py", "VALUE = 'shipped late'\n")
+    spark.sparkContext.addPyFile(str(archive))
+
+    @F.udf("string")
+    def late(_):
+        import importlib
+
+        return importlib.import_module(mod).VALUE
+
+    assert spark.range(1).select(late("id").alias("v")).first().v == "shipped late"
+
+
+def test_worker_rereads_a_rewritten_zip_on_invalidation(spark, tmp_path):
+    """Only the archives on the daemon's sys.path are exempt: a zip a
+    worker imported from, rewritten in place, is re-read when
+    importlib.invalidate_caches runs."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    archive = str(tmp_path / "rewritten.zip")
+    tag = f"rewritten_{uuid.uuid4().hex}"
+
+    @F.udf("string")
+    def reread(_):
+        import importlib
+        import sys
+        import zipfile
+
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr(f"{tag}_a.py", "")
+        sys.path.insert(0, archive)
+        try:
+            importlib.import_module(f"{tag}_a")
+            with zipfile.ZipFile(archive, "w") as z:
+                z.writestr(f"{tag}_b.py", "VALUE = 'reread'\n")
+            importlib.invalidate_caches()
+            return importlib.import_module(f"{tag}_b").VALUE
+        finally:
+            sys.path.remove(archive)
+
+    assert spark.range(1).select(reread("id").alias("v")).first().v == "reread"
+
+
+def test_engine_udf_runs_from_foreign_cwd_without_pythonpath(tmp_path):
+    """A session started outside the checkout, with no PYTHONPATH, runs
+    an engine pandas UDF: get_spark points the workers at the package."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys; sys.path.insert(0, sys.argv[1])\n"
+        "from overturelink_data_pipeline_spark.session import get_spark\n"
+        "from overturelink_data_pipeline_spark.geo import wkb as W\n"
+        "from overturelink_data_pipeline_spark.geo.functions import st_bbox\n"
+        "spark = get_spark(app_name='foreign-cwd', cpus=1)\n"
+        "df = spark.createDataFrame([(W.dumps(('Point', (1.0, 2.0))),)], 'g binary')\n"
+        "print('XMIN', df.select(st_bbox('g').xmin.alias('x')).first().x)\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script, repo],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert "XMIN 1.0" in out.stdout, out.stderr[-3000:]
