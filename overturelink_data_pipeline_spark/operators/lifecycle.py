@@ -215,19 +215,21 @@ def process_index_name(base: str) -> str:
     return f"{base}_p{os.getpid()}"
 
 
-_PID_INDEX_DIR = re.compile(r"^(?P<base>.+)_p(?P<pid>\d+)_[a-z_]+$")
+#: ``{base}_p{pid}_{kind}``, or the ``.{name}.crc`` checksum that Hadoop's
+#: local filesystem writes next to a stamp file
+_PID_INDEX_DIR = re.compile(r"^\.?(?P<base>.+)_p(?P<pid>\d+)_[a-z_]+(?:\.crc)?$")
 _REAPED: set[str] = set()
 
 
 def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
     """Best-effort GC for ``{base}_p{pid}_*`` warehouse entries (table
-    directories and the ``_stamp`` sidecar file) left by DEAD processes
-    (once per process per base — driver-side listdir, zero Spark jobs).
-    An entry is deleted only when its embedded pid
-    provably no longer exists (``os.kill(pid, 0)`` → ESRCH); a live or
-    unverifiable pid is left alone, so a concurrently running process's
-    index is never touched — the deletion race this namespace exists to
-    prevent. Remote warehouses are skipped: deployments own their GC."""
+    directories, the ``_stamp`` sidecar file and its ``.crc`` checksum)
+    left by DEAD processes (once per process per base — driver-side
+    listdir, zero Spark jobs). An entry is deleted only when its
+    embedded pid provably no longer exists (``os.kill(pid, 0)`` →
+    ESRCH); a live or unverifiable pid is left alone, so a concurrently
+    running process's index is never touched — the deletion race this
+    namespace exists to prevent. Remote warehouses are skipped: deployments own their GC."""
     if base in _REAPED:
         return
     _REAPED.add(base)

@@ -2,12 +2,10 @@
 
 Distributed zstd parquet write of the WKB-geometry frame, plus a JSON
 sidecar carrying the geo column metadata (geometry column name,
-encoding, CRS, bbox, feature count). The count and bbox come from
-re-reading what was written: the write, the re-read's schema-inference
-job, then one aggregate, 4 jobs per call in a traced country export
-(ROADMAP item 4 computes them inside the write instead). The sidecar
-mirrors what the GeoParquet spec stores in the parquet footer "geo"
-key — Spark's writer can't inject custom footer metadata without a
+encoding, CRS, bbox, feature count). The count and bbox are observed
+inside the write's own job (sinks/observed.py). The sidecar mirrors
+what the GeoParquet spec stores in the parquet footer "geo" key —
+Spark's writer can't inject custom footer metadata without a
 JVM extension, and the sidecar keeps the engine dependency-free while
 remaining machine-readable.
 
@@ -28,54 +26,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from overturelink_data_pipeline_spark.geo.functions import st_bbox
+from overturelink_data_pipeline_spark.sinks.observed import observed_write
 
 
-def write_geoparquet(
-    df: DataFrame,
-    path: str,
-    *,
-    geometry_col: str = "geometry",
-    partition_by: list[str] | None = None,
-    mode: str = "overwrite",
-) -> dict:
-    """Distributed write + geo sidecar; returns the sidecar dict.
+def write_geoparquet(df: DataFrame, path: str) -> dict:
+    """Distributed overwrite + geo sidecar; returns the sidecar dict.
 
-    The sidecar's count and bbox describe what landed on disk: the
-    written path is re-read (a schema-inference job) and aggregated
-    (``st_bbox`` over the geometry when present), after the write's
-    own jobs."""
-    writer = df.write.mode(mode).option("compression", "zstd")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-    written = df.sparkSession.read.parquet(path)
-    if geometry_col in written.columns:
-        b = written.select(st_bbox(F.col(geometry_col)).alias("b")).select(
-            F.min("b.xmin").alias("xmin"),
-            F.min("b.ymin").alias("ymin"),
-            F.max("b.xmax").alias("xmax"),
-            F.max("b.ymax").alias("ymax"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        row = b.collect()[0]
-        # rows may exist with every geometry NULL — the min/max then
-        # aggregate to None and a [null]*4 bbox is invalid sidecar
-        # metadata (same guard as sources/cache.py)
-        bbox = (
-            [row["xmin"], row["ymin"], row["xmax"], row["ymax"]]
-            if row["n"] and row["xmin"] is not None
-            else None
-        )
-        count = int(row["n"])
-    else:
-        bbox, count = None, written.count()
-
+    The sidecar's count and bbox (``st_bbox`` over ``geometry`` when the
+    frame has one) are observed while the rows are written."""
+    count, bbox = observed_write(
+        df,
+        lambda d: d.write.mode("overwrite").option("compression", "zstd").parquet(path),
+        st_bbox(F.col("geometry")) if "geometry" in df.columns else None,
+    )
     meta = {
         "version": "1.0.0",
-        "primary_column": geometry_col,
+        "primary_column": "geometry",
         "columns": {
-            geometry_col: {
+            "geometry": {
                 "encoding": "WKB",
                 "crs": "EPSG:4326",
                 "bbox": bbox,

@@ -12,11 +12,10 @@ read (source.py:1464-1481). Getting this wrong silently truncates
 results for any query whose filter differs from the cached one.
 
 Scale notes: the cache write is a plain distributed parquet write
-(zstd). The sidecar's count/bbox come from re-reading the written file
-(a schema-inference job) and aggregating the per-row bbox struct, or
-``st_bbox`` of the geometry when the struct was projected away — never
-a driver-side collect of the data. ROADMAP item 4 computes them inside
-the write instead.
+(zstd). The sidecar's count/bbox are observed inside that write
+(sinks/observed.py) over the per-row bbox struct, or ``st_bbox`` of the
+geometry when the struct was projected away — never a driver-side
+collect of the data.
 """
 
 from __future__ import annotations
@@ -34,6 +33,7 @@ from overturelink_data_pipeline_spark.plans.overture import (
     SECTOR_NAMES,
     expected_columns,
 )
+from overturelink_data_pipeline_spark.sinks.observed import observed_write
 
 
 @dataclass
@@ -91,62 +91,36 @@ def write_cache(
     theme: str,
     type_: str,
     release: str,
-    partitions: int | None = 1,
 ) -> CacheMetadata:
     """S5 — zstd parquet + metadata sidecar. ``df`` must be the
-    UNFILTERED clipped country frame (complete-data semantics).
-
-    ``partitions=1`` mirrors the reference's one-file-per-country
-    layout (country caches are bounded by construction); pass None to
-    keep the plan's partitioning for unusually large extracts."""
-    if partitions is not None:
-        # repartition, NOT coalesce: coalesce(1) would collapse the whole
-        # upstream clip pipeline (bbox filter + spatial-intersect UDF)
-        # into a single task; the round-robin shuffle keeps the expensive
-        # upstream parallel and only funnels the bounded country output
-        df = df.repartition(partitions)
-    df.write.mode("overwrite").option("compression", "zstd").parquet(parquet_path)
-    # count + bbox in one aggregate over the written data (re-read so
-    # the numbers describe exactly what landed on disk)
-    spark = df.sparkSession
-    written = spark.read.parquet(parquet_path)
-    agg_cols = [F.count(F.lit(1)).alias("n")]
-    has_bbox = "bbox" in written.columns
-    if has_bbox:
-        agg_cols += [
-            F.min("bbox.xmin").alias("xmin"),
-            F.min("bbox.ymin").alias("ymin"),
-            F.max("bbox.xmax").alias("xmax"),
-            F.max("bbox.ymax").alias("ymax"),
-        ]
-    if not has_bbox and "geometry" in written.columns:
-        # projected frames drop the bbox struct — recompute the
-        # envelope from geometry (one UDF pass inside the same agg job)
+    UNFILTERED clipped country frame (complete-data semantics). One
+    file per country, as in the reference layout (country caches are
+    bounded by construction); the sidecar's count and bbox are observed
+    while it is written."""
+    if "bbox" in df.columns:
+        envelope = F.col("bbox")
+    elif "geometry" in df.columns:
         from overturelink_data_pipeline_spark.geo.functions import st_bbox
 
-        written = written.withColumn("_env", st_bbox(F.col("geometry")))
-        agg_cols += [
-            F.min("_env.xmin").alias("xmin"),
-            F.min("_env.ymin").alias("ymin"),
-            F.max("_env.xmax").alias("xmax"),
-            F.max("_env.ymax").alias("ymax"),
-        ]
-        has_bbox = True
-    row = written.agg(*agg_cols).collect()[0]
+        envelope = st_bbox(F.col("geometry"))
+    else:
+        envelope = None
+    # repartition, NOT coalesce: coalesce(1) would collapse the whole
+    # upstream clip pipeline (bbox filter + spatial-intersect UDF)
+    # into a single task; the round-robin shuffle keeps the expensive
+    # upstream parallel and only funnels the bounded country output
+    count, bbox = observed_write(
+        df.repartition(1),
+        lambda d: d.write.mode("overwrite").option("compression", "zstd").parquet(parquet_path),
+        envelope,
+    )
     meta = CacheMetadata(
         country=country,
         theme=theme,
         type=type_,
         release=release,
-        feature_count=int(row["n"]),
-        bbox=(
-            [float(row["xmin"]), float(row["ymin"]), float(row["xmax"]), float(row["ymax"])]
-            # all-null geometries aggregate to null extents even with
-            # rows present — float(None) would crash AFTER the parquet
-            # landed, stranding data without its sidecar
-            if has_bbox and row["n"] > 0 and row["xmin"] is not None
-            else None
-        ),
+        feature_count=count,
+        bbox=bbox,
         cached_at=datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
     )
     with open(_meta_path(parquet_path), "w") as f:

@@ -6,11 +6,12 @@ sidecar, and cleanup on partial failure) so later country extracts
 scan locally. Spark shape: per-type ``read.parquet(src) →
 write.parquet(dst)`` — a fully distributed copy that also re-compacts
 small source files — plus the same sidecar/validation/cleanup
-semantics.
+semantics. Each type's row count in the sidecar is observed inside its
+copy's own write (sinks/observed.py).
 
 Scale: the copy parallelizes per input split (not per file), so a
 50 GB theme (reference's transportation estimate, source.py:1135)
-moves at cluster aggregate bandwidth; ``maxRecordsPerFile`` bounds
+moves at cluster aggregate bandwidth; ``MAX_RECORDS_PER_FILE`` bounds
 output file sizes the way the reference's ROW_GROUP_SIZE bounds row
 groups.
 """
@@ -29,6 +30,9 @@ from overturelink_data_pipeline_spark.plans.overture import (
     expected_source_columns,
     theme_path,
 )
+from overturelink_data_pipeline_spark.sinks.observed import observed_write
+
+MAX_RECORDS_PER_FILE = 100_000
 
 
 def dump_sidecar_path(dump_base: str, theme: str) -> str:
@@ -59,12 +63,12 @@ def ensure_dump(
     theme: str,
     types: list[str] | None = None,
     release: str = "",
-    max_records_per_file: int = 100_000,
 ) -> dict:
     """Mirror one theme into the dump layout; idempotent (a valid
     sidecar short-circuits, reference source.py:1102-1115); partial
     failures clean up the incomplete theme directory (source.py:1222-
-    1233). Returns the sidecar dict."""
+    1233). Returns the sidecar dict, whose per-type row counts are
+    observed while each type is written."""
     side = dump_sidecar_path(dump_base, theme)
     if dump_is_valid(dump_base, theme, release):
         with open(side) as f:
@@ -102,13 +106,15 @@ def ensure_dump(
         rows_per_type: dict[str, int] = {}
         for type_ in types:
             dst = theme_path(dump_base, theme, type_)
-            (
-                frames[type_].write.mode("overwrite")
-                .option("compression", "zstd")
-                .option("maxRecordsPerFile", str(max_records_per_file))
-                .parquet(dst)
+            rows_per_type[type_], _ = observed_write(
+                frames[type_],
+                lambda d: (
+                    d.write.mode("overwrite")
+                    .option("compression", "zstd")
+                    .option("maxRecordsPerFile", str(MAX_RECORDS_PER_FILE))
+                    .parquet(dst)
+                ),
             )
-            rows_per_type[type_] = spark.read.parquet(dst).count()
         meta = {
             "theme": theme,
             "types": types,

@@ -5,11 +5,13 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from overturelink_data_pipeline_spark.geo import fixtures as FX
+from overturelink_data_pipeline_spark.geo.functions import st_bbox
 from overturelink_data_pipeline_spark.operators.pipeline import (
     _fixture_country,
     fixture_base_dir,
@@ -21,6 +23,7 @@ from overturelink_data_pipeline_spark.plans.overture import (
     discover_types,
     expected_columns,
     parse_projection,
+    theme_path,
 )
 from overturelink_data_pipeline_spark.sinks.geojson import (
     write_geojson,
@@ -37,6 +40,7 @@ from overturelink_data_pipeline_spark.sinks.publish import (
     publish,
 )
 from overturelink_data_pipeline_spark.sources import cache as cache_mod
+from overturelink_data_pipeline_spark.sources import dump as dump_mod
 from overturelink_data_pipeline_spark.sources.fallback import (
     OvertureReader,
     resolve_release,
@@ -51,6 +55,28 @@ def base_dir(spark):
 @pytest.fixture()
 def reader(spark, base_dir):
     return OvertureReader(spark, base_dir=base_dir, release="r1", backoff_base_s=0.0)
+
+
+def _reread_extent(spark, path, envelope):
+    """(count, [xmin, ymin, xmax, ymax]) of a written parquet path,
+    aggregated over a fresh read of it — independent of the writer."""
+    env = spark.read.parquet(path).select(envelope.alias("e"))
+    row = env.agg(
+        F.count(F.lit(1)), F.min("e.xmin"), F.min("e.ymin"), F.max("e.xmax"), F.max("e.ymax")
+    ).first()
+    return row[0], list(row[1:])
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs run by ``action()``."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # -- plans -------------------------------------------------------------------
@@ -173,6 +199,11 @@ def test_cache_roundtrip_and_refilter(spark, base_dir, reader, tmp_path):
     c = _fixture_country(0)
     meta = reader.cache_country(q, c)
     assert meta.feature_count > 0 and meta.bbox is not None
+    # the cached projection has no bbox struct: the extent is st_bbox's
+    path = cache_mod.cache_path(str(tmp_path), "r1", c.iso2, "places", "place")
+    assert (meta.feature_count, meta.bbox) == _reread_extent(
+        spark, path, st_bbox(F.col("geometry"))
+    )
     # cache read applies filter + limit on the COMPLETE cached data
     out = reader.read(q, c)["edu"]
     assert 0 < out.count() < meta.feature_count
@@ -183,6 +214,14 @@ def test_cache_roundtrip_and_refilter(spark, base_dir, reader, tmp_path):
     assert stats["files"] == 1 and stats["features"] == meta.feature_count
     assert cache_mod.clear_cache(str(tmp_path)) == 1
     assert cache_mod.cache_stats(str(tmp_path))["files"] == 0
+    # a frame that keeps the bbox struct: the extent is the struct's
+    with_bbox = FX.fixture_df(spark, "places_place").select("id", "bbox", "geometry")
+    path = str(tmp_path / "with_bbox.parquet")
+    meta = cache_mod.write_cache(
+        with_bbox, path, country="XX", theme="places", type_="place", release="r1"
+    )
+    assert meta.bbox is not None
+    assert (meta.feature_count, meta.bbox) == _reread_extent(spark, path, F.col("bbox"))
 
 
 def test_cache_schema_drift_returns_none(spark, tmp_path):
@@ -277,10 +316,38 @@ def test_geoparquet_sidecar(spark, tmp_path):
     meta = write_geoparquet(df, path)
     assert meta["columns"]["geometry"]["encoding"] == "WKB"
     assert meta["feature_count"] == df.count()
-    xmin, ymin, xmax, ymax = meta["columns"]["geometry"]["bbox"]
+    bbox = meta["columns"]["geometry"]["bbox"]
+    assert (meta["feature_count"], bbox) == _reread_extent(
+        spark, path, st_bbox(F.col("geometry"))
+    )
+    xmin, ymin, xmax, ymax = bbox
     assert xmin < xmax and ymin < ymax
     assert os.path.exists(os.path.join(path, "_geo_metadata.json"))
-    assert spark.read.parquet(path).count() == meta["feature_count"]
+
+
+@pytest.mark.parametrize("sink", ["write_geoparquet", "write_cache", "ensure_dump"])
+def test_sidecar_costs_no_job_beyond_the_write(spark, base_dir, tmp_path, sink):
+    """A sidecar's count and extent are taken inside the write: the call
+    runs no more Spark jobs than a plain parquet write of the frame it
+    hands to the writer. Both sides read the source inside the count."""
+    src = theme_path(base_dir, "places", "place")
+    plain_out = str(tmp_path / "plain")
+    if sink == "write_geoparquet":
+        call = lambda: write_geoparquet(spark.read.parquet(src), str(tmp_path / "gp"))
+        plain = lambda: spark.read.parquet(src).write.parquet(plain_out)
+    elif sink == "write_cache":
+        call = lambda: cache_mod.write_cache(
+            spark.read.parquet(src), str(tmp_path / "AA_places.parquet"),
+            country="AA", theme="places", type_="place", release="r1",
+        )
+        # the cache's one-file layout repartitions to a single partition
+        plain = lambda: spark.read.parquet(src).repartition(1).write.parquet(plain_out)
+    else:
+        call = lambda: dump_mod.ensure_dump(
+            spark, base_dir, str(tmp_path / "dump"), "places", ["place"], release="r1"
+        )
+        plain = lambda: spark.read.parquet(src).write.parquet(plain_out)
+    assert _jobs(spark, call) <= _jobs(spark, plain)
 
 
 def test_gpkg_roundtrip(spark, tmp_path):
@@ -810,8 +877,6 @@ def test_dump_tier_requires_all_scanned_themes_valid(
     and a divisions clip reads the divisions theme — Tier 2 previously
     validated only query.theme, silently serving a stale mirror of the
     others. Every scanned theme must now pass the sidecar check."""
-    from overturelink_data_pipeline_spark.sources import dump as dump_mod
-
     dd = str(tmp_path / "dump")
     dump_mod.ensure_dump(spark, base_dir, dd, "places", release="r1")
     # stale buildings mirror: data present, sidecar from another release

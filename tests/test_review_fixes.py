@@ -168,27 +168,38 @@ def test_reader_rejects_stale_release_dump(spark, tmp_path):
     assert reader2._dump_valid("places")
 
 
-def test_write_cache_all_null_geometry(spark, tmp_path):
-    """Null-geometry frames must still land a sidecar (bbox=None), not
-    crash on float(None) after the parquet write."""
+@pytest.mark.parametrize("rows", [[(1, None), (2, None)], []], ids=["all_null", "empty"])
+@pytest.mark.parametrize("sink", ["write_cache", "write_geoparquet"])
+def test_write_cache_all_null_geometry(spark, tmp_path, sink, rows):
+    """All-null-geometry and empty frames must still land a sidecar
+    with the right count and bbox=None, not crash on float(None) or
+    store a [null]*4 bbox after the parquet write."""
     from pyspark.sql import types as T
 
+    from overturelink_data_pipeline_spark.sinks.geoparquet import write_geoparquet
     from overturelink_data_pipeline_spark.sources.cache import write_cache
 
     df = spark.createDataFrame(
-        [(1, None), (2, None)],
+        rows,
         T.StructType([
             T.StructField("id", T.LongType()),
             T.StructField("geometry", T.BinaryType()),
         ]),
     )
-    meta = write_cache(
-        df, str(tmp_path / "c.parquet"),
-        country="AA", theme="places", type_="place", release="r",
-    )
-    assert meta.feature_count == 2
-    assert meta.bbox is None
-    assert os.path.exists(str(tmp_path / "c.parquet.meta.json"))
+    if sink == "write_cache":
+        path = str(tmp_path / "c.parquet")
+        meta = write_cache(
+            df, path, country="AA", theme="places", type_="place", release="r",
+        )
+        count, bbox, side = meta.feature_count, meta.bbox, path + ".meta.json"
+    else:
+        path = str(tmp_path / "gp")
+        meta = write_geoparquet(df, path)
+        count, bbox = meta["feature_count"], meta["columns"]["geometry"]["bbox"]
+        side = os.path.join(path, "_geo_metadata.json")
+    assert count == len(rows)
+    assert bbox is None
+    assert os.path.exists(side)
 
 
 def test_morton_cell_widens_bits(spark):

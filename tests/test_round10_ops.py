@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from overturelink_data_pipeline_spark.operators.lifecycle import (
     PostingIndex,
     SemanticRelease,
+    _stamp_file,
     corpus_fingerprint,
     release_current,
     temp_name,
@@ -114,7 +115,8 @@ def test_release_current_matches_two_step_protocol(spark):
         stamp3, current3 = release_current(spark, name, changed, "doc_id", "text")
         assert not current3 and stamp3 != stamp
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_meta")
+        path, fs = _stamp_file(spark, name)
+        fs.delete(path, False)
 
 
 def test_fused_stamp_leg_format(spark):
