@@ -1212,34 +1212,17 @@ SHARD_MAX_ROWS = 16
 #: rows), never file granularity.
 SHARD_SALT_ROWS = 1024
 
-def shard_parent() -> str:
-    """Parent of all processes' shard leaves — resolved PER CALL (not
-    at import) so $SPARK_GRAFT_SCRATCH set after import is honored and
-    a fork()ed child doesn't inherit a path frozen from the parent's
-    environment (review r10)."""
-    return scratch.scratch_root("train_shards")
-
-#: Output dataset — per-user root + per-PROCESS leaf + dead-owner
-#: reaping (scratch.py has the full contract). History of this knob:
-#: a mkdtemp per invocation leaks a full corpus copy every run; the
-#: r3-r8 per-PID path with NO reaping leaked one copy per PROCESS
-#: (194 orphaned datasets, >1M inodes, degraded the r8 box); the r9
-#: single fixed path bounded the footprint but raced concurrent
-#: invocations on mode("overwrite") — the r9 judge reproduced
-#: TASK_WRITE_FAILED running the query alongside the test suite — and
-#: sat at a world-predictable /tmp path another user could squat
-#: (ADVICE r9). Now: repeated invocations in one process overwrite
-#: their own leaf (one copy per live process), concurrent processes
-#: never share a leaf, and sink_training_shards reaps dead siblings
-#: before each write, so sequential bench subprocesses leave ~one
-#: copy standing in steady state.
+#: Output dataset: a per-process leaf under the per-user scratch root
+#: (scratch.py has the contract). A mkdtemp per invocation would leak a
+#: corpus copy every run, and one fixed path would race concurrent
+#: invocations on mode("overwrite"). Repeated invocations in one process
+#: overwrite their own leaf, concurrent processes never share one, and
+#: naming the leaf removes the leaves of processes that are gone.
 def shard_out_dir() -> str:
-    """The caller's own shard-dataset leaf — per call rather than a
-    module constant so the pid is the CALLING process's (an import-then
-    -fork driver would otherwise hand every child the parent's leaf,
-    recreating exactly the concurrent mode("overwrite") race the
-    per-process leaf exists to kill) and the env override stays live
-    (review r10)."""
+    """The caller's own shard-dataset leaf, resolved per call rather
+    than as a module constant: a fork()ed child gets its own leaf, not
+    its parent's, and ``$SPARK_GRAFT_SCRATCH`` set after import is
+    honored."""
     return scratch.process_dir("train_shards", "docs")
 
 
@@ -1300,11 +1283,6 @@ def sink_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest committer instead — v2's semantics (no second copy of
     task output) are exactly what those committers generalize."""
     docs = ensure_parallelism(read_table(spark, sf_dir, "documents"))
-    # delete shard datasets left by DEAD processes (crashed runs, prior
-    # bench subprocesses) before writing our own per-process leaf —
-    # keeps the steady-state footprint at ~one dataset copy without
-    # racing a live concurrent invocation (scratch.py contract)
-    scratch.reap_dead_owners(shard_parent())
     out = shard_out_dir()
     salted = docs.withColumn(
         "salt", (F.col("doc_id") / SHARD_SALT_ROWS).cast("long")

@@ -646,22 +646,17 @@ def dedup_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         PostingIndex,
         fingerprint_leg,
         process_index_name,
-        reap_dead_process_indexes,
         release_stamp,
         write_release_stamp,
     )
 
     corpus = _prefix_corpus(spark, sf_dir)
     delta = F.col("doc_id") >= INCR_DELTA_MIN
-    # PER-PROCESS index namespace (VERDICT r13 ask #1): a fixed name on
-    # the shared metastore-less warehouse let one process's rebuild
-    # delete the part files another live process was scanning
-    # (FileNotFoundException under dlp_index_ns — the r13 driver pytest
-    # failure). dlp_index_p{pid} makes each process's release private;
-    # the warm stamp-skip path is unchanged within a process, and dead
-    # processes' leftovers are reaped once per session.
-    reap_dead_process_indexes(spark, "dlp_index")
-    idx = PostingIndex(spark, process_index_name("dlp_index"))
+    # a per-process index namespace: under one fixed name on the shared
+    # metastore-less warehouse, one process's rebuild would delete the
+    # part files another live process is scanning. Naming the index
+    # also removes the indexes of processes that are gone.
+    idx = PostingIndex(spark, process_index_name(spark, "dlp_index"))
     docs = read_table(spark, sf_dir, "documents")
     crawl = corpus.filter(delta & (F.col("doc_id") % 2 == 1))
     fp_cols = ("doc_id", "n_chars", "source")

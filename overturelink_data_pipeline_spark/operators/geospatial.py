@@ -378,7 +378,6 @@ def sink_gpkg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     roads = normalize_roads(FX.fixture_scan(spark, "transportation_segment")).select(
         "id", "name", "road_class", "geometry"
     )
-    scratch.reap_dead_owners(scratch.scratch_root("gpkg_audit"))
     path = scratch.process_dir("gpkg_audit", "export.gpkg")
     write_gpkg_layers({"places": places, "roads": roads}, path, prefix="ovt")
     add_gpkg_metadata(path, {"generator": "overturelink-data-pipeline-spark"})
@@ -452,7 +451,6 @@ def sink_fgdb_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", "name", "category_primary", "geometry")
         .withColumn(_FGDB_LONG_COL, F.col("category_primary"))
     )
-    scratch.reap_dead_owners(scratch.scratch_root("fgdb_audit"))
     path = scratch.process_dir("fgdb_audit", "export.gdb")
     if os.path.isdir(path):  # process_dir reuses per-pid scratch
         import shutil

@@ -43,11 +43,7 @@ lifted from per-country GeoParquet caches to dedup indexes.
 
 from __future__ import annotations
 
-import contextlib
 import math
-import os
-import re
-import shutil
 import uuid
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
@@ -55,6 +51,7 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from overturelink_data_pipeline_spark import scratch
 from overturelink_data_pipeline_spark.operators.dedup import (
     BAND_BUCKET_CAP,
     NGRAM_DF_CAP,
@@ -78,7 +75,6 @@ __all__ = [
     "fingerprint_leg",
     "shingle_table",
     "process_index_name",
-    "reap_dead_process_indexes",
 ]
 
 def _derived_buckets(df: DataFrame) -> int:
@@ -196,75 +192,29 @@ def _clean_orphan_location(spark: SparkSession, table: str) -> None:
         fs.delete(path, True)
 
 
-def process_index_name(base: str) -> str:
-    """Per-PROCESS index namespace: ``{base}_p{pid}``.
+def process_index_name(spark: SparkSession, base: str) -> str:
+    """Per-process index namespace: ``{base}_p<token>``, where the token
+    is :func:`scratch.owner_token` (pid plus process start time; letters,
+    digits and underscores only).
 
-    The default session catalog is per-process but the WAREHOUSE
-    directory is shared, so two processes using the same index name
-    race each other's table files: process B's ``_clean_orphan_location``
-    (whose catalog cannot see A's live table) deletes the directory
-    process A is scanning (a ``FileNotFoundException`` in A). Keying the
-    namespace by pid makes every
-    process's release private: warm-path stamp skips still work across
-    invocations WITHIN a process (same name, same catalog), and no
-    process can ever read — or delete — another's live index. A real
-    deployment with a shared metastore uses a stable name instead (the
-    catalog then serializes ownership); this is the correct shape for
-    the metastore-less local/default catalog only.
+    The default session catalog is per-process but the warehouse
+    directory is shared. Under one fixed name, a process whose catalog
+    cannot see another process's live table would delete its files
+    (``_clean_orphan_location``) while the owner scans them. With the
+    owner token in the name, every process's release is private: the
+    stamp-skip warm path still works across calls within a process, and
+    no process reads or deletes another live process's index. Naming
+    also removes the ``{base}_p<token>_*`` tables, stamps and ``.crc``
+    files of owners that are gone from a local warehouse (remote
+    warehouses are left to their deployment). A deployment with a
+    shared metastore uses a stable name instead.
     """
-    return f"{base}_p{os.getpid()}"
-
-
-#: ``{base}_p{pid}_{kind}``, or the ``.{name}.crc`` checksum that Hadoop's
-#: local filesystem writes next to a stamp file
-_PID_INDEX_DIR = re.compile(r"^\.?(?P<base>.+)_p(?P<pid>\d+)_[a-z_]+(?:\.crc)?$")
-_REAPED: set[str] = set()
-
-
-def reap_dead_process_indexes(spark: SparkSession, base: str) -> None:
-    """Best-effort GC for ``{base}_p{pid}_*`` warehouse entries (table
-    directories, the ``_stamp`` sidecar file and its ``.crc`` checksum)
-    left by DEAD processes (once per process per base — driver-side
-    listdir, zero Spark jobs). An entry is deleted only when its
-    embedded pid provably no longer exists (``os.kill(pid, 0)`` →
-    ESRCH); a live or unverifiable pid is left alone, so a concurrently
-    running process's index is never touched — the deletion race this
-    namespace exists to prevent. Remote warehouses are skipped: deployments own their GC."""
-    if base in _REAPED:
-        return
-    _REAPED.add(base)
     wh = spark.conf.get("spark.sql.warehouse.dir")
     parsed = urlparse(wh)
     if parsed.scheme not in ("file", ""):
-        return
+        return f"{base}_p{scratch.owner_token()}"
     root = unquote(parsed.path) if parsed.scheme else wh
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    me = os.getpid()
-    for d in entries:
-        m = _PID_INDEX_DIR.match(d)
-        if not m or m.group("base") != base.lower():
-            continue
-        pid = int(m.group("pid"))
-        # Caveat: a recycled pid makes a dead predecessor's leftovers
-        # look like this process's own, so they are kept (and reused);
-        # the fix, an owner marker with the process start time, is
-        # ROADMAP item 8.
-        if pid == me:
-            continue
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            path = os.path.join(root, d)
-            if os.path.isdir(path):
-                shutil.rmtree(path, ignore_errors=True)
-            else:
-                with contextlib.suppress(OSError):
-                    os.remove(path)
-        except Exception:
-            continue
+    return scratch.owned_name(root, f"{base}_p")
 
 
 def _stamp_file(spark: SparkSession, name: str):

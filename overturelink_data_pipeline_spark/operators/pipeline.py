@@ -57,13 +57,9 @@ def fixture_base_dir(spark: SparkSession) -> str:
     theme=/type= layout; reuse across queries (they are read-only)."""
     key = spark.sparkContext.applicationId
     if key not in _fixture_dirs:
-        # scratch-root contract, not mkdtemp (review r10): a fresh temp
-        # dir per process leaked one full fixture copy per bench/driver
-        # subprocess — the r8 orphaned-dataset incident class. Dead
-        # siblings are reaped; the per-process leaf is keyed by app id
-        # so sequential sessions in one process get fresh dirs that die
-        # with the process.
-        scratch.reap_dead_owners(scratch.scratch_root("overture_fixtures"))
+        # a per-process scratch leaf, not mkdtemp: a fresh temp dir per
+        # process would leak one fixture copy per process; keyed by app
+        # id so sequential sessions in one process get fresh dirs
         base = scratch.process_dir("overture_fixtures", key)
         os.makedirs(base, exist_ok=True)
         FX.write_fixtures(spark, base)
@@ -218,10 +214,8 @@ def pipeline_roads_geojsonseq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     roads = normalize_roads(layers[q.name])
     roads = add_metadata(roads, "BBB", "Borland", "transport", processed_date=_PROCESSED)
-    # per-process scratch leaf + dead-owner reap, like the other sink
-    # queries (review r10: a mkdtemp per invocation leaked one exported
-    # dataset per run — the r8 incident class)
-    scratch.reap_dead_owners(scratch.scratch_root("geojsonseq"))
+    # per-process scratch leaf, like the other sink queries (a mkdtemp
+    # per invocation would leak one exported dataset per run)
     out_dir = scratch.process_dir("geojsonseq", "roads")
     write_geojsonseq(roads, out_dir)
     feature_schema = T.StructType(

@@ -1,51 +1,35 @@
-"""Scoped scratch directories for file-writing sinks.
+"""Per-user scratch space and per-process owned paths.
 
-The registered sink queries (``sink_training_shards``,
-``sink_gpkg_audit``) materialize datasets under the system temp dir.
-Two hazards shaped this module's contract (VERDICT r9 ask #3 +
-ADVICE r9):
+Transient datasets (sink outputs, fixtures, streaming checkpoints) live
+under one per-user root: ``$SPARK_GRAFT_SCRATCH`` if set, else
+``<tmpdir>/overturelink-<user>``, so another user cannot squat the
+path. Inside it every process writes only below names that carry its
+OWNER TOKEN (:func:`owner_token`): its pid plus its start time in clock
+ticks since boot. Two live processes never share a name, repeated calls
+in one process get the same name (overwrite in place keeps one copy per
+process), and a later process that is handed a recycled pid still gets a
+different token.
 
-1. **Leak**: a fresh ``mkdtemp`` per invocation leaks a full dataset
-   copy every run; the fresh-subprocess bench protocol spawns hundreds
-   of processes, and 194 orphaned shard datasets (>1M inodes)
-   measurably degraded file-metadata performance on the r8 box.
-2. **Clash / squat**: one fixed world-readable path (the r9 fix for
-   the leak) makes concurrent invocations race on the same
-   ``mode("overwrite")`` directory (reproduced by the r9 judge:
-   ``TASK_WRITE_FAILED`` when the query ran alongside the test suite),
-   and on a multi-user host another user can pre-create the
-   predictable ``/tmp`` path.
-
-The resolution is a **per-user root + per-process leaf + dead-owner
-reaping**:
-
-- the root is ``$SPARK_GRAFT_SCRATCH`` if set, else
-  ``<tmpdir>/overturelink-<user>`` — user-scoped, so no cross-user
-  squatting on a shared host, and overridable into a user-owned
-  volume;
-- each dataset lives under a ``pid-<os.getpid()>`` leaf, so two live
-  invocations in different processes never write the same directory,
-  while repeated invocations in ONE process reuse their leaf via
-  ``mode("overwrite")`` (footprint: one copy per live process);
-- before writing, a sink calls :func:`reap_dead_owners` on its parent:
-  sibling ``pid-*`` leaves whose owning process is no longer alive are
-  deleted. Sequential bench subprocesses therefore each reap their
-  predecessor's dataset — the steady-state footprint is ~one copy —
-  and a LIVE concurrent invocation is never touched (``os.kill(pid,
-  0)`` liveness, never mtime heuristics).
-
-PID reuse can make a dead leaf look alive for one cycle; it is then
-reaped by a later invocation — staleness is bounded, never unsafe.
+This module is the one place that decides when an owned path is
+garbage. :func:`owned_name` removes, from the directory a new name goes
+into, every sibling entry whose owner is gone: its pid no longer exists,
+or now belongs to a process that started at another time. An owner that
+cannot be checked (no ``/proc``, or an unreadable ``/proc`` entry) is
+kept. Names without a start time (older code, or a platform without
+``/proc``) are judged by their pid alone. The path constructors
+(:func:`process_dir` here, ``lifecycle.process_index_name`` for the
+warehouse) reap as they name, so no caller can forget to.
 """
 
 from __future__ import annotations
 
-import errno
 import os
+import re
 import shutil
 import tempfile
 
 _ENV_ROOT = "SPARK_GRAFT_SCRATCH"
+_HAVE_PROC = os.path.exists("/proc/self/stat")
 
 
 def _username() -> str:
@@ -72,49 +56,74 @@ def scratch_root(*parts: str) -> str:
 
 def process_dir(*parts: str) -> str:
     """A per-process leaf under :func:`scratch_root`:
-    ``scratch_root(*parts[:-1]) / pid-<pid> / parts[-1]`` when ``parts``
-    is non-empty, else ``scratch_root() / pid-<pid>``. Stable within a
-    process (overwrite-in-place keeps the footprint at one copy), unique
-    across live processes (no concurrent-writer clash)."""
-    leaf = f"pid-{os.getpid()}"
-    if parts:
-        return os.path.join(scratch_root(*parts[:-1]), leaf, parts[-1])
-    return os.path.join(scratch_root(), leaf)
+    ``scratch_root(*parts[:-1]) / pid-<token> / parts[-1]`` when
+    ``parts`` is non-empty, else ``scratch_root() / pid-<token>``.
+    Stable within a process, unique across live processes; gone owners'
+    ``pid-*`` siblings are removed first."""
+    parent = scratch_root(*parts[:-1])
+    leaf = owned_name(parent, "pid-")
+    return os.path.join(parent, leaf, *parts[-1:])
 
 
-def reap_dead_owners(parent: str) -> int:
-    """Delete ``pid-*`` children of ``parent`` whose owning process is
-    dead; return the number reaped. Call before writing into your own
-    ``pid-`` leaf. Never deletes a leaf whose pid is alive (including
-    the caller's own), so concurrent live invocations are safe; a leaf
-    surviving one cycle through pid reuse is reaped later."""
-    reaped = 0
+def owner_token() -> str:
+    """This process's owner token, ``<pid>t<start ticks>``, or the bare
+    pid where ``/proc`` is missing. Letters and digits only, and the
+    same for the whole life of the process."""
+    pid = os.getpid()
     try:
-        children = os.listdir(parent)
-    except OSError:
-        return 0
-    me = os.getpid()
-    for name in children:
-        if not name.startswith("pid-"):
+        return f"{pid}t{_start_ticks(pid)}"
+    except (OSError, ValueError):
+        return str(pid)
+
+
+def owned_name(parent: str, prefix: str) -> str:
+    """``prefix + owner_token()``, after deleting the entries of
+    ``parent`` named ``[.]<prefix><token>[_<kind>][.crc]`` whose owner
+    is gone. Directories go with ``rmtree``, files with ``os.remove``;
+    only ``FileNotFoundError`` (a concurrent reaper got there first) is
+    ignored."""
+    entry = re.compile(
+        rf"\.?{re.escape(prefix)}(?P<pid>\d+)(?:t(?P<start>\d+))?(?:_[a-z_]+)?(?:\.crc)?",
+        re.IGNORECASE,
+    )
+    try:
+        names = os.listdir(parent)
+    except FileNotFoundError:
+        names = []
+    for name in names:
+        m = entry.fullmatch(name)
+        if not m or not _gone(int(m["pid"]), m["start"]):
             continue
+        path = os.path.join(parent, name)
         try:
-            pid = int(name[4:])
-        except ValueError:
-            continue
-        if pid == me or _alive(pid):
-            continue
-        shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-        reaped += 1
-    return reaped
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.remove(path)
+        except FileNotFoundError:
+            pass
+    return prefix + owner_token()
 
 
-def _alive(pid: int) -> bool:
-    if pid <= 0:
+def _start_ticks(pid: int) -> int:
+    """Start time of ``pid`` in clock ticks since boot: field 22 of
+    ``/proc/<pid>/stat``, counted after the parenthesised command name
+    (which may itself hold spaces and parentheses)."""
+    with open(f"/proc/{pid}/stat", "rb") as f:
+        stat = f.read()
+    return int(stat[stat.rindex(b")") + 2 :].split()[19])
+
+
+def _gone(pid: int, start: str | None) -> bool:
+    """Whether the owner ``(pid, start)`` has exited: no process has
+    ``pid``, or (when the name carries a start time) the process that
+    has it started at another time. Unverifiable owners are not gone."""
+    if not _HAVE_PROC:
         return False
     try:
-        os.kill(pid, 0)
-    except OSError as exc:
-        if exc.errno == errno.ESRCH:
-            return False
-        return True  # EPERM etc. — exists but not ours: treat as alive
-    return True
+        now = _start_ticks(pid)
+    except (FileNotFoundError, ProcessLookupError):
+        return True
+    except (OSError, ValueError):
+        return False
+    return start is not None and int(start) != now

@@ -223,13 +223,13 @@ def _shp_header(shape_type: int, file_len_words: int, bbox) -> bytes:
     )
 
 
-def write_shapefile(
-    df: DataFrame, path: str, stream: bool = False
-) -> int:
+def write_shapefile(df: DataFrame, path: str) -> int:
     """Write ``df`` (with a WKB ``geometry`` column) as a shapefile;
     ``path`` is the ``.shp`` path, siblings get the same stem. Returns
     the feature count. Null geometries write as Null Shape records
-    (type 0), matching GDAL."""
+    (type 0), matching GDAL. The frame is collected to the driver and
+    every record is held until the headers are written, so driver
+    memory grows with the frame."""
     stem, ext = os.path.splitext(path)
     if ext.lower() != ".shp":
         stem = path
@@ -248,8 +248,7 @@ def write_shapefile(
     shape_type: int | None = None
     ext_box = [None, None, None, None]
 
-    rows = df.toLocalIterator() if stream else df.collect()
-    for row in rows:
+    for row in df.collect():
         wkb_bytes = row[_GEOM_COL]
         geom = None if wkb_bytes is None else W.loads(bytes(wkb_bytes))
         if geom is None or G.is_empty(geom):

@@ -318,15 +318,11 @@ def run_to_completion(
         except Exception:
             pass
         shutil.rmtree(os.path.dirname(prev_ckpt), ignore_errors=True)
-    # checkpoints live under a per-user + per-process scratch leaf with
-    # dead-owner reaping (scratch.py): the one-behind cleanup above
-    # bounds WITHIN-process growth, but each process's LAST checkpoint
-    # used to leak — 302 ckpt_* mkdtemps (three of them 435 MB, from
-    # sf10 state sweeps) had accumulated by round 10, the same leak
-    # class as the r9 shard-dataset trap
+    # checkpoints live under a per-process scratch leaf (scratch.py):
+    # the one-behind cleanup above bounds growth within a process, and
+    # naming the leaf removes the leaves of processes that are gone
     from overturelink_data_pipeline_spark import scratch
 
-    scratch.reap_dead_owners(scratch.scratch_root("stream_ckpt"))
     name = "s" + uuid.uuid4().hex[:12]
     checkpoint = os.path.join(scratch.process_dir("stream_ckpt", name), "ckpt")
     run_to_completion._prev = (name, checkpoint)

@@ -291,7 +291,7 @@ def test_scratch_paths_are_user_and_process_scoped():
     from overturelink_data_pipeline_spark import scratch
 
     p = scratch.process_dir("train_shards", "docs")
-    assert f"pid-{os.getpid()}" in p
+    assert f"pid-{scratch.owner_token()}" in p
     root = scratch.scratch_root()
     assert p.startswith(root)
     # user-scoped root (no world-shared /tmp/train_shards)
@@ -300,20 +300,28 @@ def test_scratch_paths_are_user_and_process_scoped():
     )
 
 
-def test_reap_dead_owners_removes_only_dead(tmp_path):
+def test_reap_dead_owners_removes_only_dead(monkeypatch, tmp_path):
+    """Naming a leaf removes gone owners' siblings: a dead pid's leaf,
+    a dead pid's plain file, and this pid under another start time (a
+    recycled pid). Live owners, including a pid-only name of a live
+    pid, and foreign names are kept."""
     from overturelink_data_pipeline_spark import scratch
 
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
     parent = tmp_path / "train_shards"
     dead = parent / "pid-999999999"  # way above pid_max → dead
-    mine = parent / f"pid-{os.getpid()}"
+    dead_file = parent / "pid-999999998"
+    recycled = parent / f"pid-{os.getpid()}t1"
+    mine = parent / f"pid-{scratch.owner_token()}"
+    pid_only = parent / f"pid-{os.getpid()}"
     other = parent / "not-a-pid-dir"
-    for d in (dead, mine, other):
+    for d in (dead, recycled, mine, pid_only, other):
         d.mkdir(parents=True)
         (d / "data.bin").write_bytes(b"x")
-    reaped = scratch.reap_dead_owners(str(parent))
-    assert reaped == 1
-    assert not dead.exists()
-    assert mine.exists() and other.exists()
+    dead_file.write_bytes(b"x")
+    assert scratch.process_dir("train_shards", "docs") == str(mine / "docs")
+    assert not dead.exists() and not dead_file.exists() and not recycled.exists()
+    assert mine.exists() and pid_only.exists() and other.exists()
 
 
 def test_sink_shards_concurrent_processes_get_distinct_dirs():
@@ -406,12 +414,12 @@ def test_shard_scratch_override_live_after_import(monkeypatch, tmp_path):
     """$SPARK_GRAFT_SCRATCH set AFTER import must be honored — the
     paths are resolved per call, not frozen as module constants (and a
     fork()ed child resolves its OWN pid leaf)."""
+    from overturelink_data_pipeline_spark import scratch
     from overturelink_data_pipeline_spark.operators import curation
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "ovr"))
     assert curation.shard_out_dir().startswith(str(tmp_path / "ovr"))
-    assert curation.shard_parent().startswith(str(tmp_path / "ovr"))
-    assert f"pid-{os.getpid()}" in curation.shard_out_dir()
+    assert f"pid-{scratch.owner_token()}" in curation.shard_out_dir()
 
 
 def test_event_stream_link_repoints_stale_target(monkeypatch, tmp_path):

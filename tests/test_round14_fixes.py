@@ -7,19 +7,25 @@ while the default catalog is per-process — so one process's rebuild
 ``_clean_orphan_location``-deleted the part files a concurrent process
 was scanning: the ``FileNotFoundException`` under ``dlp_index_ns``
 that killed VERIFY_r13's pytest gate. Fix: a per-PROCESS namespace
-(``dlp_index_p{pid}``) plus a dead-pid reaper. These tests simulate
-the stale/foreign-warehouse states directly.
+(``dlp_index_p<owner token>``) whose constructor removes the entries of
+owners that are gone. These tests simulate the stale/foreign-warehouse
+states directly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
+import subprocess
+import sys
 from urllib.parse import unquote, urlparse
 
-from overturelink_data_pipeline_spark import registry, testing
+from overturelink_data_pipeline_spark import registry, scratch, testing
 
 registry.load_all()
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _warehouse_root(spark) -> str:
@@ -48,13 +54,31 @@ def _plant_corrupt_index(root: str, base: str) -> list[str]:
     return dirs
 
 
-def test_lifecycle_index_namespace_is_per_process(spark, sf_dir):
+def test_lifecycle_index_namespace_is_per_process(spark, sf_dir, tmp_path):
+    """One name for the life of a process (letters, digits and
+    underscores), and another process gets a different one."""
     from overturelink_data_pipeline_spark.operators.lifecycle import (
         process_index_name,
     )
 
-    name = process_index_name("dlp_index")
-    assert name == f"dlp_index_p{os.getpid()}"
+    name = process_index_name(spark, "dlp_index")
+    assert name == process_index_name(spark, "dlp_index")
+    assert re.fullmatch(r"dlp_index_p\w+", name), name
+    child = (
+        "import types;"
+        "from overturelink_data_pipeline_spark.operators.lifecycle import"
+        " process_index_name;"
+        f"conf = types.SimpleNamespace(get=lambda key: {str(tmp_path)!r});"
+        "print(process_index_name(types.SimpleNamespace(conf=conf), 'dlp_index'))"
+    )
+    theirs = subprocess.run(
+        [sys.executable, "-c", child],
+        capture_output=True,
+        text=True,
+        check=True,
+        cwd=REPO_ROOT,
+    ).stdout.strip()
+    assert theirs.startswith("dlp_index_p") and theirs != name
 
 
 def test_lifecycle_probe_ignores_stale_fixed_name_warehouse(spark, sf_dir):
@@ -77,16 +101,12 @@ def test_lifecycle_probe_ignores_stale_fixed_name_warehouse(spark, sf_dir):
 
 
 def test_lifecycle_probe_survives_foreign_live_index(spark, sf_dir):
-    """A CONCURRENT process's per-pid index (pid alive = our own pid
-    here, which the reaper must skip; plus a corrupt dead-pid one it
-    may remove) must never be read by this process's probe."""
-    from overturelink_data_pipeline_spark.operators import lifecycle
-
+    """A corrupt index left by a dead process must never be read by
+    this process's probe: naming the index removes it, and this
+    process's own index survives."""
     root = _warehouse_root(spark)
     # dead-pid leftovers: use a pid that cannot exist (> pid_max)
     dead = _plant_corrupt_index(root, "dlp_index_p99999999")
-    # force the reaper to run again in this process
-    lifecycle._REAPED.discard("dlp_index")
     fn = registry.QUERIES["dedup_lifecycle_probe"]
     try:
         out = fn(spark, sf_dir)
@@ -94,7 +114,7 @@ def test_lifecycle_probe_survives_foreign_live_index(spark, sf_dir):
         # the dead-pid corpse was reaped; our own live index was not
         for d in dead:
             assert not os.path.exists(d), d
-        own = os.path.join(root, f"dlp_index_p{os.getpid()}_post")
+        own = os.path.join(root, f"dlp_index_p{scratch.owner_token()}_post")
         assert os.path.exists(own)
     finally:
         for d in dead:
@@ -102,33 +122,39 @@ def test_lifecycle_probe_survives_foreign_live_index(spark, sf_dir):
 
 
 def test_reaper_spares_live_pids(spark):
-    """A dead pid's table directory, its release-stamp sidecar file and
-    the stamp's Hadoop checksum are reaped; a live pid's index is not."""
-    from overturelink_data_pipeline_spark.operators import lifecycle
+    """Naming an index removes a dead pid's table directory, its
+    release-stamp sidecar file and the stamp's Hadoop checksum, and the
+    same set for this process's pid under another start time (a recycled
+    pid); this process's own index is kept."""
+    from overturelink_data_pipeline_spark.operators.lifecycle import (
+        process_index_name,
+    )
 
     root = _warehouse_root(spark)
     base = "reaptest_idx"
-    live = os.path.join(root, f"{base}_p{os.getpid()}_post")
+    live = os.path.join(root, f"{base}_p{scratch.owner_token()}_post")
     os.makedirs(live, exist_ok=True)
-    dead = os.path.join(root, f"{base}_p99999998_post")
-    os.makedirs(dead, exist_ok=True)
-    dead_stamp = os.path.join(root, f"{base}_p99999998_stamp")
-    dead_crc = os.path.join(root, f".{base}_p99999998_stamp.crc")
-    for path in (dead_stamp, dead_crc):
-        with open(path, "w") as f:
-            f.write("v1:0:0")
+    gone = []
+    for owner in ("99999998", f"{os.getpid()}t1"):
+        table = os.path.join(root, f"{base}_p{owner}_post")
+        os.makedirs(table, exist_ok=True)
+        stamp = os.path.join(root, f"{base}_p{owner}_stamp")
+        crc = os.path.join(root, f".{base}_p{owner}_stamp.crc")
+        for path in (stamp, crc):
+            with open(path, "w") as f:
+                f.write("v1:0:0")
+        gone += [table, stamp, crc]
     try:
-        lifecycle._REAPED.discard(base)
-        lifecycle.reap_dead_process_indexes(spark, base)
+        assert process_index_name(spark, base) == f"{base}_p{scratch.owner_token()}"
         assert os.path.exists(live)
-        assert not os.path.exists(dead)
-        assert not os.path.exists(dead_stamp)
-        assert not os.path.exists(dead_crc)
+        for path in gone:
+            assert not os.path.exists(path), path
     finally:
         shutil.rmtree(live, ignore_errors=True)
-        shutil.rmtree(dead, ignore_errors=True)
-        for path in (dead_stamp, dead_crc):
-            if os.path.exists(path):
+        for path in gone:
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            elif os.path.exists(path):
                 os.remove(path)
 
 
