@@ -16,18 +16,16 @@ here implements exactly the subset the FGB tables need — the same
 sinks/gpkg.py. Schema (Header/Column/Feature/Geometry field slots and
 the property wire encoding) follows the published .fbs files.
 
-Driver-bound single-file sink like the other raw-export writers — the
-documented envelope is country-sized exports (SURVEY.md §7.3);
-``stream=True`` bounds driver memory via ``toLocalIterator``. The
-scalable bulk path remains GeoParquet/GeoJSONSeq.
+Driver-bound single-file sink like the other raw-export writers: the
+frame is collected to the driver, so driver memory grows with it. The
+documented envelope is country-sized exports; GeoJSONSeq and
+GeoParquet are the scalable sinks (SURVEY.md §7.3).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 import struct
-import tempfile
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -338,20 +336,14 @@ def _build_feature(geom: W.Geom | None, props: bytes) -> bytes:
     return b.finish_size_prefixed(b.end_table())
 
 
-def write_fgb(
-    df: DataFrame, path: str, name: str = "layer", stream: bool = False
-) -> int:
+def write_fgb(df: DataFrame, path: str, name: str = "layer") -> int:
     """Write ``df`` (with a WKB ``geometry`` column) as an unindexed
     FlatGeobuf file; returns the feature count.
 
-    Header ``features_count`` and the envelope are exact, and both
-    live BEFORE the features in the file, so the features must be
-    staged until the last row is seen. ``stream=True`` stages them in
-    a disk spool (tempfile) while rows arrive via ``toLocalIterator``
-    — driver MEMORY stays O(1) in features, as the module docstring
-    promises (review r10: they previously accumulated in a list, so
-    streaming saved row memory but not feature memory); the default
-    in-memory list avoids the extra file for small exports. Header
+    The frame is collected to the driver. Header ``features_count``
+    and the envelope are exact, and both live BEFORE the features in
+    the file, so the encoded features wait in a list until the last
+    row is seen; driver memory grows with the frame. Header
     ``geometry_type`` is the concrete type when the frame is uniform,
     else Unknown (0) with per-feature types — the spec's
     mixed-geometry form, so no pre-split is required (unlike the
@@ -365,13 +357,10 @@ def write_fgb(
         )
     ]
 
-    spool = tempfile.TemporaryFile() if stream else None
     feature_bufs: list[bytes] = []
     geom_types: set[int] = set()
     box = [None, None, None, None]
-    n = 0
-    rows = df.toLocalIterator() if stream else df.collect()
-    for row in rows:
+    for row in df.collect():
         wkb_bytes = row[_GEOM_COL]
         geom = None
         if wkb_bytes is not None:
@@ -395,25 +384,15 @@ def write_fgb(
                 box[1] = gy0 if box[1] is None else min(box[1], gy0)
                 box[2] = gx1 if box[2] is None else max(box[2], gx1)
                 box[3] = gy1 if box[3] is None else max(box[3], gy1)
-        buf = _build_feature(geom, _encode_properties(row, fields))
-        if spool is not None:
-            spool.write(buf)
-        else:
-            feature_bufs.append(buf)
-        n += 1
+        feature_bufs.append(_build_feature(geom, _encode_properties(row, fields)))
 
+    n = len(feature_bufs)
     header_type = geom_types.pop() if len(geom_types) == 1 else 0
     envelope = None if box[0] is None else [float(v) for v in box]
     with open(path, "wb") as f:
         f.write(MAGIC)
         f.write(_build_header(name, header_type, fields, n, envelope))
-        if spool is not None:
-            spool.seek(0)
-            shutil.copyfileobj(spool, f)
-            spool.close()
-        else:
-            for buf in feature_bufs:
-                f.write(buf)
+        f.writelines(feature_bufs)
     return n
 
 

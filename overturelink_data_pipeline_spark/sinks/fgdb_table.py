@@ -254,11 +254,10 @@ def write_fgdb_table(base: str, rows, fields: list[_Field]) -> int:
     Returns row count.
 
     Streaming write: rows are encoded and flushed one at a time behind
-    a placeholder header that is patched once the count/size are known
-    (the gpkg sink's bounded-memory posture — a country-sized export
-    must not hold every encoded row in driver memory twice). Residual
-    driver memory is the 8-byte-per-row offset list the index file
-    needs anyway."""
+    a placeholder header that is patched once the count/size are known,
+    so the encoded rows are never held in driver memory next to the
+    input rows. Residual driver memory is the 8-byte-per-row offset
+    list the index file needs anyway."""
     geom_type = GEOM_POINT if any(
         f.ftype == FT_GEOMETRY for f in fields
     ) else GEOM_NONE
@@ -582,10 +581,10 @@ def write_fgdb_layers(layers, gdb_dir: str) -> dict[str, int]:
     from overturelink_data_pipeline_spark.sinks.geoparquet import fgdb_field_names
 
     def unwrap(name: str, df, cols: list[str]):
-        """Lazy row stream: toLocalIterator pulls one partition at a
-        time and the streaming table writer flushes row-by-row, so
-        driver memory is bounded by a partition, not the layer."""
-        for r in df.toLocalIterator():
+        """Row generator over the collected layer: the rows are
+        collected to the driver in one job, and the table writer
+        flushes them row by row as it consumes the generator."""
+        for r in df.collect():
             vals: list = []
             for c in cols:
                 v = r[c]

@@ -9,11 +9,12 @@ Two writers with different scale envelopes:
   reference itself exposes GeoJSONSeq for "streaming-friendly" export
   (reference source.py:652-657).
 - **Single-file FeatureCollection**: the reference's default export —
-  inherently single-writer, so it streams ``toLocalIterator`` on the
-  driver with bounded memory (one partition in flight), injecting the
+  inherently single-writer, so the feature lines are collected to the
+  driver and driver memory grows with the frame. It injects the
   ``layer`` property when flattening multi-layer dicts (U2, reference
   export.py:266-297) and an optional metadata block. Documented bound:
-  country-sized outputs (SURVEY.md §7.3).
+  country-sized outputs; GeoJSONSeq and GeoParquet are the scalable
+  sinks (SURVEY.md §7.3).
 
 Post-write validation (reference export.py:439-465): parse the file
 back and check feature count.
@@ -132,15 +133,10 @@ def write_geojson(
     layers: dict[str, DataFrame] | DataFrame,
     path: str,
     metadata: dict | None = None,
-    stream: bool = False,
 ) -> int:
     """Single-file FeatureCollection (S8). Multi-layer dicts flatten
     with an injected ``layer`` property. Returns the feature count.
-
-    Driver-bound by design (single file). Country-sized outputs (the
-    reference's envelope) default to ``collect()``; ``stream=True``
-    switches to ``toLocalIterator`` (one partition in flight) when the
-    frame exceeds driver memory.
+    Driver-bound; see the module docstring.
     """
     if isinstance(layers, DataFrame):
         layers = {"": layers}
@@ -156,33 +152,20 @@ def write_geojson(
             lines = df.select(
                 feature_line(df, name if len(layers) > 1 else None).alias("v")
             )
-            rows = lines.toLocalIterator() if stream else lines.collect()
-            for row in rows:
+            for row in lines.collect():
                 if not first:
                     f.write(",")
                 f.write(row["v"])
                 first = False
                 n += 1
         f.write("]}")
-    validate_geojson(path, n, stream=stream)
+    validate_geojson(path, n)
     return n
 
 
-def validate_geojson(
-    path: str, expected_features: int, stream: bool = False
-) -> None:
+def validate_geojson(path: str, expected_features: int) -> None:
     """Post-write check (reference export.py:439-465): parseable and
-    feature count matches. ``stream=True`` validates with a chunked
-    scan instead of ``json.load`` — materializing the whole document
-    as Python objects would OOM the driver on exactly the inputs
-    ``write_geojson(stream=True)`` exists for."""
-    if stream:
-        got = _count_features_streaming(path)
-        if got != expected_features:
-            raise ValueError(
-                f"{path}: wrote {expected_features} features, file has {got}"
-            )
-        return
+    feature count matches."""
     with open(path, encoding="utf-8") as f:
         doc = json.load(f)
     if doc.get("type") != "FeatureCollection":
@@ -190,117 +173,3 @@ def validate_geojson(
     got = len(doc.get("features", []))
     if got != expected_features:
         raise ValueError(f"{path}: wrote {expected_features} features, file has {got}")
-
-
-class _ChunkReader:
-    """Buffered forward scanner over a text file for the streaming
-    validator: O(largest single feature) memory, never the whole file."""
-
-    CHUNK = 1 << 20
-
-    def __init__(self, f) -> None:
-        self._f = f
-        self._buf = ""
-        self._pos = 0
-
-    def _fill(self) -> bool:
-        chunk = self._f.read(self.CHUNK)
-        self._buf = self._buf[self._pos :] + chunk
-        self._pos = 0
-        return bool(chunk)
-
-    def _ensure(self, n: int) -> None:
-        while len(self._buf) - self._pos < n:
-            if not self._fill():
-                return
-
-    def expect(self, literal: str, what: str) -> None:
-        self._ensure(len(literal))
-        if not self._buf.startswith(literal, self._pos):
-            got = self._buf[self._pos : self._pos + len(literal) + 16]
-            raise ValueError(f"malformed GeoJSON: expected {what}, got {got!r}")
-        self._pos += len(literal)
-
-    def peek(self, n: int = 1) -> str:
-        self._ensure(n)
-        return self._buf[self._pos : self._pos + n]
-
-    def skip(self, n: int = 1) -> None:
-        self._pos += n
-
-    def decode_value(self, decoder: json.JSONDecoder):
-        """raw_decode one JSON value, growing the buffer until it
-        parses whole (features are bounded — one geometry each)."""
-        while True:
-            try:
-                val, end = decoder.raw_decode(self._buf, self._pos)
-            except ValueError:
-                if not self._fill():
-                    raise ValueError(
-                        "malformed GeoJSON: truncated value at offset "
-                        f"{self._pos}"
-                    ) from None
-                continue
-            # a bare number at the buffer edge could continue into the
-            # next chunk; our values are objects, but guard anyway
-            if end == len(self._buf) and self._fill():
-                continue
-            self._pos = end
-            return val
-
-    def at_eof(self) -> bool:
-        self._ensure(1)
-        return self._pos >= len(self._buf)
-
-
-def _count_features_streaming(path: str) -> int:
-    """Streaming well-formedness check + exact top-level feature count.
-
-    Parses the document incrementally against the exact layout
-    ``write_geojson`` produces (root keys in order: type, optional
-    metadata, features), fully JSON-decoding the metadata value and
-    every element of the top-level ``features`` array — so a property
-    struct that *serializes* to ``{"type":"Feature"...`` nested inside
-    a feature can never be over-counted, and truncation/corruption
-    anywhere in the file raises instead of passing a substring tally.
-    """
-    decoder = json.JSONDecoder()
-    with open(path, encoding="utf-8") as f:
-        r = _ChunkReader(f)
-        r.expect('{"type":"FeatureCollection",', "FeatureCollection header")
-        if r.peek(len('"metadata":')) == '"metadata":':
-            r.skip(len('"metadata":'))
-            r.decode_value(decoder)
-            r.expect(",", "comma after metadata")
-        r.expect('"features":[', "features array")
-        count = 0
-        if r.peek() == "]":
-            r.skip()
-        else:
-            while True:
-                feature = r.decode_value(decoder)
-                if not isinstance(feature, dict) or feature.get("type") != "Feature":
-                    raise ValueError(
-                        f"malformed GeoJSON: element {count} is not a Feature"
-                    )
-                count += 1
-                sep = r.peek()
-                r.skip()
-                if sep == "]":
-                    break
-                if sep != ",":
-                    raise ValueError(
-                        f"malformed GeoJSON: expected ',' or ']' after "
-                        f"feature {count - 1}, got {sep!r}"
-                    )
-        r.expect("}", "closing brace")
-        # drain to EOF: anything non-whitespace after the document —
-        # even past a newline — is corruption/concatenation
-        while not r.at_eof():
-            rest = r.peek(_ChunkReader.CHUNK)
-            if rest.strip():
-                raise ValueError(
-                    "malformed GeoJSON: trailing content after document"
-                )
-            r.skip(len(rest))
-        return count

@@ -12,10 +12,10 @@ NotImplementedError stub.
 Reference semantics mirrored (export.py:327-353, 409-437):
 multi-layer append (`mode='w'` first layer, `'a'` for the rest,
 layer table per name) and the key/value ``metadata`` table. Output is
-driver-bound by design like every single-file sink here — the
-documented envelope is country-sized exports (SURVEY.md §7.3);
-``stream=True`` bounds driver memory via ``toLocalIterator``. The
-scalable bulk path remains GeoParquet/GeoJSONSeq.
+driver-bound by design like every single-file sink here: each layer's
+frame is collected to the driver, so driver memory grows with it. The
+documented envelope is country-sized exports; GeoJSONSeq and
+GeoParquet are the scalable sinks (SURVEY.md §7.3).
 """
 
 from __future__ import annotations
@@ -128,7 +128,6 @@ def write_gpkg(
     path: str,
     layer: str = "layer",
     mode: str = "w",
-    stream: bool = False,
 ) -> int:
     """Write one layer into a GeoPackage; returns the feature count.
 
@@ -184,7 +183,6 @@ def write_gpkg(
             f"VALUES ({placeholders})"
         )
 
-        n = 0
         ext = [None, None, None, None]  # min_x, min_y, max_x, max_y
         geom_types: set[str] = set()
 
@@ -210,19 +208,16 @@ def write_gpkg(
         convert = {f.name: _converter(f) for f in fields}
 
         def encode_row(row) -> tuple:
-            nonlocal n
             vals: list = []
             if fid_field is not None:
-                # NULL fids fail eagerly with a clear message (ADVICE
-                # r10): sqlite would silently rowid-assign them,
-                # corrupting the caller's keying on round-trip. The
-                # check is per-row O(1); DUPLICATE fids are enforced by
-                # the PK constraint itself and re-raised below with the
-                # same clarity — a driver-side seen-set would add O(n)
-                # driver memory to the stream=True path whose whole
-                # point is bounded memory (review r11). The whole
-                # insert is one transaction (close-without-commit rolls
-                # back), so no partial layer persists either way.
+                # NULL fids fail eagerly with a clear message: sqlite
+                # would silently rowid-assign them, corrupting the
+                # caller's keying on round-trip. DUPLICATE fids need no
+                # seen-set: the PK constraint checks uniqueness, and
+                # its error is re-raised below with the same clarity.
+                # The whole insert is one transaction
+                # (close-without-commit rolls back), so no partial
+                # layer persists either way.
                 fid = row["fid"]
                 if fid is None:
                     raise ValueError(
@@ -250,10 +245,9 @@ def write_gpkg(
                         ext[2] = xmax if ext[2] is None else max(ext[2], xmax)
                         ext[3] = ymax if ext[3] is None else max(ext[3], ymax)
                     vals.append(blob)
-            n += 1
             return tuple(vals)
 
-        rows = df.toLocalIterator() if stream else df.collect()
+        rows = df.collect()
         try:
             con.executemany(insert, (encode_row(r) for r in rows))
         except sqlite3.IntegrityError as exc:
@@ -303,7 +297,7 @@ def write_gpkg(
                 (layer, _GEOM_COL, type_name, _SRS_ID),
             )
         con.commit()
-        return n
+        return len(rows)
     finally:
         con.close()
 

@@ -14,12 +14,13 @@ operational behaviors preserved:
 - **contract validation** before any upload (publish.py:751).
 
 Scale stance: an upload sink is inherently a network funnel through
-the driver. Country-sized frames (the reference's envelope — it holds
-a full GeoDataFrame) default to one ``collect()``; ``stream=True``
-switches to ``toLocalIterator`` with one partition in flight for
-unbounded frames. The batch loop is sequential because real feature
-services serialize appends per layer (the reference polls async
-append jobs one at a time, publish.py:478-503).
+the driver. The frame is collected to the driver in one ``collect()``,
+so driver memory grows with it; the envelope is country-sized frames
+(the reference holds a full GeoDataFrame), and GeoJSONSeq and
+GeoParquet are the scalable sinks (SURVEY.md §7.3). The batch loop is
+sequential because real feature services serialize appends per layer
+(the reference polls async append jobs one at a time,
+publish.py:478-503).
 """
 
 from __future__ import annotations
@@ -83,33 +84,6 @@ class MockFeatureService:
         return len(self.rows)
 
 
-def _stream_batches(df: DataFrame, batch_size: int, stream: bool = False):
-    """Yield row-dict batches.
-
-    ``stream=False`` (default): one ``collect()`` — right for
-    country-sized publish frames (the reference holds the full
-    GeoDataFrame in memory too), and ~10× faster than the iterator RPC
-    for small frames. ``stream=True``: ``toLocalIterator`` with one
-    partition in flight — bounded driver memory for unbounded frames.
-    """
-    if stream:
-        buf: list[dict] = []
-        for row in df.toLocalIterator():
-            buf.append(row.asDict(recursive=True))
-            if len(buf) >= batch_size:
-                yield buf
-                buf = []
-        if buf:
-            yield buf
-        return
-    # convert per batch window, not up front: the dict forest is about
-    # the same size as the Row list, and building it whole doubled the
-    # peak driver footprint for frames near memory capacity (review r10)
-    rows = df.collect()
-    for i in range(0, len(rows), batch_size):
-        yield [r.asDict(recursive=True) for r in rows[i : i + batch_size]]
-
-
 #: Consecutive successful appends at a reduced size before probing the
 #: size back up (doubling). Guards against one anomalous 413 — e.g. a
 #: single batch of unusually large features — permanently halving
@@ -124,11 +98,11 @@ class _AdaptiveState:
     ``limit`` is the largest chunk size currently believed safe — None
     means no limit has been learned (full batches go up whole; a SHORT
     batch appending cleanly teaches nothing, which is why the limit is
-    not just "the size that last succeeded": the r4 review found the
-    initial-mode seed remainder — possibly 1 row — being mistaken for
-    a learned limit and throttling every later batch 31-fold with zero
-    413s ever raised). ``streak`` counts consecutive successes at the
-    current limit; at ``threshold`` the limit doubles (probe-up).
+    not just "the size that last succeeded": a short window — possibly
+    1 row — mistaken for a learned limit would throttle every later
+    batch with zero 413s ever raised). ``streak`` counts consecutive
+    successes at the current limit; at ``threshold`` the limit doubles
+    (probe-up).
     ``threshold`` itself doubles every time a 413 arrives at or above
     a size the probe already re-raised to — so when the endpoint's
     limit is GENUINELY reduced, re-probing backs off geometrically
@@ -193,75 +167,41 @@ def publish(
     batch_size: int = BATCH_SIZE,
     batch_floor: int = BATCH_FLOOR,
     validate: bool = True,
-    stream: bool = False,
 ) -> int:
     """Publish ``df`` to ``service``; returns rows uploaded.
 
     Modes (reference publish.py:891-905):
-    - ``initial``: seed slice creates the service, remainder appends;
+    - ``initial``: ``rows[:seed_count]`` creates the service, then
+      ``rows[seed_count:]`` appends (reference publish.py:657-659);
     - ``overwrite``: truncate then append;
     - ``append``: append only.
+
+    Appends go up in ``batch_size`` windows through one adaptive loop
+    whose learned upload size carries across windows, so a reduced
+    limit is not re-discovered by failed uploads in every window. Rows
+    become dicts one window at a time: the dict forest is about the
+    size of the ``Row`` list, and building it whole would double the
+    peak driver footprint.
     """
     if validate:
         validate_contract(df)
-    total = 0
-
-    if mode == "initial":
-        # seed slice + remainder without re-reading: stream once and
-        # split on the fly (reference slices iloc[:seed]/[seed:],
-        # publish.py:657-659 — same split, no second scan). The seed
-        # accumulates ACROSS batches until seed_count is reached, so a
-        # streamed first batch smaller than the seed still yields the
-        # same seed the reference's iloc slice would.
-        seeded = False
-        seed: list[dict] = []
-        state = _AdaptiveState()
-        for batch in _stream_batches(df, batch_size, stream):
-            if not seeded:
-                need = seed_count - len(seed)
-                seed.extend(batch[:need])
-                rest = batch[need:]
-                if len(seed) < seed_count and not rest:
-                    continue  # keep accumulating the seed
-                service.create(name, seed)
-                total += len(seed)
-                seeded = True
-                if rest:
-                    state = _append_adaptive(
-                        service, rest, batch_floor,
-                        state=state, ceiling=batch_size,
-                    )
-                    total += len(rest)
-            else:
-                state = _append_adaptive(
-                    service, batch, batch_floor,
-                    state=state, ceiling=batch_size,
-                )
-                total += len(batch)
-        if not seeded:
-            # frame smaller than the seed (or empty): everything seen so
-            # far IS the seed — the service is still created
-            service.create(name, seed)
-            total += len(seed)
-        return total
-
     if mode == "overwrite":
         service.truncate()
-    elif mode != "append":
+    elif mode not in ("initial", "append"):
         raise ValueError(f"unknown publish mode {mode!r}")
 
-    # carry the learned upload size FORWARD: _append_adaptive returns
-    # the chunk size that finally fit, and restarting every streamed
-    # batch at the configured maximum would replay the same failed
-    # oversized uploads (~log2(max/working) rejected round-trips per
-    # batch) against the live endpoint
+    rows = df.collect()
+    start = 0
+    if mode == "initial":
+        start = seed_count
+        service.create(name, [r.asDict(recursive=True) for r in rows[:start]])
     state = _AdaptiveState()
-    for batch in _stream_batches(df, batch_size, stream):
+    for i in range(start, len(rows), batch_size):
+        batch = [r.asDict(recursive=True) for r in rows[i : i + batch_size]]
         state = _append_adaptive(
             service, batch, batch_floor, state=state, ceiling=batch_size
         )
-        total += len(batch)
-    return total
+    return len(rows)
 
 
 def publish_multi_layer(

@@ -221,15 +221,6 @@ def test_fgb_partially_empty_members(spark, tmp_path):
     assert _s.pack("<d", float("-inf")) not in data
 
 
-def test_fgb_stream_spools_features(mixed_df, tmp_path):
-    """stream=True must produce a byte-identical file to the buffered
-    path (the spool only changes WHERE features wait for the header)."""
-    p1, p2 = str(tmp_path / "buf.fgb"), str(tmp_path / "str.fgb")
-    df = mixed_df.coalesce(1)  # one partition → identical row order
-    assert write_fgb(df, p1) == write_fgb(df, p2, stream=True)
-    assert open(p1, "rb").read() == open(p2, "rb").read()
-
-
 def test_fgb_large_geometry_fast_and_correct(spark, tmp_path):
     """The builder packs coordinate vectors in one prepend. Timed on
     the PURE-PYTHON encode only (no Spark jobs — this box has

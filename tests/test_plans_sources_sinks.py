@@ -453,13 +453,21 @@ def _publishable(spark, n=50):
 
 
 def test_publish_initial_seed_then_batch(spark):
-    svc = MockFeatureService()
-    n = publish(
-        _publishable(spark), svc, mode="initial", seed_count=10, batch_size=15
-    )
-    assert n == svc.count() == 50
-    assert svc.calls[0] == ("create", 10)  # seed defines the schema
-    assert all(op == "append" for op, _ in svc.calls[1:])
+    # rows[:seed] creates the service, rows[seed:] appends in
+    # batch_size windows; an empty frame still creates it
+    cases = [
+        (50, 10, [("create", 10), ("append", 15), ("append", 15), ("append", 10)]),
+        (50, 20, [("create", 20), ("append", 15), ("append", 15)]),
+        (0, 10, [("create", 0)]),
+    ]
+    for n_rows, seed, calls in cases:
+        svc = MockFeatureService()
+        n = publish(
+            _publishable(spark, n_rows), svc, mode="initial",
+            seed_count=seed, batch_size=15,
+        )
+        assert n == svc.count() == n_rows
+        assert svc.calls == calls
 
 
 def test_publish_overwrite_truncates(spark):
@@ -623,10 +631,6 @@ def test_gpkg_decimal_date_and_fid_columns(spark, tmp_path):
     p_dup = str(tmp_path / "dup.gpkg")
     with pytest.raises(ValueError, match="duplicate fid"):
         write_gpkg(dupfid, p_dup, layer="t")
-    # ... including on the bounded-memory streaming path (review r11:
-    # uniqueness comes from the PK constraint, not a driver-side set)
-    with pytest.raises(ValueError, match="duplicate fid"):
-        write_gpkg(dupfid, p_dup, layer="t", stream=True)
     for p in (p_nul, p_dup):
         if os.path.exists(p):
             con = _sq.connect(p)
@@ -795,7 +799,7 @@ def test_geojson_non_ascii_utf8(spark, tmp_path):
         [(1, "Zürich–Čačak", None)], "id long, name string, geometry binary"
     )
     path = str(tmp_path / "utf8.geojson")
-    assert write_geojson(df, path, stream=True) == 1
+    assert write_geojson(df, path) == 1
     raw = open(path, "rb").read()
     assert "Zürich–Čačak".encode("utf-8") in raw
 

@@ -299,7 +299,7 @@ def test_streaming_geojson_validation_counts_without_full_parse(spark, tmp_path)
         "id string, geometry binary",
     )
     out = str(tmp_path / "s.geojson")
-    n = write_geojson(df, out, stream=True)  # validates via chunked scan
+    n = write_geojson(df, out)  # validates the written file
     assert n == 7
 
 

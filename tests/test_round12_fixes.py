@@ -98,17 +98,16 @@ def test_cache_fast_path_requires_atomic_type(spark, tmp_path):
 
 
 def test_gpkg_fid_translation_matches_full_message(spark, tmp_path):
-    """ADVICE r11: the duplicate-fid translation keys on the full
-    sqlite shape ('UNIQUE constraint failed' + '.fid' suffix), not a
-    bare 'fid' substring — a layer NAME containing 'fid' must still
-    translate correctly on the streaming path (where the PK constraint,
-    not the eager driver check, catches the duplicate)."""
+    """The duplicate-fid translation keys on the full sqlite shape
+    ('UNIQUE constraint failed' + '.fid' suffix), not a bare 'fid'
+    substring — a layer NAME containing 'fid' must still translate
+    correctly (the PK constraint catches the duplicate)."""
     from overturelink_data_pipeline_spark.sinks.gpkg import write_gpkg
 
     dup = spark.createDataFrame([(1, "a"), (1, "b")], "fid long, v string")
     p = str(tmp_path / "fidlayer.gpkg")
     with pytest.raises(ValueError, match="duplicate fid"):
-        write_gpkg(dup, p, layer="confidence_fidelity", stream=True)
+        write_gpkg(dup, p, layer="confidence_fidelity")
 
 
 def test_pipeline_geo_text_corpus_staged_parity(spark, sf_dir):

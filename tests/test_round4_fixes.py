@@ -106,7 +106,7 @@ def test_phash_cap_idle_on_natural_corpus_matches_bruteforce(spark, hot_asset_di
 
 
 # ---------------------------------------------------------------------------
-# Streaming GeoJSON validation (ADVICE #1)
+# GeoJSON validation
 # ---------------------------------------------------------------------------
 
 
@@ -128,7 +128,7 @@ def test_stream_validation_not_fooled_by_nested_feature_lookalike(spark, tmp_pat
         "id string, parts array<struct<type string, n int>>, geometry binary",
     )
     out = str(tmp_path / "nested.geojson")
-    n = write_geojson(df, out, stream=True)  # old counter would see 10
+    n = write_geojson(df, out)  # old counter would see 10
     assert n == 5
     # and the file itself is well-formed
     doc = json.load(open(out))
@@ -137,7 +137,7 @@ def test_stream_validation_not_fooled_by_nested_feature_lookalike(spark, tmp_pat
 
 def test_stream_validation_catches_truncation(tmp_path):
     from overturelink_data_pipeline_spark.sinks.geojson import (
-        _count_features_streaming,
+        validate_geojson,
     )
 
     good = (
@@ -147,15 +147,15 @@ def test_stream_validation_catches_truncation(tmp_path):
     )
     p = tmp_path / "t.geojson"
     p.write_text(good)
-    assert _count_features_streaming(str(p)) == 2
+    validate_geojson(str(p), 2)
     p.write_text(good[:-8])  # truncate mid-feature
     with pytest.raises(ValueError):
-        _count_features_streaming(str(p))
+        validate_geojson(str(p), 2)
 
 
 def test_stream_validation_metadata_with_decoy_keys(tmp_path):
     from overturelink_data_pipeline_spark.sinks.geojson import (
-        _count_features_streaming,
+        validate_geojson,
     )
 
     doc = (
@@ -165,7 +165,7 @@ def test_stream_validation_metadata_with_decoy_keys(tmp_path):
     )
     p = tmp_path / "m.geojson"
     p.write_text(doc)
-    assert _count_features_streaming(str(p)) == 1
+    validate_geojson(str(p), 1)
 
 
 # ---------------------------------------------------------------------------
@@ -430,7 +430,7 @@ def test_cluster_labels_random_graph_matches_recursive_cte(spark):
 
 def test_stream_validation_rejects_trailing_garbage(tmp_path):
     from overturelink_data_pipeline_spark.sinks.geojson import (
-        _count_features_streaming,
+        validate_geojson,
     )
 
     doc = (
@@ -439,10 +439,10 @@ def test_stream_validation_rejects_trailing_garbage(tmp_path):
     )
     p = tmp_path / "g.geojson"
     p.write_text(doc + "\nGARBAGE")
-    with pytest.raises(ValueError, match="trailing"):
-        _count_features_streaming(str(p))
+    with pytest.raises(ValueError, match="Extra data"):
+        validate_geojson(str(p), 1)
     p.write_text(doc + " \n ")  # pure whitespace tail is fine
-    assert _count_features_streaming(str(p)) == 1
+    validate_geojson(str(p), 1)
 
 
 def test_fgb_drops_empty_parts():

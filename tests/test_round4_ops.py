@@ -220,15 +220,15 @@ def test_posting_pairs_matches_bruteforce_reference(spark):
 
 
 def test_streaming_validator_roundtrip_fuzz(spark, tmp_path):
-    """Random FeatureCollections round-trip through write_geojson's
-    stream path (validator counts exactly; corrupted tails raise)."""
+    """Random FeatureCollections round-trip through write_geojson
+    (validator counts exactly; corrupted tails raise)."""
     import random
 
     from pyspark.sql import Row
 
     from overturelink_data_pipeline_spark.geo import wkb as W
     from overturelink_data_pipeline_spark.sinks.geojson import (
-        _count_features_streaming,
+        validate_geojson,
         write_geojson,
     )
 
@@ -254,14 +254,14 @@ def test_streaming_validator_roundtrip_fuzz(spark, tmp_path):
         else:
             df = spark.createDataFrame(rows)
         meta = {"trial": trial, "decoy": '{"type":"Feature"'}
-        assert write_geojson(df, out, metadata=meta, stream=True) == n
-        assert _count_features_streaming(out) == n
+        assert write_geojson(df, out, metadata=meta) == n
+        validate_geojson(out, n)
         # chop the tail -> must raise
         raw = open(out).read()
         with open(out, "w") as f:
             f.write(raw[:-2])
         with pytest.raises(ValueError):
-            _count_features_streaming(out)
+            validate_geojson(out, n)
 
 
 def test_sampled_quantile_tracks_exact_median(spark, sf_dir):
