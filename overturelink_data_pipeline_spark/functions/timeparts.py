@@ -52,10 +52,6 @@ def utc_hour(ns: Column) -> Column:
     return F.floor((epoch_seconds(ns) % SEC_PER_DAY) / SEC_PER_HOUR).cast("int")
 
 
-def utc_minute(ns: Column) -> Column:
-    return F.floor((epoch_seconds(ns) % SEC_PER_HOUR) / 60).cast("int")
-
-
 def hour_bucket_str(ns: Column) -> Column:
     """``yyyy-MM-dd HH:00`` label, equivalent to
     ``STRFTIME(date_trunc('hour', ts), '%Y-%m-%d %H:00')`` in DuckDB."""

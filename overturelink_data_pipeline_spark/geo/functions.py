@@ -62,28 +62,6 @@ def st_length(s: pd.Series) -> pd.Series:
     return _map_wkb(s, lambda b: G.length(W.loads(b)))
 
 
-@pandas_udf(T.BinaryType())
-def st_force_2d(s: pd.Series) -> pd.Series:
-    """G1 — decode (drops Z/M), re-encode 2D ISO WKB: the same WKB
-    round-trip trick as reference transform.py:207-214."""
-    return _map_wkb(s, lambda b: W.dumps(W.loads(b)))
-
-
-@pandas_udf(T.BinaryType())
-def st_make_valid(s: pd.Series) -> pd.Series:
-    """G2 — bowtie repair by ring splitting (geom.make_valid)."""
-    return _map_wkb(s, lambda b: W.dumps(G.make_valid(W.loads(b))))
-
-
-@pandas_udf(T.BinaryType())
-def st_centroid(s: pd.Series) -> pd.Series:
-    def fn(b: bytes) -> bytes | None:
-        c = G.centroid(W.loads(b))
-        return None if c is None else W.point(c[0], c[1])
-
-    return _map_wkb(s, fn)
-
-
 def centroid_utm_lonlat(b: bytes) -> tuple[float, float] | None:
     """Row-level G7: centroid in estimated UTM, back to 4326 lon/lat.
     Shared by the UDF and the fixture golden-column generator so the
@@ -126,13 +104,6 @@ def st_centroid_utm(s: pd.Series) -> pd.Series:
         return None if c is None else W.point(c[0], c[1])
 
     return _map_wkb(s, fn)
-
-
-@pandas_udf(T.BinaryType())
-def st_unwrap_single_multipolygon(s: pd.Series) -> pd.Series:
-    """G6 — single-part MultiPolygon → Polygon (reference
-    transform.py:235-249)."""
-    return _map_wkb(s, lambda b: W.dumps(G.unwrap_single_multipolygon(W.loads(b))))
 
 
 @pandas_udf(T.IntegerType())

@@ -1181,7 +1181,6 @@ from pathlib import Path as _Path  # noqa: E402
 
 _GOLDEN = _Path(__file__).resolve().parents[2] / "fixtures" / "dedup_golden"
 _MH_GOLD = str(_GOLDEN / "minhash_pairs.parquet")
-_MH_CAND_GOLD = str(_GOLDEN / "minhash_candidates.parquet")
 _SH_GOLD = str(_GOLDEN / "simhash_pairs.parquet")
 
 
@@ -1354,9 +1353,8 @@ def _minhash_verified_pairs(
     # inside the single job; a persist only adds a job boundary and a
     # cache write. Simhash differs because its vote agg feeds legs
     # with non-identical exchanges.
-    # banding factored into _lsh_candidates (r13 — shared verbatim with
-    # the staged quality audit). Notes that still govern its shape:
-    # the census anti-join is kept IN-PLAN (a driver-side head(1)
+    # banding lives in _lsh_candidates. Notes that still govern its
+    # shape: the census anti-join is kept IN-PLAN (a driver-side head(1)
     # short-circuit was tried in r5 and reverted — without a cached
     # upstream it runs the whole signature pipeline as its own job),
     # and candidate pairs carry IDs only through the band shuffle — the
@@ -1368,8 +1366,7 @@ def _minhash_verified_pairs(
 
 def _lsh_candidates(post: DataFrame) -> DataFrame:
     """Raw band-bucket candidate pairs (id_a < id_b, deduped) — the
-    banding stage of dedup_minhash_lsh factored out so the quality
-    audit measures exactly the shipped candidate generation.
+    banding stage of dedup_minhash_lsh.
 
     The band table is persisted and materialized BEFORE it branches
     (r13): it feeds the census aggregate plus candidate generation,
@@ -1391,7 +1388,7 @@ def _lsh_candidates(post: DataFrame) -> DataFrame:
     never collect a hot bucket — the cold side's lists are ≤
     BAND_BUCKET_CAP by construction). Pair set is IDENTICAL: same
     (band, bucket) co-membership, same cap filter, same dedup —
-    pinned by the golden parquet and the quality audit's n_cand."""
+    pinned by the golden parquet."""
     sig = minhash_signatures_agg(post)
     bands = _fresh_persist("minhash_bands", _band_table(sig))
     bands.count()
@@ -1418,146 +1415,6 @@ def _lsh_candidates(post: DataFrame) -> DataFrame:
         .dropDuplicates(["id_a", "id_b"])
     )
 
-
-# ---------------------------------------------------------------------------
-# STAGED for r14 (the r12/r13 staging precedent: built + locally
-# oracle-gated now, registered when a merge frees a slot): LSH quality
-# audit — the tuning surface a real pipeline watches when choosing
-# bands × rows. Unregistered: the registry sits at the 100-query
-# ceiling and r13's merge slot funded pipeline_geo_text_corpus.
-# tests/test_round13_fixes.py runs the local replica of the driver
-# gate against this oracle.
-# ---------------------------------------------------------------------------
-
-DEDUP_MINHASH_QUALITY_ORACLE = f"""
-    WITH corpus AS ({_PREFIX_CORPUS_SQL}),
-    sh AS (
-      SELECT doc_id,
-             list_distinct(
-               list_transform(
-                 range(1, greatest(len(string_split_regex(trim(text), '\\s+')) - 2, 1) + 1),
-                 i -> string_split_regex(trim(text), '\\s+')[i] || ' ' ||
-                      string_split_regex(trim(text), '\\s+')[i+1] || ' ' ||
-                      string_split_regex(trim(text), '\\s+')[i+2]
-               )
-             ) AS sh
-      FROM corpus
-      WHERE len(string_split_regex(trim(text), '\\s+')) >= 3
-    ),
-    truth AS (
-      -- UNBLOCKED exact truth: every pair at jaccard >= 0.5 (LSH has
-      -- no lang/length blocking, so its recall is judged against the
-      -- plain threshold set)
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-      WHERE len(list_intersect(a.sh, b.sh)) * 1.0 /
-            (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.5
-    ),
-    cand AS (
-      SELECT id_a, id_b FROM read_parquet('{_MH_CAND_GOLD}')
-      WHERE corpus_key = (SELECT SUM(n_chars) FROM documents)
-    ),
-    hits AS (SELECT id_a, id_b FROM cand INTERSECT SELECT id_a, id_b FROM truth)
-    SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_true,
-           CAST((SELECT COUNT(*) FROM cand)  AS BIGINT) AS n_cand,
-           CAST((SELECT COUNT(*) FROM hits)  AS BIGINT) AS n_hits,
-           ROUND((SELECT COUNT(*) FROM hits) * 1.0 /
-                 (SELECT COUNT(*) FROM cand), 6)  AS prec,
-           ROUND((SELECT COUNT(*) FROM hits) * 1.0 /
-                 (SELECT COUNT(*) FROM truth), 6) AS recall
-"""
-
-
-def dedup_minhash_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Precision/recall of the MinHash-LSH candidate stage against
-    EXACT Jaccard truth, in one hash-checked row: n_true (all pairs at
-    jaccard >= 0.5, unblocked), n_cand (band-bucket collisions),
-    n_hits (their intersection), prec = hits/cand, recall = hits/true.
-    This is the surface an operator tunes bands x rows against — the
-    verified-pair golden attests only C ∩ T; this audit additionally
-    pins |C| (via the independently-frozen candidate golden,
-    scripts/gen_dedup_goldens.py) and |T|, so a banding drift that
-    admits junk or silently drops borderline pairs flips the hash even
-    when the verified output happens to survive.
-
-    Truth is computed by the inverted-index co-occurrence plan (the
-    dedup_ngram_jaccard machinery, minus its lang/length blocking —
-    LSH has neither, so its recall is judged on the plain threshold
-    set): pairs sharing >= 1 shingle get |a ∩ b| from a groupBy count,
-    df-capped postings guard the hot-shingle blowup with exact
-    add-back. 100 TB shape: both legs are the already-audited LSH and
-    inverted-index plans sharing ONE cached doc-level shingle frame;
-    the final frame is three bounded counts cross-joined (each side a
-    broadcast 1-row aggregate).
-
-    Rejected A/B (r13, measured): persisting the EXPLODED posting
-    table h-repartitioned (the ngram recipe) read 75-120 s at sf1 vs
-    13.3 s for this shape — the cached HashPartitioning(h) satisfies
-    the unblocked self-join's distribution, so Spark plans NO exchange
-    under it and AQE cannot skew-split the collision-heavy partitions
-    (15.9 M collision rows funneled through 32 cache partitions).
-    ngram tolerates the same recipe only because its lang/bucket
-    blocking bounds per-partition collisions; the UNBLOCKED join needs
-    the exchange to exist so AQE can re-plan it."""
-    sh = _fresh_persist(
-        "mhq_shingles",
-        _hashed_shingle_table(spark, sf_dir).select("doc_id", "sh"),
-        StorageLevel.MEMORY_AND_DISK,
-    )
-    post = sh.select("doc_id", F.explode("sh").alias("h"))
-    cand = _lsh_candidates(post)
-
-    # exact truth via posting co-occurrence (no blocking)
-    ns = sh.select("doc_id", F.size("sh").alias("n_sh"))
-    hot = _capped_census("mhq_census", post, NGRAM_DF_CAP)
-    cold = post if hot is None else post.join(F.broadcast(hot), "h", "left_anti")
-    a, b = cold.alias("a"), cold.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.h") == F.col("b.h"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter_cold"))
-        .join(
-            ns.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "na"),
-            "id_a",
-        )
-        .join(
-            ns.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "nb"),
-            "id_b",
-        )
-    )
-    if hot is not None:
-        pairs, hot_common = _with_hot_addback(
-            pairs, _hot_doc_arrays(post.select("doc_id", "h"), hot)
-        )
-        inter = F.col("inter_cold") + hot_common
-    else:
-        inter = F.col("inter_cold")
-    jac = inter / (F.col("na") + F.col("nb") - inter)
-    truth = pairs.filter(jac >= 0.5).select("id_a", "id_b")
-
-    hits = cand.join(truth, ["id_a", "id_b"])
-    # three bounded 1-row aggregates stitched by broadcast cross joins
-    n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true"))
-    n_cand = cand.agg(F.count(F.lit(1)).cast("bigint").alias("n_cand"))
-    n_hits = hits.agg(F.count(F.lit(1)).cast("bigint").alias("n_hits"))
-    return (
-        n_true.crossJoin(F.broadcast(n_cand))
-        .crossJoin(F.broadcast(n_hits))
-        .select(
-            "n_true",
-            "n_cand",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_cand"), 6).alias("prec"),
-            F.round(F.col("n_hits") / F.col("n_true"), 6).alias("recall"),
-        )
-    )
 
 
 @spark_query(

@@ -34,23 +34,6 @@ from overturelink_data_pipeline_spark.session import (
     read_table,
 )
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("kind", T.StringType()),  # image | audio | video
-        T.StructField("payload", T.BinaryType()),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("content_type", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                ]
-            ),
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -612,155 +595,3 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("id_a", "id_b")
     )
 
-
-# ---------------------------------------------------------------------------
-# STAGED for r14 (the r12/r13 staging precedent): audio QC — the
-# windowed silence/clipping screen a speech pipeline runs before
-# transcription or training. Unregistered: the registry sits at the
-# 100-query ceiling; tests/test_round13_fixes.py runs the local
-# replica of the driver gate against this oracle.
-# ---------------------------------------------------------------------------
-
-#: windows per clip: 1 + n_bytes % 13 (1..13, varies per clip but is
-#: metadata-derivable, so the oracle never runs the kernel)
-AUDIO_QC_WINDOW_MOD = 13
-#: a window is silence when mean sample energy < this (compared on the
-#: EXACT rational sq = Σ(b-128)² / 262144, never on the sqrt)
-AUDIO_QC_SILENCE_SQ = 0.1225  # rms < 0.35
-#: a window clips when any |sample| >= 126/128 (integer-exact compare)
-AUDIO_QC_CLIP_LEVEL = 126
-
-AUDIO_QC_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_windows", T.IntegerType()),
-        T.StructField("n_silence", T.IntegerType()),
-        T.StructField("n_clipping", T.IntegerType()),
-        T.StructField("rms_mean", T.DoubleType()),
-    ]
-)
-
-
-def _fake_audio_window(payload: bytes, idx: int) -> list[int]:
-    """STUB — stands in for a librosa/soundfile frame read (not
-    available in this container): 16 deterministic byte 'samples' per
-    window from md5(payload + ':' + idx). A real deployment replaces
-    ONLY this function; windowing, QC math, and the Arrow plumbing are
-    the production path."""
-    digest = hashlib.md5(payload + b":" + str(idx).encode()).digest()
-    return list(digest)
-
-
-def audio_qc(df: DataFrame) -> DataFrame:
-    """mapInPandas windowed QC over audio payloads: per clip, walk
-    1 + n_bytes % 13 windows, 16 samples each (s = (b-128)/128), and
-    aggregate IN-KERNEL to one row per clip — n_silence (window energy
-    below the silence floor), n_clipping (any sample at/over the clip
-    level), rms_mean (unrounded; callers round). Streaming Arrow
-    batches, no per-window row fan-out leaves the task."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf[pdf["payload"].notna()].reset_index(drop=True)
-            if pdf.empty:
-                continue
-            out = {
-                "media_id": pdf["media_id"],
-                "n_windows": [],
-                "n_silence": [],
-                "n_clipping": [],
-                "rms_mean": [],
-            }
-            for payload in pdf["payload"]:
-                payload = bytes(payload)
-                n_w = 1 + len(payload) % AUDIO_QC_WINDOW_MOD
-                n_sil = n_clip = 0
-                rms_sum = 0.0
-                for w in range(n_w):
-                    bs = _fake_audio_window(payload, w)
-                    # Σ(b-128)² / 262144 is an exact binary rational —
-                    # the oracle re-derives it bit-identically from md5
-                    # hex digits, so thresholds compare on exact values
-                    sq = sum((b - 128) * (b - 128) for b in bs) / 262144.0
-                    if sq < AUDIO_QC_SILENCE_SQ:
-                        n_sil += 1
-                    if max(abs(b - 128) for b in bs) >= AUDIO_QC_CLIP_LEVEL:
-                        n_clip += 1
-                    rms_sum += sq**0.5
-                out["n_windows"].append(n_w)
-                out["n_silence"].append(n_sil)
-                out["n_clipping"].append(n_clip)
-                out["rms_mean"].append(rms_sum / n_w)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=AUDIO_QC_SCHEMA)
-
-
-def _audio_qc_oracle() -> str:
-    """DuckDB mirror: md5 hex-digit byte extraction (the _BYTE macro the
-    phash oracle established), windows unnested from the same
-    metadata-derived count, thresholds compared on the identical exact
-    rationals."""
-    b = [  # byte i of the window digest, 0-255
-        _BYTE.format(p=2 * i + 1) for i in range(16)
-    ]
-    sq = "(" + " + ".join(f"pow({x} - 128, 2)" for x in b) + ") / 262144.0"
-    pk = "greatest(" + ", ".join(f"abs(({x}) - 128)" for x in b) + ")"
-    return f"""
-    WITH audio AS (
-      SELECT doc_id AS media_id, text
-      FROM documents WHERE doc_id % 3 = 1
-    ),
-    w AS (
-      SELECT media_id, text,
-             1 + (strlen(text) % {AUDIO_QC_WINDOW_MOD}) AS n_windows
-      FROM audio
-    ),
-    wins AS (
-      SELECT media_id, n_windows,
-             md5(text || ':' || CAST(i AS VARCHAR)) AS h
-      FROM w, unnest(generate_series(0, n_windows - 1)) u(i)
-    ),
-    scored AS (
-      SELECT media_id, n_windows, {sq} AS sq, {pk} AS pk
-      FROM wins
-    )
-    SELECT media_id,
-           CAST(ANY_VALUE(n_windows) AS INT) AS n_windows,
-           CAST(SUM(CASE WHEN sq < {AUDIO_QC_SILENCE_SQ} THEN 1 ELSE 0 END)
-                AS INT) AS n_silence,
-           CAST(SUM(CASE WHEN pk >= {AUDIO_QC_CLIP_LEVEL} THEN 1 ELSE 0 END)
-                AS INT) AS n_clipping,
-           ROUND(SUM(sqrt(sq)) / ANY_VALUE(n_windows), 6) AS rms_mean
-    FROM scored
-    GROUP BY media_id
-    ORDER BY media_id
-    """
-
-
-MM_AUDIO_QC_ORACLE = _audio_qc_oracle()
-
-
-def mm_audio_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio QC report: the media table's audio clips → windowed
-    silence/clipping screen (audio_qc kernel) → one row per clip,
-    rounded for hashability. The query a speech-data pipeline runs to
-    drop dead air and clipped takes before paying for transcription.
-
-    100 TB shape: kind pushdown prunes the scan to the audio third;
-    the kernel is a single mapInPandas pass emitting one row per clip
-    (per-window state never leaves the task); the only exchange is the
-    final ORDER BY. Swapping the stub window reader for librosa changes
-    nothing in the plan."""
-    media = media_fixture(spark, sf_dir).filter(F.col("kind") == "audio")
-    return (
-        audio_qc(media.select("media_id", "payload"))
-        .select(
-            "media_id",
-            "n_windows",
-            "n_silence",
-            "n_clipping",
-            F.round("rms_mean", 6).alias("rms_mean"),
-        )
-        .orderBy("media_id")
-    )

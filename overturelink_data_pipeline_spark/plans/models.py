@@ -9,7 +9,7 @@ polygon bytes, which ride in UDF closures as broadcast-sized values).
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 
@@ -82,13 +82,3 @@ def load_countries(path: str) -> dict[str, Country]:
     with open(path) as f:
         rows = json.load(f)
     return {c.iso2: c for c in (Country.from_dict(r) for r in rows)}
-
-
-@dataclass
-class CompiledLayers:
-    """Multi-layer result (reference source.py:767,938-964): dict of
-    layer-name → DataFrame plus the options that produced it."""
-
-    layers: dict = field(default_factory=dict)
-    query: Query | None = None
-    country: Country | None = None

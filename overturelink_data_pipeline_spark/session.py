@@ -17,8 +17,8 @@ Single place that encodes the engine's execution-model choices:
   data model filters/projects struct fields (``bbox.xmin``,
   ``names.primary``) and those must reach the parquet row-group stats
   (reference relies on the same pushdown, source.py:496-507);
-- Python workers fork from the engine's daemon entry (``pyworker.py``)
-  and import this checkout whatever the cwd (docs/OPERATIONS.md §12).
+- Python workers import this checkout whatever the cwd
+  (docs/OPERATIONS.md §12).
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def region_from_url(base_url: str, default: str = "us-west-2") -> str:
         region = "-".join(parts[-3:])
         # multi-token partitions (us-gov-west-1, us-iso-east-1): the
         # 3-token slice would yield the nonexistent 'gov-west-1' and
-        # bake a broken endpoint into the s3a conf (review r10)
+        # bake a broken endpoint into the s3a conf
         if parts[-3] in ("gov", "iso", "isob", "isoe", "isof") and len(parts) >= 4:
             region = "-".join(parts[-4:])
         return region
@@ -153,11 +153,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
-        # Python workers fork from the engine's daemon entry, which keeps
-        # each task from re-reading pyspark.zip (see pyworker.py)
-        .config(
-            "spark.python.daemon.module", "overturelink_data_pipeline_spark.pyworker"
-        )
     )
     if s3 or os.environ.get("SPARK_GRAFT_S3") == "1":
         for k, v in s3a_conf(
@@ -165,8 +160,8 @@ def get_spark(
         ).items():
             builder = builder.config(k, v)
     conf = dict(extra_conf or {})
-    # workers import this checkout (the daemon entry, the UDF modules)
-    # whatever the cwd; a caller's entries follow it
+    # workers import the UDF modules from this checkout whatever the
+    # cwd; a caller's entries follow it
     conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
         p for p in (_PACKAGE_PARENT, conf.get("spark.executorEnv.PYTHONPATH")) if p
     )

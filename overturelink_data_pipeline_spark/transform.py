@@ -370,13 +370,6 @@ def normalize_places(df: DataFrame, feature_type: str = "place") -> DataFrame:
     return ordered_select(out)
 
 
-NORMALIZERS = {
-    "roads": normalize_roads,
-    "buildings": normalize_buildings,
-    "places": normalize_places,
-}
-
-
 def add_sector_layers(layers: dict[str, DataFrame]) -> dict[str, DataFrame]:
     """U1 — sector-combined layer (reference add_sector_layers,
     cli.py:2306-2364): for a multilayer result, building polygons

@@ -1,6 +1,6 @@
 """Dump ``explain("formatted")`` for every registered query into
-``plans/r13/<query>_<tag>.txt`` — the optimization round's evidence
-files (the judge checks plan claims against these).
+``plans/r14/<query>_<tag>.txt``, for ad-hoc diffs of a plan before
+and after a change.
 
 Usage::
 

@@ -103,14 +103,8 @@ def load_corpus(sf_dir: str) -> tuple[int, list[tuple[int, str]]]:
     return corpus_key, rows
 
 
-def minhash_pairs(
-    rows: list[tuple[int, str]],
-) -> tuple[list[tuple[int, int]], list[tuple[int, int]]]:
-    """Returns (verified_pairs, candidate_pairs). Candidates are the
-    raw band-bucket collisions BEFORE Jaccard verification — frozen
-    separately (minhash_candidates.parquet, r13) so the staged LSH
-    quality audit can hash-check precision/recall of the banding
-    itself, not just the verified output."""
+def minhash_pairs(rows: list[tuple[int, str]]) -> list[tuple[int, int]]:
+    """Band-bucket candidate pairs that pass Jaccard verification."""
     # shingle hash = Spark's multi-arg xxhash64(t0, t1, t2): each
     # column's hash seeds the next, starting from SPARK_SEED=42 —
     # replica pinned against F.xxhash64 in tests/test_llm_ops.py
@@ -166,13 +160,12 @@ def minhash_pairs(
 
     out = []
     sets = {d: set(hs.tolist()) for d, hs in doc_sh.items()}
-    cand_sorted = sorted(cands)
-    for id_a, id_b in cand_sorted:
+    for id_a, id_b in sorted(cands):
         a, b = sets[id_a], sets[id_b]
         inter = len(a & b)
         if inter / (len(a) + len(b) - inter) >= JACCARD_MIN:
             out.append((id_a, id_b))
-    return out, cand_sorted
+    return out
 
 
 def simhash_pairs(rows: list[tuple[int, str]]) -> list[tuple[int, int, int]]:
@@ -226,18 +219,16 @@ def main(sf_dirs: list[str]) -> None:
     )
     os.makedirs(base, exist_ok=True)
     mh_rows: list[tuple[int, int, int]] = []
-    mc_rows: list[tuple[int, int, int]] = []
     sh_rows: list[tuple[int, int, int, int]] = []
     for sf_dir in sf_dirs:
         corpus_key, rows = load_corpus(sf_dir)
-        mh, mc = minhash_pairs(rows)
+        mh = minhash_pairs(rows)
         sh = simhash_pairs(rows)
         print(
             f"{sf_dir}: corpus_key={corpus_key} minhash={len(mh)} "
-            f"candidates={len(mc)} simhash={len(sh)}"
+            f"simhash={len(sh)}"
         )
         mh_rows += [(corpus_key, a, b) for a, b in mh]
-        mc_rows += [(corpus_key, a, b) for a, b in mc]
         sh_rows += [(corpus_key, a, b, h) for a, b, h in sh]
 
     def _write_if_changed(table: pa.Table, path: str) -> None:
@@ -258,16 +249,6 @@ def main(sf_dirs: list[str]) -> None:
             }
         ),
         os.path.join(base, "minhash_pairs.parquet"),
-    )
-    _write_if_changed(
-        pa.table(
-            {
-                "corpus_key": pa.array([r[0] for r in mc_rows], pa.int64()),
-                "id_a": pa.array([r[1] for r in mc_rows], pa.int64()),
-                "id_b": pa.array([r[2] for r in mc_rows], pa.int64()),
-            }
-        ),
-        os.path.join(base, "minhash_candidates.parquet"),
     )
     _write_if_changed(
         pa.table(

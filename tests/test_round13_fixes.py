@@ -227,54 +227,6 @@ def test_fgdb_truncation_contract_raises_explicitly(spark, sf_dir, monkeypatch):
         geospatial.sink_fgdb_audit(spark, sf_dir)
 
 
-def test_staged_minhash_quality_audit_parity(spark, sf_dir):
-    """Local replica of the driver gate for the STAGED r14 query
-    dedup_minhash_quality_audit (same compare: rows + schema + value
-    hash) — the staging pattern pipeline_geo_text_corpus followed in
-    r12. Also sanity-pins the audit's semantics: hits can exceed
-    neither leg, and the ratios are the counts' quotients."""
-    from overturelink_data_pipeline_spark.operators.dedup import (
-        DEDUP_MINHASH_QUALITY_ORACLE,
-        dedup_minhash_quality_audit,
-    )
-    from overturelink_data_pipeline_spark import testing
-
-    con = testing.duckdb_connect(sf_dir)
-    oracle = con.execute(DEDUP_MINHASH_QUALITY_ORACLE).fetchdf()
-    res = testing.compare(
-        "dedup_minhash_quality_audit",
-        dedup_minhash_quality_audit(spark, sf_dir),
-        oracle,
-    )
-    assert res.ok, res
-    row = oracle.iloc[0]
-    assert 0 < row["n_hits"] <= min(row["n_true"], row["n_cand"])
-    assert row["prec"] == round(row["n_hits"] / row["n_cand"], 6)
-    assert row["recall"] == round(row["n_hits"] / row["n_true"], 6)
-
-
-def test_staged_mm_audio_qc_parity(spark, sf_dir):
-    """Local replica of the driver gate for the STAGED r14 query
-    mm_audio_qc (rows + schema + value hash vs the DuckDB oracle), plus
-    structural pins: only audio clips appear, window counts sit in the
-    1..13 metadata-derived band, and QC counters never exceed them."""
-    from overturelink_data_pipeline_spark.operators.multimodal import (
-        AUDIO_QC_WINDOW_MOD,
-        MM_AUDIO_QC_ORACLE,
-        mm_audio_qc,
-    )
-    from overturelink_data_pipeline_spark import testing
-
-    con = testing.duckdb_connect(sf_dir)
-    oracle = con.execute(MM_AUDIO_QC_ORACLE).fetchdf()
-    res = testing.compare("mm_audio_qc", mm_audio_qc(spark, sf_dir), oracle)
-    assert res.ok, res
-    assert (oracle["media_id"] % 3 == 1).all()
-    assert oracle["n_windows"].between(1, AUDIO_QC_WINDOW_MOD).all()
-    assert (oracle["n_silence"] <= oracle["n_windows"]).all()
-    assert (oracle["n_clipping"] <= oracle["n_windows"]).all()
-
-
 def test_unsorted_minhash_pairs_same_set_as_registered_query(spark, sf_dir):
     """The r13 optimization feeds dedup_clusters / graph_pagerank_dupes
     from _minhash_verified_pairs(ordered=False) — the registered

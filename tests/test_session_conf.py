@@ -5,12 +5,16 @@ no network, no bucket access (the container is offline)."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from overturelink_data_pipeline_spark.session import (
     DEFAULT_OVERTURE_BASE_URL,
     region_from_url,
     s3a_conf,
 )
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_region_from_url():
@@ -109,8 +113,9 @@ def test_geojson_layer_tag_all_null_props(spark, tmp_path):
 
 
 def test_region_from_url_multitoken_partitions():
-    """review r10: us-gov-west-1 / us-iso-east-1 buckets used to yield
-    the nonexistent 'gov-west-1' / 'iso-east-1'."""
+    """us-gov-west-1 / us-iso-east-1 buckets keep their partition
+    token instead of yielding the nonexistent 'gov-west-1' /
+    'iso-east-1'."""
     assert region_from_url("s3://mirror-us-gov-west-1/x") == "us-gov-west-1"
     assert region_from_url("s3://mirror-us-iso-east-1/x") == "us-iso-east-1"
     assert region_from_url("s3://data-us-west-2/x") == "us-west-2"
@@ -132,17 +137,100 @@ def _worker_report(spark):
     return spark.range(1).select(report("id").alias("r")).first().r
 
 
-def test_python_workers_run_the_engine_daemon(spark):
-    """Workers fork from pyworker.py: their invalidate_caches is the
-    engine's, and they import the same package file as the driver."""
-    import importlib.util
-
+def test_python_workers_run_the_package_filter(spark):
+    """A worker that imports the package runs its invalidate_caches,
+    and imports the same package file as the driver."""
     import overturelink_data_pipeline_spark as pkg
 
     invalidate_file, pkg_file = _worker_report(spark)
-    entry = importlib.util.find_spec("overturelink_data_pipeline_spark.pyworker")
-    assert os.path.samefile(invalidate_file, entry.origin)
+    assert os.path.samefile(invalidate_file, pkg.__file__)
     assert os.path.samefile(pkg_file, pkg.__file__)
+    assert os.path.samefile(pkg.invalidate_caches.__code__.co_filename, pkg.__file__)
+
+
+def test_filter_exempts_only_pythonpath_archives(tmp_path, monkeypatch):
+    """Driver-side, no Spark: of two zips a process imported from and
+    then rewrote, the filter re-reads the one only on sys.path and
+    keeps the cached directory of the one listed in PYTHONPATH."""
+    import importlib
+    import uuid
+    import zipfile
+
+    import pytest
+
+    import overturelink_data_pipeline_spark as pkg
+
+    tag = f"exempt_{uuid.uuid4().hex}"
+    zips = {side: str(tmp_path / f"{side}.zip") for side in ("a", "b")}
+
+    def write(side, *names):
+        with zipfile.ZipFile(zips[side], "w") as z:
+            for name in names:
+                z.writestr(f"{tag}_{side}_{name}.py", "")
+
+    for side in zips:
+        write(side, "old")
+    monkeypatch.setenv("PYTHONPATH", zips["a"])
+    saved_path = list(sys.path)
+    saved_cache = dict(sys.path_importer_cache)
+    sys.path[:0] = [zips["a"], zips["b"]]
+    try:
+        for side in zips:
+            importlib.import_module(f"{tag}_{side}_old")
+            write(side, "old", "new")
+        pkg.invalidate_caches()
+        importlib.import_module(f"{tag}_b_new")
+        with pytest.raises(ModuleNotFoundError):
+            importlib.import_module(f"{tag}_a_new")
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        for name in [m for m in sys.modules if m.startswith(tag)]:
+            del sys.modules[name]
+
+
+def _run_session_script(script, cwd, pythonpath=None):
+    """Run ``script`` in a fresh interpreter from ``cwd`` with the
+    checkout as ``sys.argv[1]``, and ``PYTHONPATH`` set to
+    ``pythonpath`` (unset when None)."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    if pythonpath is not None:
+        env["PYTHONPATH"] = pythonpath
+    return subprocess.run(
+        [sys.executable, "-c", script, _REPO],
+        cwd=cwd,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+
+
+def test_plain_session_worker_runs_the_package_filter(tmp_path):
+    """A plain builder session, never touched by get_spark, runs an
+    engine UDF; a later UDF in the same worker that does not import the
+    package sees the package's invalidate_caches. Both jobs collect every
+    row: a worker whose output is cut short by ``first()`` is killed, so
+    the next job would fork a fresh one."""
+    script = (
+        "from pyspark.sql import SparkSession, functions as F\n"
+        "from overturelink_data_pipeline_spark.geo import wkb as W\n"
+        "from overturelink_data_pipeline_spark.geo.functions import st_bbox\n"
+        "spark = (SparkSession.builder.master('local[1]')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "df = spark.createDataFrame([(W.dumps(('Point', (1.0, 2.0))),)], 'g binary')\n"
+        "print('XMIN', df.select(st_bbox('g').xmin.alias('x')).collect()[0].x)\n"
+        "@F.udf('string')\n"
+        "def owner(_):\n"
+        "    import importlib\n"
+        "    return importlib.invalidate_caches.__module__\n"
+        "print('OWNER', spark.range(1).select(owner('id').alias('m')).collect()[0].m)\n"
+        "spark.stop()\n"
+    )
+    out = _run_session_script(script, tmp_path, pythonpath=_REPO)
+    assert "XMIN 1.0" in out.stdout, out.stderr[-3000:]
+    assert "OWNER overturelink_data_pipeline_spark\n" in out.stdout, out.stderr[-3000:]
 
 
 def test_added_py_file_importable_after_workers_started(spark, tmp_path):
@@ -204,10 +292,6 @@ def test_worker_rereads_a_rewritten_zip_on_invalidation(spark, tmp_path):
 def test_engine_udf_runs_from_foreign_cwd_without_pythonpath(tmp_path):
     """A session started outside the checkout, with no PYTHONPATH, runs
     an engine pandas UDF: get_spark points the workers at the package."""
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     script = (
         "import sys; sys.path.insert(0, sys.argv[1])\n"
         "from overturelink_data_pipeline_spark.session import get_spark\n"
@@ -218,13 +302,5 @@ def test_engine_udf_runs_from_foreign_cwd_without_pythonpath(tmp_path):
         "print('XMIN', df.select(st_bbox('g').xmin.alias('x')).first().x)\n"
         "spark.stop()\n"
     )
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(
-        [sys.executable, "-c", script, repo],
-        cwd=tmp_path,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=120,
-    )
+    out = _run_session_script(script, tmp_path)
     assert "XMIN 1.0" in out.stdout, out.stderr[-3000:]
