@@ -1,44 +1,30 @@
-"""Incremental-index lifecycle API — the production surface for the
-monthly-release maintenance story the tests pin.
+"""Incremental-index lifecycle: an index is built once per release as
+bucketed tables, probed with each crawl, and grown by appending crawls.
 
-The three incremental dedup modalities (exact shingles → MinHash/LSH
-signatures → embedding cells; dedup.py / similarity.py) share one
-lifecycle:
+    build(corpus)   write the index tables from scratch; the exchange is
+                    paid once, at write
+    probe(crawl)    cost ∝ crawl; the index side moves no bytes, because
+                    the bucket layout satisfies the join clustering
+    append(crawl)   admit the crawl by appending rows under the same
+                    bucket spec
 
-    release time   build(corpus)   — one-off heavy pass, persisted as
-                                     BUCKETED tables (the exchange paid
-                                     once, at write)
-    monthly        probe(crawl)    — cost ∝ crawl, index side moves
-                                     zero bytes (bucket layout satisfies
-                                     the join/cogroup clustering)
-                   append(crawl)   — admit the crawl into the index by
-                                     APPENDING rows under the same
-                                     bucket spec; append-equals-rebuild
-                                     is pinned for all three modes
-                                     (tests/test_round7_ops.py,
-                                     tests/test_round8_ops.py,
-                                     tests/test_lifecycle_api.py)
+Invariants:
 
-This module lifts the recipes that previously lived inline in
-scripts/bench_incremental.py and the lifecycle tests into a product
-API. Design rules at the 100 TB point:
+- A probe after appends equals the same probe against a rebuild over
+  the release and every appended crawl.
+- Skew guards (shingle df caps, LSH bucket caps) read per-key counts
+  from a count sidecar bucketed BY THE KEY, one row per key per
+  generation: maintenance is a row append and the current count a
+  partition-local SUM, never a corpus-wide recount.
+- Every append reuses the stored bucket spec, so new files land in the
+  same layout and probes stay exchange-free on the index side.
+- The probe merges the crawl's own keys into the stored census before
+  the cap filter: a crawl can push a key over the cap.
+- Appended and probed id sets are disjoint from the stored index;
+  overlap is an error, not a merge.
 
-- **Sidecar count tables, not recomputed censuses.** Skew guards
-  (shingle df caps, LSH bucket caps) need per-key counts over the
-  CURRENT index. Storing only the over-cap key list would make appends
-  require a full recount; storing per-key counts bucketed BY THE KEY
-  makes maintenance a row append and the current count a
-  partition-local SUM — no corpus-wide exchange ever again.
-- **Same bucket spec on every append** (``insertInto`` semantics via
-  ``mode("append").saveAsTable``): new files land in the same bucket
-  layout, so probes stay exchange-free on the index side.
-- **The probe never trusts the stored census alone**: the crawl's own
-  keys are merged in (a crawl can push a key over the cap), so probe
-  results equal a from-scratch rebuild over (index ∪ crawl) — the
-  pinned property.
-
-Reference analog: SURVEY.md §2 S4–S6's cache-then-refilter lifecycle,
-lifted from per-country GeoParquet caches to dedup indexes.
+Reference analog: the cache-then-refilter lifecycle of SURVEY.md §2
+S4–S6.
 """
 
 from __future__ import annotations
@@ -314,7 +300,7 @@ def _stamp(n, hs) -> str:
 
 def fingerprint_leg(docs: DataFrame, cols, kind: str = "fp") -> DataFrame:
     """corpus_fingerprint as a 1-row ``(kind, num, id)`` leg for a
-    _preflight_frame union — the stamp string lands under ``id`` so a
+    union with ``prepare_probe(...).checks`` — the stamp string lands under ``id`` so a
     warm caller's idempotence check rides the probe's single pre-flight
     collect instead of paying its own driver action."""
     return _fingerprint_agg(docs, cols).select(
@@ -341,19 +327,18 @@ def release_current(
 
 
 def _assert_disjoint(stored: DataFrame, incoming: DataFrame, key: str, what: str) -> None:
-    """Admission guard (ADVICE r8): every lifecycle invariant — the ns
-    union IS the full-corpus count, the shingle/assigned tables hold one
-    row per doc — holds only while appended id sets are DISJOINT from
-    the stored index. A retried monthly job or an overlapping crawl
-    would silently duplicate sidecar rows and corrupt Jaccard
-    denominators, so overlap is an error, not a merge.
+    """Admission guard: every lifecycle invariant — the side-table union
+    IS the full-corpus table, the shingle/assigned tables hold one row
+    per doc — holds only while appended id sets are DISJOINT from the
+    stored index. A retried monthly job or an overlapping crawl would
+    silently duplicate sidecar rows and corrupt Jaccard denominators,
+    so overlap is an error, not a merge.
 
     Cost: one broadcast semi-join of the (crawl-bounded) incoming ids
     against the stored table — the stored side never exchanges (the
     sidecars are bucketed by the key; the semi-join is a pruned scan).
-    The probe paths don't even pay that as a separate action: they
-    union _clash_frame into the census short-circuit and collect both
-    in one job (r10 warm-path shave)."""
+    The text indexes do not pay it as a separate action: they union
+    _clash_frame into their pre-flight collect."""
     clash = _clash_frame(stored, incoming, key).collect()
     if clash:
         _raise_overlap(sorted(r[key] for r in clash), key, what)
@@ -381,7 +366,7 @@ def _raise_overlap(ids: list, key: str, what: str) -> None:
 
 
 #: Table-property key holding the stored-census upper bound on a count
-#: sidecar (see _preflight_verdict).
+#: sidecar (see PendingProbe.finish).
 _UB_PROP = "overturelink.ub"
 
 
@@ -397,9 +382,8 @@ def _write_ub(spark: SparkSession, table: str, ub: int) -> None:
 
 def _read_ub(spark: SparkSession, table: str) -> int | None:
     """The persisted upper bound, or None when the property is absent
-    (an index built by pre-r10 code) — callers then take the exact
-    path, so a missing bound only costs time, never correctness.
-    Driver-only catalog lookup, no job."""
+    — callers then take the exact path, so a missing bound only costs
+    time, never correctness. Driver-only catalog lookup, no job."""
     if not spark.catalog.tableExists(table):
         return None
     for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect():
@@ -409,15 +393,12 @@ def _read_ub(spark: SparkSession, table: str) -> int | None:
 
 
 def _exact_max(
-    spark: SparkSession, sidecar: str, keys: list[str],
-    generation: DataFrame | None = None,
+    spark: SparkSession, sidecar: str, keys, generation: DataFrame | None = None
 ) -> int:
-    """Max merged per-key count: of one generation's rows (postings /
-    band rows — each row counts 1) when ``generation`` is given, else
-    of the whole stored count sidecar (SUM of its per-append rows,
-    partition-local on the bucket layout). One implementation for both
-    index families (review r10 — the per-class copies had to be kept
-    in sync by hand)."""
+    """Max merged per-key count: of one generation's keyed rows (each
+    row counts 1) when ``generation`` is given, else of the whole
+    stored count sidecar (SUM of its per-append rows, partition-local
+    on the bucket layout)."""
     if generation is None:
         frame = spark.table(sidecar).groupBy(*keys).agg(F.sum("n").alias("n"))
     else:
@@ -426,298 +407,270 @@ def _exact_max(
     return int(row[0]) if row and row[0] is not None else 0
 
 
-def _settle_ub_after_append(idx, sidecar: str, keys: list[str], ub: int | None) -> None:
-    """After the append's data writes landed: derive the exact bound if
-    none was stored before (pre-r10 index — one bucket-local agg,
-    maintenance-time), then run the bound-based auto-compact check."""
-    if ub is None:
-        ub = _exact_max(idx.spark, sidecar, keys)
-        _write_ub(idx.spark, sidecar, ub)
-    _auto_compact(idx, sidecar, ub)
-
-
-def _auto_compact(idx, sidecar: str, ub: int) -> None:
-    """Bound-based auto-compact shared by both index families — see
-    PostingIndex.auto_compact_ub_frac for the rationale."""
-    frac = idx.auto_compact_ub_frac
-    if frac is None or ub <= idx.cap * frac:
-        return
-    idx.compact()
-    if (_read_ub(idx.spark, sidecar) or 0) > idx.cap * frac:
-        idx.auto_compact_ub_frac = None  # true max, not drift
-
-
-def _preflight_frame(dmax: DataFrame, clash: DataFrame | None) -> DataFrame:
-    """The probe's pre-flight as ONE lazy tagged-union frame
-    ``(kind, num, id)`` (r10 warm shave, VERDICT r9 ask #4): the
-    admission guard (≤5 overlap ids, kind='clash') and ``dmax`` — a
-    1-row frame with the crawl's own per-key max under column ``num``
-    — collect together in a single driver action. The stored-side
-    UPPER BOUND ``ub`` is a table property read driver-side for free
-    (_read_ub); _preflight_verdict combines them: every merged count
-    is ≤ ub + dmax, so ``ub + dmax <= cap`` proves the hot set EMPTY
-    without scanning or aggregating the stored count sidecar at all.
-    Callers may union extra 1-row legs (distinct ``kind`` values) so
-    their own decisions ride the same action."""
-    checks = dmax.select(
-        F.lit("dmax").alias("kind"),
-        F.col("num").cast("long").alias("num"),
-        F.lit(None).cast("string").alias("id"),
-    )
-    if clash is not None:
-        checks = checks.unionByName(
-            clash.select(
-                F.lit("clash").alias("kind"),
-                F.lit(None).cast("long").alias("num"),
-                F.col(clash.columns[0]).cast("string").alias("id"),
-            )
-        )
-    return checks
-
-
-def _preflight_dmax(rows: list, key: str, what: str) -> int:
-    """Consume collected _preflight_frame rows: raise on overlap,
-    return the delta-side per-key max (0 for an empty delta). The one
-    implementation behind both the probe verdict and the fused append
-    preflight (see PostingIndex.append)."""
+def _preflight_dmax(rows: list, what: str) -> int:
+    """Consume collected pre-flight rows (_CountedIndex._preflight):
+    raise on a doc_id overlap, return the crawl's per-key max (0 for an
+    empty crawl)."""
     clash_ids = [r["id"] for r in rows if r["kind"] == "clash"]
     if clash_ids:
         # the union leg carries ids as strings; report them native so
         # the error matches _assert_disjoint's (numeric ids sort
-        # numerically, not lexicographically — review r10)
+        # numerically, not lexicographically)
         try:
             clash_ids = [int(v) for v in clash_ids]
         except (TypeError, ValueError):
             pass
-        _raise_overlap(sorted(clash_ids), key, what)
+        _raise_overlap(sorted(clash_ids), "doc_id", what)
     return next((r["num"] for r in rows if r["kind"] == "dmax"), None) or 0
 
 
-def _preflight_verdict(
-    rows: list, ub: int | None, cap: int, key: str, what: str
-) -> bool:
-    """Consume collected _preflight_frame rows + the driver-side ub:
-    raise on overlap, return ``may_have_hot``. False skips the census
-    merge entirely (the natural-corpus warm path); True — bound
-    failed, bound property missing (pre-r10 index), or an over-cap
-    crawl — sends the caller to the exact census merge, the pre-r10
-    path, so the bound only ever SKIPS work, never changes the hot
-    set. The ub is conservative: exact at build/compact/repair,
-    ``+= max(delta counts)`` per append, so it only drifts upward —
-    a skip is always sound."""
-    dmx = _preflight_dmax(rows, key, what)
-    return ub is None or ub + dmx > cap
+def _table(suffix: str) -> property:
+    return property(lambda self: f"{self.name}_{suffix}")
 
 
 @dataclass
 class PendingProbe:
-    """A probe split at its one driver action — see
-    PostingIndex.prepare_probe. ``checks`` is lazy; ``finish`` takes
-    the rows collected from it (or from any union-extended version of
-    it) and returns the result plan."""
+    """A probe split at its one driver action: ``checks`` is the lazy
+    pre-flight frame (see _CountedIndex.prepare_probe); ``finish``
+    takes the rows collected from it (or from any union-extended
+    version of it) and returns the result plan."""
 
-    _idx: "PostingIndex"
-    _delta_post: DataFrame
+    _idx: "_CountedIndex"
+    _crawl: DataFrame
+    _delta: DataFrame
     _delta_counts: DataFrame
     checks: DataFrame
     _ub: int | None
 
     def finish(self, rows: list, tau: float = 0.5) -> DataFrame:
-        return self._idx._finish_probe_plan(
-            self._delta_post, self._delta_counts, rows, self._ub, tau
+        idx, delta, counts = self._idx, self._delta, self._delta_counts
+        spark, keys = idx.spark, list(idx.KEYS)
+        dmax = _preflight_dmax(rows, f"{idx._label}.probe")
+        # Every merged count is ≤ ub + dmax, so a bound within the cap
+        # proves the hot set empty without reading the count sidecar
+        # (the natural-corpus warm path). The bound is exact at
+        # build/compact/repair and grows by each append's max, so it
+        # only drifts upward and a skip is always sound; a missing
+        # bound takes the exact census.
+        hot_keys = None
+        if self._ub is None or self._ub + dmax > idx.cap:
+            # Exact census merge: current per-key counts = stored
+            # sidecar rows + crawl rows. NOT a union-then-groupBy, which
+            # would discard the sidecar's bucket layout and re-exchange
+            # the whole count table per probe: the stored side
+            # aggregates partition-local on its buckets, the
+            # (crawl-bounded) crawl counts broadcast-join in, and keys
+            # the crawl alone pushes over the cap come from the second
+            # leg. EAGER: a lazy census (broadcast build side + AQE
+            # empty propagation) measured 5.2 → 9.9 s per invocation at
+            # sf1, and restricting the stored agg to the crawl's keys by
+            # a broadcast join cost more than the aggregation it saves.
+            stored = spark.table(idx._counts).groupBy(*keys).agg(
+                F.sum("n").alias("n_stored")
+            )
+            census = (
+                stored.join(F.broadcast(counts), keys, "left_outer")
+                .filter(F.col("n_stored") + F.coalesce("n", F.lit(0)) > idx.cap)
+                .select(*keys)
+                .unionByName(counts.filter(F.col("n") > idx.cap).select(*keys))
+                .dropDuplicates(keys)
+            )
+            # natural corpora have no over-cap key: skip both anti-joins
+            if census.head(1):
+                hot_keys = census
+        index = spark.table(idx._data)
+        cold_index, cold_delta = (
+            f if hot_keys is None else f.join(F.broadcast(hot_keys), keys, "left_anti")
+            for f in (index, delta)
         )
-
-
-def _compact_counts(spark: SparkSession, table: str, keys: list[str]) -> None:
-    """Rewrite a count sidecar as ONE row per key under the SAME bucket
-    spec (the stored table's own count): every append adds a row per
-    key per crawl, so after many monthly appends the probe's
-    bucket-local SUM scans rows ∝ appends×keys. The aggregation is
-    partition-local on the bucket layout (groupBy ⊆ bucket keys), so
-    compaction itself never exchanges; the rewrite goes through a temp
-    table + catalog rename because Spark refuses to overwrite a table
-    it is reading. The drop→rename window is the non-atomic step.
-    Recovery (both crash scopes handled in code):
-
-    - **Same-process retry** (an exception between DROP and RENAME):
-      the catalog still knows ``{table}_compact_tmp`` but not
-      ``table`` — the aggregated rows are complete, so finish the
-      RENAME and return instead of failing at ``spark.table(table)``.
-    - **Fresh process after a crash**: the per-process catalog knows
-      NEITHER name, but the orphaned tmp *directory* survives in the
-      warehouse where ``DROP TABLE IF EXISTS`` cannot see it, and any
-      future compact would die with LOCATION_ALREADY_EXISTS. The
-      ``_clean_orphan_location`` call below deletes it. (The index
-      itself is equally catalog-invisible in that process — exists()
-      is False and the caller rebuilds — so the orphan is never the
-      only copy of live data.)"""
-    tmp = f"{table}_compact_tmp"
-    if spark.catalog.tableExists(tmp) and not spark.catalog.tableExists(table):
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-        return
-    spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-    _clean_orphan_location(spark, tmp)
-    agg = spark.table(table).groupBy(*keys).agg(F.sum("n").alias("n"))
-    agg.write.bucketBy(_stored_buckets(spark, table), *keys).mode(
-        "overwrite"
-    ).saveAsTable(tmp)
-    spark.sql(f"DROP TABLE {table}")
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+        # The full-corpus side table: the stored doc set and the crawl's
+        # are disjoint (guarded), so a plain union IS the total — a
+        # dropDuplicates would exchange the whole side table per probe
+        # to remove rows that cannot exist.
+        side = spark.table(idx._side).unionByName(idx._side_rows(self._crawl, delta))
+        # Crawl-vs-crawl matches WITHOUT moving the corpus: a union of
+        # the crawl into the index side would discard the bucket
+        # layout and re-exchange the stored corpus whenever the crawl
+        # is too big to broadcast. Index matches join the bucketed
+        # table (only the crawl side may shuffle), crawl-crawl matches
+        # come from a crawl-bounded self-probe, and the union of the two
+        # legs IS the full pair set (a match's rows live wholly on one
+        # side). The legs union raw so verification runs once.
+        pairs = idx._leg(cold_index, cold_delta).unionByName(
+            idx._leg(cold_delta, cold_delta)
+        )
+        hot = None if hot_keys is None else (index.unionByName(delta), hot_keys)
+        return idx._verify(pairs, side, hot, tau)
 
 
 @dataclass
-class PostingIndex:
-    """Exact-shingle posting index: ``{name}_post`` (doc_id, h;
-    bucketBy(h)) + ``{name}_ns`` (per-doc distinct shingle counts;
-    bucketBy(doc_id)) + ``{name}_hcount`` (per-key posting counts;
-    bucketBy(h) — the skew-guard sidecar).
+class _CountedIndex:
+    """The lifecycle shared by the two text indexes: three bucketed
+    tables under ``name`` — the data table of keyed rows (bucketBy the
+    key, the probe's join side), a per-doc side table (bucketBy
+    doc_id) and a per-key count sidecar (bucketBy the key — the skew
+    guard's census, one row per key per generation).
 
-    probe() = dedup_incremental's semantics against the stored index:
-    per crawl doc, every index-or-crawl doc sharing ≥1 non-hot shingle
-    and verifying at Jaccard ≥ tau, one row per ordered (new, match)
-    pair.
+    A subclass states its ``KEYS``, which tables are ``_data`` /
+    ``_side`` / ``_counts``, how docs become keyed rows (``_rows``) and
+    side rows (``_side_rows``), one probe leg (``_leg``), the pair
+    verification (``_verify``; its ``hot`` is None or the pair of all
+    keyed rows and the hot keys), and its ``reconcile``/``repair``.
 
-    ``guard_overlap`` (default on) rejects crawls whose doc_ids already
-    exist in the index — see _assert_disjoint. Durability: the postings
-    table is the source of truth; if a build/append dies between its
-    three write jobs the sidecars lag it — ``reconcile()`` detects the
-    drift and ``repair()`` rewrites both sidecars from the postings
-    (the documented recovery path, ADVICE r8)."""
+    Durability: the data table is the source of truth. A build or append
+    that dies between its three write jobs leaves the sidecars behind
+    it; ``reconcile()`` detects the drift and ``repair()`` rewrites the
+    sidecars it can from the data table."""
 
     spark: SparkSession
     name: str
-    cap: int = field(default_factory=lambda: NGRAM_DF_CAP)
-    guard_overlap: bool = True
+    cap: int
     #: append() auto-compacts when the drifted pre-flight bound exceeds
     #: this fraction of ``cap`` (None disables). The trigger is
     #: BOUND-based, not row-count-based, from the 24-append study
-    #: (BENCH_SF1.md r10): probe wall is FLAT at 4× sidecar bloat while
-    #: the ub bound holds (the r10 pre-flight never scans the sidecar
-    #: then), so compacting on rows would be wasted maintenance — the
-    #: one channel that degrades probes is ub drift (+= per-append max)
-    #: crossing cap and flipping every probe to the exact census over
-    #: the bloated sidecar. Compacting re-tightens ub to the exact max;
-    #: if the EXACT max already exceeds the threshold (a genuinely hot
-    #: corpus, not drift), auto-compact disables itself on this
+    #: (BENCH_SF1.md): probe wall is FLAT at 4× sidecar bloat while the
+    #: bound holds (the pre-flight never scans the sidecar then), so
+    #: compacting on rows would be wasted maintenance — the one channel
+    #: that degrades probes is bound drift (+= per-append max) crossing
+    #: cap and flipping every probe to the exact census over the
+    #: bloated sidecar. Compacting re-tightens the bound to the exact
+    #: max; if the EXACT max already exceeds the threshold (a genuinely
+    #: hot corpus, not drift), auto-compact disables itself on this
     #: instance — compaction cannot reset a true maximum, and in that
     #: regime the exact-path probes are the correct cost.
     auto_compact_ub_frac: float | None = 0.75
 
     @property
-    def _post(self) -> str:
-        return f"{self.name}_post"
+    def _label(self) -> str:
+        return f"{type(self).__name__}({self.name})"
 
     @property
-    def _ns(self) -> str:
-        return f"{self.name}_ns"
-
-    @property
-    def _hcount(self) -> str:
-        return f"{self.name}_hcount"
+    def _tables(self) -> tuple[str, str, str]:
+        return self._data, self._side, self._counts
 
     @property
     def buckets(self) -> int:
         """The stored bucket count, derived from the input size at
         build() and shared by all three tables."""
-        return _stored_buckets(self.spark, self._post)
+        return _stored_buckets(self.spark, self._data)
 
     def exists(self) -> bool:
         """All index tables present in the catalog — the guard a
         stamped caller pairs with release_stamp before skipping a
         build (a matching stamp with dropped tables must rebuild)."""
-        return all(
-            self.spark.catalog.tableExists(t)
-            for t in (self._post, self._ns, self._hcount)
+        return all(self.spark.catalog.tableExists(t) for t in self._tables)
+
+    def _key_counts(self, rows: DataFrame) -> DataFrame:
+        return rows.groupBy(*self.KEYS).agg(F.count(F.lit(1)).alias("n"))
+
+    def _aligned_rows(self, what: str, docs: DataFrame, n: int) -> DataFrame:
+        # persisted ALREADY bucket-aligned: the data write lands one
+        # file per bucket, and the count groupBy is partition-local on
+        # the same layout
+        return _fresh_persist(
+            f"{self.name}_{what}", _bucket_aligned(self._rows(docs), n, *self.KEYS)
         )
 
-    def build(self, docs: DataFrame) -> "PostingIndex":
-        """Release-time build: write all three sidecars from scratch,
+    def build(self, docs: DataFrame) -> "_CountedIndex":
+        """Release-time build: write all three tables from scratch,
         bucketed by a count derived from ``docs``' input bytes
-        (_derived_buckets). The postings frame is persisted ONCE so the
-        three write jobs share one tokenize/explode pass; the pre-flight
-        upper-bound aggregate MATERIALIZES the cache first, then the
-        three table writes run one after another."""
-        for t in (self._post, self._ns, self._hcount):
+        (_derived_buckets). The keyed rows are persisted ONCE so the
+        writes share one pass; the exact per-key max (the pre-flight
+        bound) runs first and materializes that cache, then the three
+        table writes run one after another."""
+        for t in self._tables:
             _clean_orphan_location(self.spark, t)
         n = _derived_buckets(docs)
-        # persisted ALREADY bucket-aligned: the postings write lands one
-        # file per bucket, and the hcount groupBy(h) below is
-        # partition-local on the same layout
-        post = _fresh_persist(
-            f"{self.name}_build_post", _bucket_aligned(_postings(docs), n, "h")
-        )
-        # exact per-key max over the fresh index (one partition-local
-        # agg) — the probe pre-flight's skip bound; running it FIRST
-        # also populates the cache the three writes below share
-        ub = _exact_max(self.spark, self._hcount, ["h"], post)
-        self._write_trio(post, n, "overwrite")
-        # stored as a table property (zero write jobs), AFTER the
-        # hcount table exists
-        _write_ub(self.spark, self._hcount, ub)
+        rows = self._aligned_rows("build", docs, n)
+        ub = _exact_max(self.spark, self._counts, self.KEYS, rows)
+        self._write(docs, rows, n, "overwrite")
+        # a table property (zero jobs), set once the count table exists
+        _write_ub(self.spark, self._counts, ub)
         return self
 
     def append(self, crawl: DataFrame) -> None:
-        """Admit a crawl: append its postings and sidecar rows under
-        the SAME bucket spec (the stored count, never re-derived from
-        the crawl) — no rebuild, no corpus-wide exchange. Current
-        per-key/per-doc counts are SUMs over appended rows,
-        partition-local on the bucket layout. The crawl's postings are
-        persisted once for the guard + three writes; see the class
-        docstring for recovery if the job dies mid-trio.
-
-        The admission guard and the generation per-key max ride ONE
-        tagged-union collect (the probe pre-flight recipe), which also
-        materializes the persisted crawl postings; the three table
-        writes then run one after another."""
+        """Admit a crawl: append its rows under the SAME bucket spec
+        (the stored count, never re-derived from the crawl) — no
+        rebuild, no corpus-wide exchange. The admission guard and the
+        crawl's per-key max ride ONE pre-flight collect, which also
+        materializes the persisted crawl rows; the three table writes
+        then run one after another."""
         n = self.buckets
-        post = _fresh_persist(
-            f"{self.name}_append_post", _bucket_aligned(_postings(crawl), n, "h")
-        )
-        clash = (
-            _clash_frame(self.spark.table(self._ns), post, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        rows = _preflight_frame(
-            post.groupBy("h")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("num")),
-            clash,
-        ).collect()
+        rows = self._aligned_rows("append", crawl, n)
         gen_max = _preflight_dmax(
-            rows, "doc_id", f"PostingIndex({self.name}).append"
+            self._preflight(rows, self._key_counts(rows)).collect(),
+            f"{self._label}.append",
         )
         # the bound drifts conservative (stored max ≤ old max + this
         # append's max; compact()/repair() re-tighten) and is written
         # BEFORE the data writes so a mid-append crash can only leave
         # it too high, never stale-low
-        prev = _read_ub(self.spark, self._hcount)
+        prev = _read_ub(self.spark, self._counts)
         ub = None if prev is None else prev + gen_max
         if ub is not None:
-            _write_ub(self.spark, self._hcount, ub)
-        self._write_trio(post, n, "append")
-        _settle_ub_after_append(self, self._hcount, ["h"], ub)
+            _write_ub(self.spark, self._counts, ub)
+        self._write(crawl, rows, n, "append")
+        self._settle_ub(ub)
 
-    def _write_trio(self, post: DataFrame, n: int, mode: str) -> None:
+    def _write(self, docs: DataFrame, rows: DataFrame, n: int, mode: str) -> None:
         # sequential on purpose: overlapping the three writes on a thread
         # pool measured a 2× loss (oversubscribed local executor)
-        post.write.bucketBy(n, "h").sortBy("h").mode(mode).saveAsTable(self._post)
-        self._write_ns(post, n, mode)
-        self._write_hcount(post, n, mode)
+        rows.write.bucketBy(n, *self.KEYS).sortBy(*self.KEYS).mode(mode).saveAsTable(
+            self._data
+        )
+        self._write_side(self._side_rows(docs, rows), n, mode)
+        self._write_counts(rows, n, mode)
 
-    def _write_ns(self, post: DataFrame, n: int, mode: str) -> None:
-        # ns changes keys (doc_id), so it aligns explicitly
-        _bucket_aligned(
-            post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")), n, "doc_id"
-        ).write.bucketBy(n, "doc_id").mode(mode).saveAsTable(self._ns)
+    def _write_side(self, side: DataFrame, n: int, mode: str) -> None:
+        # the side table changes keys (doc_id), so it aligns explicitly
+        _bucket_aligned(side, n, "doc_id").write.bucketBy(n, "doc_id").mode(
+            mode
+        ).saveAsTable(self._side)
 
-    def _write_hcount(self, post: DataFrame, n: int, mode: str) -> None:
-        # hcount's groupBy(h) inherits the caller's h-aligned layout
-        # (the persisted build/append frame, or the bucketed table read
-        # in repair()) and is already one partition per bucket
-        post.groupBy("h").agg(F.count(F.lit(1)).alias("n")).write.bucketBy(
-            n, "h"
-        ).mode(mode).saveAsTable(self._hcount)
+    def _write_counts(self, rows: DataFrame, n: int, mode: str) -> None:
+        # the groupBy inherits the caller's key-aligned layout (the
+        # persisted build/append frame, or the bucketed table read in
+        # repair()) and is already one partition per bucket
+        self._key_counts(rows).write.bucketBy(n, *self.KEYS).mode(mode).saveAsTable(
+            self._counts
+        )
+
+    def _tighten_ub(self) -> int:
+        """Store the exact stored per-key max as the bound."""
+        ub = _exact_max(self.spark, self._counts, self.KEYS)
+        _write_ub(self.spark, self._counts, ub)
+        return ub
+
+    def _settle_ub(self, ub: int | None) -> None:
+        """After an append's data writes landed: derive the exact bound
+        if none was stored before (one bucket-local agg), then compact
+        when the bound crossed ``auto_compact_ub_frac`` of the cap."""
+        if ub is None:
+            ub = self._tighten_ub()
+        frac = self.auto_compact_ub_frac
+        if frac is None or ub <= self.cap * frac:
+            return
+        self.compact()
+        if (_read_ub(self.spark, self._counts) or 0) > self.cap * frac:
+            self.auto_compact_ub_frac = None  # true max, not drift
+
+    def _preflight(self, rows: DataFrame, counts: DataFrame) -> DataFrame:
+        """The pre-flight as ONE lazy tagged-union frame ``(kind, num,
+        id)``: ≤5 doc_ids of ``rows`` already in the side table
+        (kind='clash') and the per-key max of ``counts`` (kind='dmax'),
+        collected in a single driver action."""
+        clash = _clash_frame(self.spark.table(self._side), rows, "doc_id")
+        return counts.agg(F.max("n").alias("num")).select(
+            F.lit("dmax").alias("kind"),
+            F.col("num").cast("long").alias("num"),
+            F.lit(None).cast("string").alias("id"),
+        ).unionByName(
+            clash.select(
+                F.lit("clash").alias("kind"),
+                F.lit(None).cast("long").alias("num"),
+                F.col("doc_id").cast("string").alias("id"),
+            )
+        )
 
     def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
         """(new_id, match_id, jaccard) for the crawl vs (index ∪ crawl).
@@ -727,147 +680,102 @@ class PostingIndex:
         pending = self.prepare_probe(crawl)
         return pending.finish(pending.checks.collect(), tau=tau)
 
-    def prepare_probe(self, crawl: DataFrame) -> "PendingProbe":
+    def prepare_probe(self, crawl: DataFrame) -> PendingProbe:
         """The probe split at its one driver action: ``.checks`` is the
-        lazy tagged-union pre-flight frame (admission guard + hot-skip
-        bound legs — see _probe_preflight) and ``.finish(rows)`` builds
-        the result plan from the collected rows. probe() is exactly
-        ``finish(checks.collect())``; callers with their OWN 1-row
-        decisions to make (the stamped monthly job's fingerprint +
-        stamp read) union extra legs onto ``.checks`` and collect once
-        — the whole warm invocation then costs TWO driver actions
-        (r10; kind values 'dmax'/'ub'/'clash' are reserved)."""
-        # the crawl's postings feed SIX consumers (count merge, both
-        # cold sides, ns, hot arrays, the self-probe leg) — persist the
-        # delta-bounded frame once per probe
-        # NOT bucket-aligned (unlike the writes): A/B'd — pinning the
-        # crawl to `buckets` partitions halves probe parallelism on a
-        # wide executor for no exchange saved that matters (the join
-        # re-exchanges only the crawl side, which is delta-bounded)
-        delta_post = _fresh_persist(f"{self.name}_probe_dpost", _postings(crawl))
-        # an overlapping crawl would duplicate ns rows below and
-        # corrupt every Jaccard denominator silently (ADVICE r8); the
-        # guard's ≤5-row clash frame rides the same collect as the
-        # hot-census decision — one driver action, not two
-        clash = (
-            _clash_frame(self.spark.table(self._ns), delta_post, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        delta_counts = delta_post.groupBy("h").agg(
-            F.count(F.lit(1)).alias("n_delta")
-        )
-        checks = _preflight_frame(
-            delta_counts.agg(F.max("n_delta").alias("num")), clash
-        )
+        lazy pre-flight frame (admission guard + hot-skip bound legs)
+        and ``.finish(rows)`` builds the result plan from the collected
+        rows. probe() is exactly ``finish(checks.collect())``; callers
+        with their OWN 1-row decisions to make (the stamped monthly
+        job's fingerprint) union extra legs onto ``.checks`` and collect
+        once (kind values 'dmax' and 'clash' are reserved)."""
+        # the crawl's rows feed the count merge, both cold sides, the
+        # side rows, the hot add-back and the self-probe leg — persist
+        # the crawl-bounded frame once per probe. NOT bucket-aligned
+        # (unlike the writes): pinning the crawl to `buckets`
+        # partitions halves probe parallelism on a wide executor for no
+        # exchange saved that matters (the join re-exchanges only the
+        # crawl side)
+        delta = _fresh_persist(f"{self.name}_probe", self._rows(crawl))
+        counts = self._key_counts(delta)
         return PendingProbe(
-            self, delta_post, delta_counts, checks,
-            _read_ub(self.spark, self._hcount),
+            self, crawl, delta, counts, self._preflight(delta, counts),
+            _read_ub(self.spark, self._counts),
         )
-
-    def _finish_probe_plan(
-        self,
-        delta_post: DataFrame,
-        delta_counts: DataFrame,
-        rows: list,
-        ub: int | None,
-        tau: float,
-    ) -> DataFrame:
-        spark = self.spark
-        index_post = spark.table(self._post)
-        # pre-flight verdicts from the collected rows: admission guard
-        # + the ub-bound skip. The common warm path (natural
-        # corpus, ub + crawl max well under cap) never touches the
-        # stored count sidecar — previously EVERY probe aggregated it
-        # and broadcast-joined the delta counts just to learn the hot
-        # set is empty.
-        may_have_hot = _preflight_verdict(
-            rows, ub, self.cap, "doc_id", f"PostingIndex({self.name}).probe"
-        )
-        has_hot = False
-        hot_keys = None
-        if may_have_hot:
-            # exact census merge: current per-key counts = stored
-            # sidecar rows + delta rows. NOT a union-then-groupBy: the
-            # union would discard the sidecar's bucket layout and
-            # re-exchange the whole count table per probe. Instead the
-            # stored side aggregates partition-local on its buckets
-            # and the (crawl-bounded) delta counts broadcast-join in;
-            # keys the crawl alone pushes over the cap come from the
-            # second (tiny) leg. EAGER, kept after an r9 A/B: the lazy
-            # alternative (census as broadcast build side + AQE empty
-            # propagation) measured 5.2 → 9.9 s per invocation at sf1.
-            # A rejected r10 A/B is ledgered too: restricting the
-            # stored agg to the delta's keys via an inner broadcast
-            # join measured 1.12 s vs 0.84-1.08 s for this full
-            # bucket-local agg — the broadcast probe costs more than
-            # the aggregation it saves.
-            stored = spark.table(self._hcount).groupBy("h").agg(
-                F.sum("n").alias("n_stored")
-            )
-            hot_keys = (
-                stored.join(F.broadcast(delta_counts), "h", "left_outer")
-                .filter(
-                    F.col("n_stored") + F.coalesce("n_delta", F.lit(0)) > self.cap
-                )
-                .select("h")
-                .unionByName(
-                    delta_counts.filter(F.col("n_delta") > self.cap).select("h")
-                )
-                .dropDuplicates(["h"])
-            )
-            has_hot = bool(hot_keys.head(1))
-        cold_index = (
-            index_post.join(F.broadcast(hot_keys), "h", "left_anti")
-            if has_hot
-            else index_post
-        )
-        cold_delta = (
-            delta_post.join(F.broadcast(hot_keys), "h", "left_anti")
-            if has_hot
-            else delta_post
-        )
-        # per-doc totals over the FULL corpus: the stored sidecar's doc
-        # set and the crawl's are disjoint, so union IS the total
-        ns = spark.table(self._ns).unionByName(
-            delta_post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-        )
-        # hot add-back: per-doc over-cap arrays so surviving pairs
-        # report the TRUE shared count (dedup_incremental's recipe)
-        hot = (
-            _hot_doc_arrays(index_post.unionByName(delta_post), hot_keys)
-            if has_hot
-            else None
-        )
-        # Delta-delta completeness WITHOUT moving the corpus: the
-        # registered query unions delta into the `o` side, which is
-        # fine for an in-plan index but would re-exchange the stored
-        # corpus here whenever the crawl is too big to broadcast (the
-        # union discards the bucket-derived partitioning). Instead the
-        # probe splits by where the match lives — index matches join
-        # the bucketed table (only the crawl side may shuffle),
-        # delta-delta matches come from a crawl-bounded self-probe —
-        # and the union of the two IS the full pair set (a match's
-        # postings live wholly on one side, so every pair's
-        # intersection count is complete within its leg). The legs
-        # union as RAW pair counts so the ns joins + tau filter run
-        # once — finished-leg union paid 4 broadcast stages where 2
-        # suffice (r10; the index is narrow, so broadcast-stage count
-        # dominates probe wall at bench scale).
-        pairs = _probe_pair_counts(cold_index, cold_delta).unionByName(
-            _probe_pair_counts(cold_delta, cold_delta)
-        )
-        return _finish_probe(pairs, ns, hot, tau=tau).orderBy("new_id", "match_id")
 
     def compact(self) -> None:
-        """Collapse the per-key count sidecar to one row per key (the
-        probe's bucket-local SUM then scans keys, not appends×keys).
-        ``_ns`` needs no compaction: doc sets are disjoint across
-        appends (guarded), so it is already one row per doc. Also
-        re-tightens the probe pre-flight's upper bound to the exact
-        stored max (append drift is one-directional — see append)."""
-        _compact_counts(self.spark, self._hcount, ["h"])
-        _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
+        """Rewrite the count sidecar as ONE row per key under the same
+        bucket spec (every append adds a row per key per crawl, so the
+        probe's bucket-local SUM would scan rows ∝ appends×keys), then
+        re-tighten the pre-flight bound to the exact stored max. The
+        side table needs no compaction: doc sets are disjoint across
+        appends, so it already holds one row per doc.
+
+        The aggregation is partition-local on the bucket layout; the
+        rewrite goes through a temp table + catalog rename because
+        Spark refuses to overwrite a table it is reading. The
+        drop→rename window is the non-atomic step. Recovery:
+
+        - **Same-process retry** (an exception between DROP and
+          RENAME): the catalog still knows ``{table}_compact_tmp`` but
+          not the table — the aggregated rows are complete, so finish
+          the RENAME.
+        - **Fresh process after a crash**: the per-process catalog
+          knows NEITHER name, but the orphaned tmp *directory* survives
+          in the warehouse where ``DROP TABLE IF EXISTS`` cannot see
+          it; ``_clean_orphan_location`` deletes it. (The index itself
+          is equally catalog-invisible in that process — exists() is
+          False and the caller rebuilds — so the orphan is never the
+          only copy of live data.)"""
+        spark, table = self.spark, self._counts
+        tmp = f"{table}_compact_tmp"
+        if spark.catalog.tableExists(table) or not spark.catalog.tableExists(tmp):
+            spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+            _clean_orphan_location(spark, tmp)
+            spark.table(table).groupBy(*self.KEYS).agg(
+                F.sum("n").alias("n")
+            ).write.bucketBy(_stored_buckets(spark, table), *self.KEYS).mode(
+                "overwrite"
+            ).saveAsTable(tmp)
+            spark.sql(f"DROP TABLE {table}")
+        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
+        self._tighten_ub()
+
+    def drop(self) -> None:
+        _drop(self.spark, *self._tables, f"{self._counts}_compact_tmp")
+
+
+@dataclass
+class PostingIndex(_CountedIndex):
+    """Exact-shingle posting index: ``{name}_post`` (doc_id, h;
+    bucketBy(h)) + ``{name}_ns`` (per-doc distinct shingle counts;
+    bucketBy(doc_id)) + ``{name}_hcount`` (per-key posting counts;
+    bucketBy(h)).
+
+    probe() = dedup_incremental's semantics against the stored index:
+    per crawl doc, every index-or-crawl doc sharing ≥1 non-hot shingle
+    and verifying at Jaccard ≥ tau, one row per ordered (new, match)
+    pair. ``repair()`` rewrites both sidecars from the postings."""
+
+    cap: int = NGRAM_DF_CAP
+
+    KEYS = ("h",)
+    _data = _post = _table("post")
+    _side = _ns = _table("ns")
+    _counts = _hcount = _table("hcount")
+
+    _rows = staticmethod(_postings)
+    _leg = staticmethod(_probe_pair_counts)
+
+    @staticmethod
+    def _side_rows(docs: DataFrame, post: DataFrame) -> DataFrame:
+        return post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+
+    @staticmethod
+    def _verify(pairs: DataFrame, ns: DataFrame, hot, tau: float) -> DataFrame:
+        # hot add-back: per-doc over-cap arrays so surviving pairs
+        # report the TRUE shared count (dedup_incremental's recipe)
+        hot = None if hot is None else _hot_doc_arrays(*hot)
+        return _finish_probe(pairs, ns, hot, tau=tau).orderBy("new_id", "match_id")
 
     def reconcile(self) -> dict[str, int | bool]:
         """Consistency check for a suspected partial append: both
@@ -893,248 +801,55 @@ class PostingIndex:
         one-off recovery."""
         n = self.buckets
         post = self.spark.table(self._post)
-        self._write_ns(post, n, "overwrite")
-        self._write_hcount(post, n, "overwrite")
-        _write_ub(self.spark, self._hcount, _exact_max(self.spark, self._hcount, ["h"]))
-
-    def drop(self) -> None:
-        _drop(
-            self.spark,
-            self._post,
-            self._ns,
-            self._hcount,
-            f"{self._hcount}_compact_tmp",
-        )
+        self._write_side(self._side_rows(None, post), n, "overwrite")
+        self._write_counts(post, n, "overwrite")
+        self._tighten_ub()
 
 
 @dataclass
-class BandIndex:
+class BandIndex(_CountedIndex):
     """MinHash/LSH band index: ``{name}_bands`` (doc_id, band, bucket;
     bucketBy(band, bucket)) + ``{name}_sh`` (shingle arrays for the
     exact-Jaccard verify; bucketBy(doc_id)) + ``{name}_bcount``
-    (per-(band, bucket) counts — the hot-bucket sidecar).
+    (per-(band, bucket) counts).
 
     probe() = dedup_incremental_minhash's semantics against the stored
     index: the crawl band-probes the table, candidates verify at
-    3-gram Jaccard ≥ tau, ordered (new_id, match_id) pairs.
+    3-gram Jaccard ≥ tau, ordered (new_id, match_id) pairs. ``_bands``
+    and ``_sh`` are both sources of truth: ``repair()`` rebuilds the
+    count sidecar from ``_bands``."""
 
-    ``guard_overlap`` / durability mirror PostingIndex: disjoint
-    appends are enforced against the ``_sh`` doc set (the invariant
-    that lets probe() union the shingle sidecar without a corpus-wide
-    dropDuplicates exchange); ``_bands`` + ``_sh`` are the source of
-    truth and ``repair()`` rebuilds the count sidecar from ``_bands``
-    after a partial append."""
+    cap: int = BAND_BUCKET_CAP
 
-    spark: SparkSession
-    name: str
-    cap: int = field(default_factory=lambda: BAND_BUCKET_CAP)
-    guard_overlap: bool = True
-    #: bound-based auto-compact — see PostingIndex.auto_compact_ub_frac
-    auto_compact_ub_frac: float | None = 0.75
+    KEYS = ("band", "bucket")
+    _data = _bands = _table("bands")
+    _side = _sh = _table("sh")
+    _counts = _bcount = _table("bcount")
 
-    @property
-    def _bands(self) -> str:
-        return f"{self.name}_bands"
+    @staticmethod
+    def _rows(docs: DataFrame) -> DataFrame:
+        return _band_table(minhash_signatures_agg(_postings(docs)))
 
-    @property
-    def _sh(self) -> str:
-        return f"{self.name}_sh"
+    @staticmethod
+    def _side_rows(docs: DataFrame, bands: DataFrame) -> DataFrame:
+        # the shingle-ARRAY frame comes from the docs, not from the
+        # exploded postings (never explode the aliased array)
+        return shingle_table(docs)
 
-    @property
-    def _bcount(self) -> str:
-        return f"{self.name}_bcount"
+    @staticmethod
+    def _leg(o_side: DataFrame, delta: DataFrame) -> DataFrame:
+        d, o = delta.alias("d"), o_side.alias("o")
+        return d.join(
+            o,
+            (F.col("d.band") == F.col("o.band"))
+            & (F.col("d.bucket") == F.col("o.bucket"))
+            & (F.col("d.doc_id") != F.col("o.doc_id")),
+        ).select(F.col("d.doc_id").alias("new_id"), F.col("o.doc_id").alias("match_id"))
 
-    @property
-    def buckets(self) -> int:
-        """See PostingIndex.buckets."""
-        return _stored_buckets(self.spark, self._bands)
-
-    def _band_rows(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        # postings via the inline-explode shape (_postings docstring);
-        # the shingle-ARRAY frame is built separately for the verify
-        # sidecar — never explode the aliased array
-        post = _postings(docs)
-        return _band_table(minhash_signatures_agg(post)), shingle_table(docs)
-
-    def exists(self) -> bool:
-        """See PostingIndex.exists."""
-        return all(
-            self.spark.catalog.tableExists(t)
-            for t in (self._bands, self._sh, self._bcount)
-        )
-
-    def build(self, docs: DataFrame) -> "BandIndex":
-        # persist the band rows so the bands write + count write share
-        # one tokenize/minhash pass (ADVICE r8); the sh sidecar is a
-        # different lineage (arrays, not postings) and writes once
-        for t in (self._bands, self._sh, self._bcount):
-            _clean_orphan_location(self.spark, t)
-        n = _derived_buckets(docs)
-        bands, sh = self._band_rows(docs)
-        bands = _fresh_persist(
-            f"{self.name}_build_bands", _bucket_aligned(bands, n, "band", "bucket")
-        )
-        # pre-flight bound agg first (materializes the band cache),
-        # then the three writes — same shape as PostingIndex.build
-        ub = _exact_max(self.spark, self._bcount, ["band", "bucket"], bands)
-        self._write_trio(bands, sh, n, "overwrite")
-        _write_ub(self.spark, self._bcount, ub)
-        return self
-
-    def append(self, crawl: DataFrame) -> None:
-        n = self.buckets  # the stored count — see PostingIndex.append
-        bands, sh = self._band_rows(crawl)
-        bands = _fresh_persist(
-            f"{self.name}_append_bands", _bucket_aligned(bands, n, "band", "bucket")
-        )
-        # guard + generation max fused into ONE collect (see
-        # PostingIndex.append); materializes the band cache too
-        clash = (
-            _clash_frame(self.spark.table(self._sh), bands, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        rows = _preflight_frame(
-            bands.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("num")),
-            clash,
-        ).collect()
-        gen_max = _preflight_dmax(
-            rows, "doc_id", f"BandIndex({self.name}).append"
-        )
-        # drifted bound written BEFORE the data writes (crash-sound)
-        # and re-tightened by compact()/repair()
-        prev = _read_ub(self.spark, self._bcount)
-        ub = None if prev is None else prev + gen_max
-        if ub is not None:
-            _write_ub(self.spark, self._bcount, ub)
-        self._write_trio(bands, sh, n, "append")
-        _settle_ub_after_append(self, self._bcount, ["band", "bucket"], ub)
-
-    def _write_trio(self, bands: DataFrame, sh: DataFrame, n: int, mode: str) -> None:
-        # sequential on purpose — see PostingIndex._write_trio
-        bands.write.bucketBy(n, "band", "bucket").sortBy("band", "bucket").mode(
-            mode
-        ).saveAsTable(self._bands)
-        _bucket_aligned(sh, n, "doc_id").write.bucketBy(n, "doc_id").mode(
-            mode
-        ).saveAsTable(self._sh)
-        self._write_counts(bands, n, mode)
-
-    def _write_counts(self, bands: DataFrame, n: int, mode: str) -> None:
-        # partition-local + one file per bucket: the caller's frame is
-        # (band, bucket)-aligned (persisted build/append frame or the
-        # bucketed table read in repair())
-        bands.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n")
-        ).write.bucketBy(n, "band", "bucket").mode(mode).saveAsTable(self._bcount)
-
-    def probe(self, crawl: DataFrame, tau: float = 0.5) -> DataFrame:
-        spark = self.spark
-        delta_bands, delta_sh = self._band_rows(crawl)
-        # band rows feed the count merge, both cands legs' delta side;
-        # persist the delta-bounded frame once per probe
-        delta_bands = _fresh_persist(f"{self.name}_probe_dbands", delta_bands)
-        # overlap would double doc rows in the sh union below (no
-        # dropDuplicates there by design — see that comment); the ≤5-row
-        # clash frame collects together with the hot-bucket decision —
-        # one driver action, not two (r10)
-        clash = (
-            _clash_frame(spark.table(self._sh), delta_bands, "doc_id")
-            if self.guard_overlap
-            else None
-        )
-        index_bands = spark.table(self._bands)
-        delta_counts = delta_bands.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("n_delta")
-        )
-        # ONE pre-flight action: admission guard + the ub-bound
-        # hot-bucket skip (see PostingIndex.prepare_probe)
-        rows = _preflight_frame(
-            delta_counts.agg(F.max("n_delta").alias("num")), clash
-        ).collect()
-        may_have_hot = _preflight_verdict(
-            rows,
-            _read_ub(spark, self._bcount),
-            self.cap,
-            "doc_id",
-            f"BandIndex({self.name}).probe",
-        )
-        has_hot = False
-        big = None
-        if may_have_hot:
-            # same bucket-local + broadcast count merge as
-            # PostingIndex.probe's exact path
-            stored = spark.table(self._bcount).groupBy("band", "bucket").agg(
-                F.sum("n").alias("n_stored")
-            )
-            big = (
-                stored.join(
-                    F.broadcast(delta_counts), ["band", "bucket"], "left_outer"
-                )
-                .filter(
-                    F.col("n_stored") + F.coalesce("n_delta", F.lit(0)) > self.cap
-                )
-                .select("band", "bucket")
-                .unionByName(
-                    delta_counts.filter(F.col("n_delta") > self.cap).select(
-                        "band", "bucket"
-                    )
-                )
-                .dropDuplicates(["band", "bucket"])
-            )
-            # natural corpora usually have NO over-cap bucket:
-            # short-circuit past both anti-joins (ADVICE r8)
-            has_hot = bool(big.head(1))
-        kept_index = (
-            index_bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-            if has_hot
-            else index_bands
-        )
-        kept_delta = (
-            delta_bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-            if has_hot
-            else delta_bands
-        )
-
-        # same two-leg split as PostingIndex.probe: crawl-vs-table (the
-        # bucketed side never shuffles) + crawl-vs-crawl (bounded by the
-        # crawl) — the union is the full candidate set
-        def cand(o_side: DataFrame) -> DataFrame:
-            d, o = kept_delta.alias("d"), o_side.alias("o")
-            return d.join(
-                o,
-                (F.col("d.band") == F.col("o.band"))
-                & (F.col("d.bucket") == F.col("o.bucket"))
-                & (F.col("d.doc_id") != F.col("o.doc_id")),
-            ).select(
-                F.col("d.doc_id").alias("new_id"),
-                F.col("o.doc_id").alias("match_id"),
-            )
-
-        cands = (
-            cand(kept_index)
-            .unionByName(cand(kept_delta))
-            .dropDuplicates(["new_id", "match_id"])
-        )
-        # plain union, NO dropDuplicates: the stored table holds one row
-        # per doc and appends are guarded disjoint, so deduping here
-        # would pay a corpus-wide exchange of the shingle sidecar on
-        # every probe to remove rows that cannot exist (r9 scale fix —
-        # the dedup discarded the table's bucket layout)
-        sh = spark.table(self._sh).unionByName(delta_sh)
+    @staticmethod
+    def _verify(pairs: DataFrame, sh: DataFrame, hot, tau: float) -> DataFrame:
+        cands = pairs.dropDuplicates(["new_id", "match_id"])
         return _jaccard_verify(cands, sh, "new_id", "match_id", tau=tau)
-
-    def compact(self) -> None:
-        """Collapse the per-bucket count sidecar to one row per
-        (band, bucket) — see PostingIndex.compact. Re-tightens the
-        pre-flight upper bound to the exact stored max."""
-        _compact_counts(self.spark, self._bcount, ["band", "bucket"])
-        _write_ub(
-            self.spark, self._bcount,
-            _exact_max(self.spark, self._bcount, ["band", "bucket"]),
-        )
 
     def reconcile(self) -> dict[str, int | bool]:
         """``_bcount`` must account for exactly the band table's rows
@@ -1157,22 +872,9 @@ class BandIndex:
         """Rebuild the count sidecar from the band table. An ``_sh`` /
         ``_bands`` doc-set mismatch (reconcile's second flag) cannot be
         repaired from the index alone — re-append the missing crawl's
-        rows or rebuild; the docstring IS the documented recovery
-        contract (ADVICE r8)."""
+        rows or rebuild."""
         self._write_counts(self.spark.table(self._bands), self.buckets, "overwrite")
-        _write_ub(
-            self.spark, self._bcount,
-            _exact_max(self.spark, self._bcount, ["band", "bucket"]),
-        )
-
-    def drop(self) -> None:
-        _drop(
-            self.spark,
-            self._bands,
-            self._sh,
-            self._bcount,
-            f"{self._bcount}_compact_tmp",
-        )
+        self._tighten_ub()
 
 
 @dataclass
@@ -1228,7 +930,6 @@ class SemanticRelease:
     spark: SparkSession
     name: str
     k: int | None = None
-    guard_overlap: bool = True
     _frozen_df: DataFrame | None = field(default=None, repr=False, compare=False)
 
     #: Mean vectors per cell the auto-k mode targets (mirrors
@@ -1246,11 +947,9 @@ class SemanticRelease:
 
     @property
     def buckets(self) -> int:
-        """See PostingIndex.buckets."""
         return _stored_buckets(self.spark, self._assigned)
 
     def exists(self) -> bool:
-        """See PostingIndex.exists."""
         return all(
             self.spark.catalog.tableExists(t)
             for t in (self._assigned, self._cents)
@@ -1322,11 +1021,10 @@ class SemanticRelease:
         Single-table append (one atomic write job); the centroid
         sidecar is immutable after build, so no partial-append state
         exists for this modality."""
-        if self.guard_overlap:
-            _assert_disjoint(
-                self.spark.table(self._assigned), crawl, "vec_id",
-                f"SemanticRelease({self.name}).append",
-            )
+        _assert_disjoint(
+            self.spark.table(self._assigned), crawl, "vec_id",
+            f"SemanticRelease({self.name}).append",
+        )
         n = self.buckets
         _bucket_aligned(self._assign(crawl), n, "cl").write.bucketBy(n, "cl").sortBy(
             "cl"
@@ -1340,14 +1038,12 @@ class SemanticRelease:
         )
 
         frozen = self._frozen()
-        if self.guard_overlap:
-            # a vec_id already in the release would cos=1 self-match
-            # and prune itself spuriously; the check rides the cached
-            # frozen frame, so it never rescans the table
-            _assert_disjoint(
-                frozen, crawl, "vec_id",
-                f"SemanticRelease({self.name}).probe",
-            )
+        # a vec_id already in the release would cos=1 self-match and
+        # prune itself spuriously; the check rides the cached frozen
+        # frame, so it never rescans the table
+        _assert_disjoint(
+            frozen, crawl, "vec_id", f"SemanticRelease({self.name}).probe"
+        )
         return incremental_cell_prune(
             frozen,
             self._assign(crawl),

@@ -1,5 +1,6 @@
 """VERDICT r10 ask #4: SemanticRelease append-drift study — the
-24-append analog of scripts/ab_compact24.py for the semantic modality.
+24-append analog, for the semantic modality, of scripts/ab_compact24.py
+(last held by commit 20f59ed).
 
 PostingIndex/BandIndex have the 24-append table and a wired
 auto-compact; SemanticRelease's contract says "re-release when the

@@ -8,6 +8,8 @@ from-scratch census recomputes."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,29 +72,42 @@ def test_text_index_lifecycle(spark, cls):
         rebuilt.drop()
 
 
-def test_posting_index_crawl_can_push_key_over_cap(spark):
-    """The probe merges the crawl's keys into the stored count sidecar
-    BEFORE the cap filter: a crawl that pushes a shingle over the cap
-    suppresses it exactly as a rebuild would (and the hot add-back
-    keeps surviving pairs' Jaccard exact)."""
-    boiler = _body("bp", 12)
-    release = _docs(
-        spark,
-        [(i, f"{boiler} {_body(f'u{i}', 20)}") for i in range(1, 4)],
-    )
-    # crawl: 2 docs sharing the boilerplate prefix + unique tails, one
-    # of them a true near-dup of release doc 1
-    crawl = _docs(
-        spark,
-        [
+def _hot_case(cls):
+    """(cap, release, crawl) whose boilerplate keys go over ``cap`` only
+    once the crawl lands: a shared shingle prefix for postings; for
+    bands, identical docs (every band bucket of a doc is shared by its
+    copies). Crawl doc 1_000_001 is a true dup of release doc 1, and
+    1_000_777 pairs with release doc 2 only through hot keys."""
+    if cls is PostingIndex:
+        boiler = _body("bp", 12)
+        release = [(i, f"{boiler} {_body(f'u{i}', 20)}") for i in range(1, 4)]
+        # crawl: 2 docs sharing the boilerplate prefix + unique tails,
+        # one of them a true near-dup of release doc 1
+        crawl = [
             (1_000_001, f"{boiler} {_body('u1', 20)}"),
             (1_000_777, f"{boiler} {_body('zz', 20)}"),
-        ],
-    )
-    # cap low enough that the boilerplate shingles go hot only once the
-    # crawl lands on top of the release's three carriers
-    idx = PostingIndex(spark, temp_name("hotcap"), cap=4)
-    rebuilt = PostingIndex(spark, temp_name("hotcap_rb"), cap=4)
+        ]
+        # low enough that the boilerplate shingles go hot only on top
+        # of the release's three carriers
+        return 4, release, crawl
+    # docs 2 and 3 share every bucket (2 carriers, at the cap); the
+    # crawl's copy makes 3
+    release = [(1, _body("u1")), (2, _body("bp")), (3, _body("bp"))]
+    crawl = [(1_000_001, _body("u1")), (1_000_777, _body("bp"))]
+    return 2, release, crawl
+
+
+@pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
+def test_posting_index_crawl_can_push_key_over_cap(spark, cls):
+    """The probe merges the crawl's keys into the stored count sidecar
+    BEFORE the cap filter: a crawl that pushes a key over the cap
+    suppresses it exactly as a rebuild would (and the posting index's
+    hot add-back keeps surviving pairs' Jaccard exact)."""
+    cap, release_rows, crawl_rows = _hot_case(cls)
+    release = _docs(spark, release_rows)
+    crawl = _docs(spark, crawl_rows)
+    idx = cls(spark, temp_name("hotcap"), cap=cap)
+    rebuilt = cls(spark, temp_name("hotcap_rb"), cap=cap)
     try:
         idx.build(release)
         via_index = _pairs(idx.probe(crawl))
@@ -101,12 +116,53 @@ def test_posting_index_crawl_can_push_key_over_cap(spark):
         assert via_index == via_rebuild
         matched = {(n, m) for (n, m, _) in via_index}
         assert (1_000_001, 1) in matched  # true dup survives the cap
-        # the boilerplate-only pairing must NOT reach tau (unique tails
-        # dominate), even though the shared prefix is hot
+        # the pairing through hot keys only must NOT come back
         assert (1_000_777, 2) not in matched
     finally:
         idx.drop()
         rebuilt.drop()
+
+
+def _jobs(spark, action) -> int:
+    """Spark jobs run by ``action()``."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: Spark jobs per lifecycle call on the fixed corpus below: build,
+#: append, probe, collecting that probe, a probe that takes the census
+#: merge, and an append that auto-compacts.
+_LIFECYCLE_JOBS = {PostingIndex: (7, 9, 7, 18, 11, 11), BandIndex: (8, 10, 7, 16, 11, 12)}
+
+
+@pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
+def test_lifecycle_calls_run_pinned_job_counts(spark, cls):
+    """The driver actions of each lifecycle call are pinned: a change
+    that adds, drops or splits a job in build, append or probe changes
+    a count here."""
+    idx = cls(spark, temp_name("jobs"))
+    crawl_c = lambda: _docs(spark, CRAWL_C())
+    try:
+        got = (
+            _jobs(spark, lambda: idx.build(_docs(spark, RELEASE()))),
+            _jobs(spark, lambda: idx.append(_docs(spark, CRAWL_B()))),
+            _jobs(spark, lambda: idx.probe(crawl_c())),
+            _jobs(spark, lambda: idx.probe(crawl_c()).collect()),
+        )
+        idx.cap = 1  # every stored key is over the cap
+        got += (_jobs(spark, lambda: idx.probe(crawl_c())),)
+        idx.cap = 2  # the append's drifted bound crosses 0.75 * cap
+        extra = [(3_000_001, _body("dup")), (3_000_002, _body("a4"))]
+        got += (_jobs(spark, lambda: idx.append(_docs(spark, extra))),)
+    finally:
+        idx.drop()
+    assert got == _LIFECYCLE_JOBS[cls]
 
 
 def _phys_nodes(n):

@@ -40,14 +40,14 @@ os.makedirs(leaf)
 name = lifecycle.process_index_name(spark, "dlp_index")
 lifecycle.write_release_stamp(spark, name, "v1:0:0")
 
-def blocked_write_ns(*args, **kwargs):
+def blocked_write_side(*args, **kwargs):
     with open(ready + ".tmp", "w") as f:
         json.dump({"token": scratch.owner_token(), "leaf": leaf}, f)
     os.rename(ready + ".tmp", ready)
     threading.Event().wait(300)
     os._exit(1)
 
-lifecycle.PostingIndex._write_ns = blocked_write_ns
+lifecycle.PostingIndex._write_side = blocked_write_side
 registry.load_all()
 registry.QUERIES["dedup_lifecycle_probe"](spark, sf_dir)
 """

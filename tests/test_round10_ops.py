@@ -1,6 +1,6 @@
 """Round-10 pins: compact() crash recovery (ADVICE r9 medium),
 release_current's one-job stamp check, the folded probe pre-flight
-(_probe_checks), SemanticRelease's interrupted-build + cache-staleness
+(prepare_probe), SemanticRelease's interrupted-build + cache-staleness
 contracts (VERDICT r9 ask #7 / ADVICE r9), and the scoped scratch
 directories behind the sink queries (VERDICT r9 ask #3)."""
 
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from overturelink_data_pipeline_spark.operators.lifecycle import (
+    BandIndex,
     PostingIndex,
     SemanticRelease,
     _stamp_file,
@@ -74,7 +75,7 @@ def test_compact_recovers_same_process_drop_rename_gap(spark):
 def test_compact_clears_foreign_orphan_tmp_dir(spark):
     """A tmp DIRECTORY left by a crashed foreign process (catalog knows
     no such table) used to kill every future compact with
-    LOCATION_ALREADY_EXISTS; _compact_counts now clears it."""
+    LOCATION_ALREADY_EXISTS; compact() now clears it."""
     idx = PostingIndex(spark, temp_name("cr_orphan"))
     try:
         idx.build(_docs(spark, RELEASE()))
@@ -140,10 +141,11 @@ def test_fused_stamp_leg_format(spark):
         assert leg["id"] == py, (leg["id"], py)
 
 
-def test_prepare_probe_equals_probe(spark):
+@pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
+def test_prepare_probe_equals_probe(spark, cls):
     """prepare_probe().finish(checks.collect()) IS probe() — the
     extension point cannot drift from the one-call path."""
-    idx = PostingIndex(spark, temp_name("split"))
+    idx = cls(spark, temp_name("split"))
     try:
         idx.build(_docs(spark, RELEASE()))
         crawl = _docs(spark, CRAWL())
@@ -176,30 +178,37 @@ def test_probe_overlap_guard_still_raises_after_fold(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_append_auto_compacts_on_drifted_bound(spark):
+@pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
+def test_append_auto_compacts_on_drifted_bound(spark, cls):
     """Disjoint appends drift the stored ub by += per-append max; when
     it crosses frac*cap, append() compacts, re-tightening ub to the
-    EXACT stored max (each key appears once per generation here, so
-    the true max stays tiny while the drift grows) and collapsing the
-    sidecar to one row per key."""
+    EXACT stored max (each key's carriers come from one generation
+    here, so the true max stays small while the drift grows) and
+    collapsing the sidecar to one row per key. A band key's carriers
+    are near-identical docs, so each band-index generation holds three
+    copies of one doc."""
     from overturelink_data_pipeline_spark.operators.lifecycle import _read_ub
 
-    idx = PostingIndex(spark, temp_name("ac"), cap=8, auto_compact_ub_frac=0.75)
+    copies = 3 if cls is BandIndex else 1
+    idx = cls(spark, temp_name("ac"), cap=8, auto_compact_ub_frac=0.75)
     try:
         idx.build(_docs(spark, RELEASE()))
         for m in range(4):  # each append's per-key max is ~2-3 → drift
             idx.append(
                 _docs(
                     spark,
-                    [((m + 1) * 1_000_000 + i, _body(f"g{m}x{i}")) for i in range(3)],
+                    [
+                        ((m + 1) * 1_000_000 + i, _body(f"g{m}x{i // copies}"))
+                        for i in range(3)
+                    ],
                 )
             )
-        ub = _read_ub(spark, idx._hcount)
+        ub = _read_ub(spark, idx._counts)
         assert ub is not None and ub <= 8 * 0.75  # a compact re-tightened it
         assert idx.auto_compact_ub_frac is not None  # not a true-max corpus
-        n_rows = spark.table(idx._hcount).count()
+        n_rows = spark.table(idx._counts).count()
         n_keys = (
-            spark.table(idx._hcount).select("h").dropDuplicates().count()
+            spark.table(idx._counts).select(*cls.KEYS).dropDuplicates().count()
         )
         assert n_rows <= n_keys + 3 * 60  # compacted recently (≤1 gen un-merged)
         # probes still correct after auto-compacts
@@ -357,33 +366,33 @@ def test_sink_shards_concurrent_processes_get_distinct_dirs():
 # ---------------------------------------------------------------------------
 
 
-def test_append_ub_persisted_before_data_writes(spark, monkeypatch):
+@pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
+def test_append_ub_persisted_before_data_writes(spark, monkeypatch, cls):
     """A crash AFTER the append's data writes but before any post-write
     maintenance must leave the stored pre-flight bound >= the true
     merged max (the drifted bound is written BEFORE the data writes).
     The pre-fix ordering wrote ub last: the crash window left a
     stale-LOW bound, reconcile() saw consistent row counts, and every
     later probe unsoundly skipped a genuinely hot key."""
-    from overturelink_data_pipeline_spark.operators import lifecycle
     from overturelink_data_pipeline_spark.operators.lifecycle import (
         _exact_max,
         _read_ub,
     )
 
-    idx = PostingIndex(spark, temp_name("ubcrash"))
+    idx = cls(spark, temp_name("ubcrash"))
     try:
         idx.build(_docs(spark, RELEASE()))
 
         def boom(*a, **k):
             raise RuntimeError("simulated crash after data writes")
 
-        monkeypatch.setattr(lifecycle, "_settle_ub_after_append", boom)
+        monkeypatch.setattr(cls, "_settle_ub", boom)
         with pytest.raises(RuntimeError, match="simulated crash"):
             idx.append(_docs(spark, CRAWL()))
         monkeypatch.undo()
-        ub = _read_ub(spark, idx._hcount)
+        ub = _read_ub(spark, idx._counts)
         assert ub is not None
-        assert ub >= _exact_max(spark, idx._hcount, ["h"])
+        assert ub >= _exact_max(spark, idx._counts, cls.KEYS)
         # probes over the crashed-append state stay sound: the bound
         # can only be too high (census runs needlessly), never too low
         got = _pairs(idx.probe(_docs(spark, [(2_000_011, _body("dup"))])))
@@ -398,7 +407,7 @@ def test_preflight_clash_ids_report_native_order():
     read e.g. ['10', '11', '3'] while _assert_disjoint's read
     [3, 10, 11])."""
     from overturelink_data_pipeline_spark.operators.lifecycle import (
-        _preflight_verdict,
+        _preflight_dmax,
     )
 
     rows = [
@@ -407,7 +416,7 @@ def test_preflight_clash_ids_report_native_order():
         {"kind": "dmax", "num": 1, "id": None},
     ]
     with pytest.raises(ValueError, match=r"\[3, 10\]"):
-        _preflight_verdict(rows, 0, 100, "doc_id", "t")
+        _preflight_dmax(rows, "t")
 
 
 def test_shard_scratch_override_live_after_import(monkeypatch, tmp_path):
