@@ -44,11 +44,12 @@ from overturelink_data_pipeline_spark.operators.dedup import (
     _band_table,
     _finish_probe,
     _fresh_persist,
-    _gram_hashes,
     _hot_doc_arrays,
     _jaccard_verify,
+    _postings,
     _probe_pair_counts,
     minhash_signatures_agg,
+    shingle_table,
 )
 from overturelink_data_pipeline_spark.session import _conf_bytes
 
@@ -111,35 +112,6 @@ def _bucket_aligned(df: DataFrame, buckets: int, *cols: str) -> DataFrame:
     input bytes (_derived_buckets) or, after the build, the stored
     table's own (_stored_buckets); writer parallelism equals it."""
     return df.repartition(buckets, *[F.col(c) for c in cols])
-
-
-def shingle_table(docs: DataFrame) -> DataFrame:
-    """(doc_id, sh array<long>) — distinct 3-gram shingle hashes per
-    doc with ≥3 tokens, via THE one shingle-hash definition
-    (dedup._gram_hashes); docs: (doc_id, text)."""
-    toked = docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-        F.size("toks") >= 3
-    )
-    return toked.select(
-        "doc_id", F.array_distinct(_gram_hashes()).alias("sh")
-    )
-
-
-def _postings(docs: DataFrame) -> DataFrame:
-    """(doc_id, h) exploded distinct shingle postings.
-
-    INLINE explode(expr), never explode of the aliased ``sh`` column:
-    InferFiltersFromGenerate substitutes an alias into the inferred
-    size/isnotnull filter and pushes it below the materializing
-    Project, where interpreted predicates have no CSE — O(tokens²)
-    string work per doc on the scan side (the pinned r7 lesson;
-    re-measured here: 7.0 s → sub-second for a 5 k-doc crawl at sf1)."""
-    toked = docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-        F.size("toks") >= 3
-    )
-    return toked.select(
-        "doc_id", F.explode(F.array_distinct(_gram_hashes())).alias("h")
-    )
 
 
 def _drop(spark: SparkSession, *tables: str) -> None:
@@ -295,7 +267,7 @@ def _stamp(n, hs) -> str:
     fingerprint_leg's SQL-side rendering (both print the DECIMAL(38,0)
     sum as a plain integer) — pinned by
     tests/test_round10_ops.py::test_fused_stamp_leg_format."""
-    return f"v1:{n}:{hs}"
+    return f"v2:{n}:{hs}"
 
 
 def fingerprint_leg(docs: DataFrame, cols, kind: str = "fp") -> DataFrame:
@@ -307,7 +279,7 @@ def fingerprint_leg(docs: DataFrame, cols, kind: str = "fp") -> DataFrame:
         F.lit(kind).alias("kind"),
         F.lit(None).cast("long").alias("num"),
         F.concat(
-            F.lit("v1:"), F.col("n").cast("string"),
+            F.lit("v2:"), F.col("n").cast("string"),
             F.lit(":"), F.col("hs").cast("string"),
         ).alias("id"),
     )
@@ -483,11 +455,6 @@ class PendingProbe:
             f if hot_keys is None else f.join(F.broadcast(hot_keys), keys, "left_anti")
             for f in (index, delta)
         )
-        # The full-corpus side table: the stored doc set and the crawl's
-        # are disjoint (guarded), so a plain union IS the total — a
-        # dropDuplicates would exchange the whole side table per probe
-        # to remove rows that cannot exist.
-        side = spark.table(idx._side).unionByName(idx._side_rows(self._crawl, delta))
         # Crawl-vs-crawl matches WITHOUT moving the corpus: a union of
         # the crawl into the index side would discard the bucket
         # layout and re-exchange the stored corpus whenever the crawl
@@ -500,7 +467,7 @@ class PendingProbe:
             idx._leg(cold_delta, cold_delta)
         )
         hot = None if hot_keys is None else (index.unionByName(delta), hot_keys)
-        return idx._verify(pairs, side, hot, tau)
+        return idx._verify(pairs, self._crawl, hot, tau)
 
 
 @dataclass
@@ -514,8 +481,9 @@ class _CountedIndex:
     A subclass states its ``KEYS``, which tables are ``_data`` /
     ``_side`` / ``_counts``, how docs become keyed rows (``_rows``) and
     side rows (``_side_rows``), one probe leg (``_leg``), the pair
-    verification (``_verify``; its ``hot`` is None or the pair of all
-    keyed rows and the hot keys), and its ``reconcile``/``repair``.
+    verification (``_verify(pairs, crawl, hot, tau)``; its ``hot`` is
+    None or the pair of all keyed rows and the hot keys), and its
+    ``reconcile``/``repair``.
 
     Durability: the data table is the source of truth. A build or append
     that dies between its three write jobs leaves the sidecars behind
@@ -746,7 +714,7 @@ class _CountedIndex:
 
 @dataclass
 class PostingIndex(_CountedIndex):
-    """Exact-shingle posting index: ``{name}_post`` (doc_id, h;
+    """Exact-shingle posting index: ``{name}_post`` (doc_id, h, n_sh;
     bucketBy(h)) + ``{name}_ns`` (per-doc distinct shingle counts;
     bucketBy(doc_id)) + ``{name}_hcount`` (per-key posting counts;
     bucketBy(h)).
@@ -754,7 +722,10 @@ class PostingIndex(_CountedIndex):
     probe() = dedup_incremental's semantics against the stored index:
     per crawl doc, every index-or-crawl doc sharing ≥1 non-hot shingle
     and verifying at Jaccard ≥ tau, one row per ordered (new, match)
-    pair. ``repair()`` rewrites both sidecars from the postings."""
+    pair. Each posting carries its doc's ``n_sh``, so verification
+    reads no side table; ``{name}_ns`` serves the admission guard and
+    reconcile(). ``repair()`` rewrites both sidecars from the
+    postings."""
 
     cap: int = NGRAM_DF_CAP
 
@@ -771,11 +742,11 @@ class PostingIndex(_CountedIndex):
         return post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
 
     @staticmethod
-    def _verify(pairs: DataFrame, ns: DataFrame, hot, tau: float) -> DataFrame:
+    def _verify(pairs: DataFrame, crawl: DataFrame, hot, tau: float) -> DataFrame:
         # hot add-back: per-doc over-cap arrays so surviving pairs
         # report the TRUE shared count (dedup_incremental's recipe)
         hot = None if hot is None else _hot_doc_arrays(*hot)
-        return _finish_probe(pairs, ns, hot, tau=tau).orderBy("new_id", "match_id")
+        return _finish_probe(pairs, hot, tau=tau).orderBy("new_id", "match_id")
 
     def reconcile(self) -> dict[str, int | bool]:
         """Consistency check for a suspected partial append: both
@@ -833,7 +804,7 @@ class BandIndex(_CountedIndex):
     @staticmethod
     def _side_rows(docs: DataFrame, bands: DataFrame) -> DataFrame:
         # the shingle-ARRAY frame comes from the docs, not from the
-        # exploded postings (never explode the aliased array)
+        # band rows
         return shingle_table(docs)
 
     @staticmethod
@@ -846,8 +817,12 @@ class BandIndex(_CountedIndex):
             & (F.col("d.doc_id") != F.col("o.doc_id")),
         ).select(F.col("d.doc_id").alias("new_id"), F.col("o.doc_id").alias("match_id"))
 
-    @staticmethod
-    def _verify(pairs: DataFrame, sh: DataFrame, hot, tau: float) -> DataFrame:
+    def _verify(self, pairs: DataFrame, crawl: DataFrame, hot, tau: float) -> DataFrame:
+        # The full-corpus shingle table: the stored doc set and the
+        # crawl's are disjoint (guarded), so a plain union IS the total
+        # — a dropDuplicates would exchange the whole side table per
+        # probe to remove rows that cannot exist.
+        sh = self.spark.table(self._sh).unionByName(shingle_table(crawl))
         cands = pairs.dropDuplicates(["new_id", "match_id"])
         return _jaccard_verify(cands, sh, "new_id", "match_id", tau=tau)
 

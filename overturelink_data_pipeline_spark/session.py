@@ -150,6 +150,12 @@ def get_spark(
             ".changelogCheckpointing.enabled",
             "true",
         )
+        # no per-call origin capture: with it on, every F.* and
+        # DataFrame call walks the Python stack and pays extra py4j
+        # round trips (twice the py4j calls of a warm lifecycle pass)
+        # and imports IPython into the driver. What is lost: the Python
+        # call site in error query contexts (docs/OPERATIONS.md §13)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

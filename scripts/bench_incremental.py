@@ -7,8 +7,9 @@ country cache, amortized across every monthly probe); each new crawl
 then probes it with ONLY its own postings. This script measures that
 split honestly:
 
-- ``index_build_s``: the one-off bucketed write (postings + per-doc
-  n_sh + over-cap census + hot arrays — all release artifacts).
+- ``index_build_s``: the one-off bucketed write (postings carrying
+  each doc's n_sh + over-cap census + hot arrays — all release
+  artifacts).
 - ``probe_s``: delta posting build + bucketed join + pair agg +
   add-back, per delta fraction. The corpus is NEVER re-exchanged:
   the index side of the join reads the bucketed table in place
@@ -55,9 +56,8 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-from overturelink_data_pipeline_spark.operators import dedup
 from overturelink_data_pipeline_spark.operators.dedup import (
-    NGRAM_DF_CAP, _gram_hashes, _incremental_probe,
+    NGRAM_DF_CAP, _incremental_probe, _postings,
 )
 
 BUCKETS = 32
@@ -68,22 +68,14 @@ n_docs = docs.count()
 
 # ---- one-off index build (release time) -----------------------------
 t0 = time.time()
-toked = docs.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-    F.size("toks") >= 3
-)
-post = toked.select("doc_id", F.explode(_gram_hashes()).alias("h")).distinct()
 (
-    post.write.bucketBy(BUCKETS, "h")
+    _postings(docs).write.bucketBy(BUCKETS, "h")
     .sortBy("h")
     .mode("overwrite")
     .saveAsTable("frozen_post")
 )
-post_t = spark.table("frozen_post")
-post_t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")).write.mode(
-    "overwrite"
-).saveAsTable("frozen_ns")
 (
-    post_t.groupBy("h")
+    spark.table("frozen_post").groupBy("h")
     .agg(F.count(F.lit(1)).alias("n"))
     .filter(F.col("n") > NGRAM_DF_CAP)
     .select("h")
@@ -93,7 +85,6 @@ post_t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")).write.mode(
 build_s = round(time.time() - t0, 2)
 
 index = spark.table("frozen_post")
-ns = spark.table("frozen_ns")
 census = spark.table("frozen_census")
 has_hot = bool(census.head(1))
 cold_index = (
@@ -121,18 +112,12 @@ def probe_frame(target_docs):
                 "text", 1, F.floor(F.length("text") * 0.8).cast("int")
             ).alias("text"),
         )
-        .withColumn("toks", F.split(F.trim(F.col("text")), "\\s+"))
-        .filter(F.size("toks") >= 3)
     )
-    dpost = delta_docs.select(
-        "doc_id", F.explode(_gram_hashes()).alias("h")
-    ).distinct()
+    dpost = _postings(delta_docs)
     dcold = (
         dpost.join(F.broadcast(census), "h", "left_anti") if has_hot else dpost
     )
-    # full-corpus ns for the match side; the delta's own counts union in
-    dns = dpost.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    return _incremental_probe(cold_index, dcold, ns.unionByName(dns), hot)
+    return _incremental_probe(cold_index, dcold, hot)
 
 """
 

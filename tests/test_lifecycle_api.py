@@ -138,7 +138,7 @@ def _jobs(spark, action) -> int:
 #: Spark jobs per lifecycle call on the fixed corpus below: build,
 #: append, probe, collecting that probe, a probe that takes the census
 #: merge, and an append that auto-compacts.
-_LIFECYCLE_JOBS = {PostingIndex: (7, 9, 7, 18, 11, 11), BandIndex: (8, 10, 7, 16, 11, 12)}
+_LIFECYCLE_JOBS = {PostingIndex: (7, 9, 7, 14, 11, 11), BandIndex: (8, 10, 7, 16, 11, 12)}
 
 
 @pytest.mark.parametrize("cls", [PostingIndex, BandIndex])
@@ -163,6 +163,43 @@ def test_lifecycle_calls_run_pinned_job_counts(spark, cls):
     finally:
         idx.drop()
     assert got == _LIFECYCLE_JOBS[cls]
+
+
+#: Spark jobs of a warm ``dedup_lifecycle_probe`` call (the stamp
+#: matched, so the standing release is probed) and of collecting its
+#: result.
+_WARM_QUERY_JOBS = (10, 7)
+
+
+def test_lifecycle_query_warm_path_runs_pinned_job_count(spark, sf_dir):
+    """The registered query's warm path is pinned: its pre-flight
+    collect, and the probe that verifies pairs from the postings' own
+    ``n_sh`` without a per-doc count join."""
+    from overturelink_data_pipeline_spark import registry
+    from overturelink_data_pipeline_spark.operators import dedup
+
+    registry.load_all()
+    fn = registry.QUERIES["dedup_lifecycle_probe"]
+    fn(spark, sf_dir).collect()  # the release is current from here on
+    held = []
+    got = (_jobs(spark, lambda: held.append(fn(spark, sf_dir))),)
+    assert dedup.LAST_LIFECYCLE_PATH == "probe"
+    got += (_jobs(spark, held[0].collect),)
+    assert got == _WARM_QUERY_JOBS
+
+
+def test_postings_count_reads_the_materialized_shingle_array(spark):
+    """``n_sh`` is ``size`` of the materialized ``sh`` column, so the
+    shingle hashes are computed once per doc, not once per posting."""
+    import re
+
+    from overturelink_data_pipeline_spark.operators.lifecycle import _postings
+
+    plan = (
+        _postings(_docs(spark, RELEASE()))._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert plan.count("transform(") == 1, plan
+    assert re.search(r"size\(sh#\d+", plan), plan
 
 
 def _phys_nodes(n):

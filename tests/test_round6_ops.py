@@ -22,10 +22,11 @@ def test_incremental_finds_planted_snapshot_dups(spark, sf_dir):
     # the planted copies: doc_id % 7 == 0 originals, >= 3 tokens in the
     # 80% prefix — each must surface its own original as a match
     from overturelink_data_pipeline_spark.operators.dedup import _prefix_corpus
+    from overturelink_data_pipeline_spark.session import read_table
 
     delta_ids = [
         r["doc_id"]
-        for r in _prefix_corpus(spark, sf_dir)
+        for r in _prefix_corpus(read_table(spark, sf_dir, "documents"))
         .filter(
             (F.col("doc_id") >= 1_000_000)
             & (F.size(F.split(F.trim("text"), r"\s+")) >= 30)

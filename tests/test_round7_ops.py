@@ -23,10 +23,11 @@ def test_incremental_minhash_rows_are_delta_anchored(spark, sf_dir):
     assert all(r["new_id"] >= 1_000_000 for r in out)
     matched = {(r["new_id"], r["match_id"]) for r in out}
     from overturelink_data_pipeline_spark.operators.dedup import _prefix_corpus
+    from overturelink_data_pipeline_spark.session import read_table
 
     delta_ids = [
         r["doc_id"]
-        for r in _prefix_corpus(spark, sf_dir)
+        for r in _prefix_corpus(read_table(spark, sf_dir, "documents"))
         .filter(
             (F.col("doc_id") >= 1_000_000)
             & (F.size(F.split(F.trim("text"), r"\s+")) >= 30)
@@ -202,20 +203,10 @@ def test_incremental_index_merge_equals_rebuild(spark, tmp_path):
     monthly rebuilds."""
     import uuid
 
-    from pyspark.sql import functions as F
-
     from overturelink_data_pipeline_spark.operators.dedup import (
-        _gram_hashes,
         _incremental_probe,
+        _postings as posts,
     )
-
-    def posts(df):
-        toked = df.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-            F.size("toks") >= 3
-        )
-        return toked.select(
-            "doc_id", F.explode(F.array_distinct(_gram_hashes())).alias("h")
-        )
 
     def mk_docs(rows):
         return spark.createDataFrame(rows, "doc_id long, text string")
@@ -241,14 +232,9 @@ def test_incremental_index_merge_equals_rebuild(spark, tmp_path):
         merged = spark.table(tbl)
 
         def probe(index_post, crawl):
-            ns = index_post.unionByName(posts(crawl)).groupBy("doc_id").agg(
-                F.count(F.lit(1)).alias("n_sh")
-            )
             return {
                 (r["new_id"], r["match_id"], r["jaccard"])
-                for r in _incremental_probe(
-                    index_post, posts(crawl), ns, hot=None
-                ).collect()
+                for r in _incremental_probe(index_post, posts(crawl), hot=None).collect()
             }
 
         via_append = probe(merged, crawl_c)

@@ -42,6 +42,12 @@ def test_s3a_conf_block():
     assert int(conf["spark.hadoop.fs.s3a.attempts.maximum"]) == 3
 
 
+def test_engine_sessions_skip_dataframe_origin_capture(spark):
+    """get_spark turns off PySpark's per-call DataFrame origin capture
+    (docs/OPERATIONS.md §13)."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
 def test_ensure_parallelism_conditional(spark, tmp_path):
     """Three regimes: non-file frames pass through untouched; a
     single-row-group parquet scan (genuinely unsplittable) gets the
