@@ -26,8 +26,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -182,11 +180,12 @@ def _fresh_persist(key: str, df: DataFrame, level=None) -> DataFrame:
 #: Defaults sit above the driver corpora (max shingle df is 25, max
 #: band bucket is 194, both at sf0.1 — the regen log of
 #: scripts/gen_dedup_goldens.py prints the headroom), so oracle/golden
-#: results are bit-identical there; scripts/bench_skew.py exercises a planted
-#: hot-boilerplate corpus against both settings. The golden replica
-#: (scripts/gen_dedup_goldens.py) mirrors BAND_BUCKET_CAP's default.
-NGRAM_DF_CAP = int(os.environ.get("SPARK_GRAFT_NGRAM_DF_CAP", "128"))
-BAND_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_BUCKET_CAP", "256"))
+#: results are bit-identical there; scripts/bench_skew.py (last present
+#: in commit 0f75094) ran a planted hot-boilerplate corpus against both
+#: settings. The golden replica (scripts/gen_dedup_goldens.py) mirrors
+#: BAND_BUCKET_CAP.
+NGRAM_DF_CAP = 128
+BAND_BUCKET_CAP = 256
 
 
 _PREFIX_CORPUS_SQL = """
@@ -335,46 +334,28 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     near the cap, so the oracle matches bit-for-bit). The (lang, ±1
     length-bucket) predicate rides along as a residual filter to
     preserve the declared blocking semantics."""
-    # posting construction is SHUFFLE-FREE: the 3-gram hashes come from
-    # a transform over the token array's index range (xxhash64 of the
-    # triple directly — no string concat), then one explode. The round-1
-    # implementation used posexplode + window leads because interpreted
-    # HOFs looked 4× slower — but that measurement was taken on a
-    # 1-task scan (see ensure_parallelism); with the scan actually
-    # parallel, the HOF build wins 2× AND drops the window's full
-    # shuffle+sort of the posting table, which at 100 TB is the
-    # difference between one pass and materializing postings twice.
-    corpus = _prefix_corpus(read_table(spark, sf_dir, "documents"))
-    toked = corpus.withColumn("toks", F.split(F.trim(F.col("text")), "\\s+")).filter(
-        F.size("toks") >= 3
-    )
-    # persisted: the census decision job materializes the
-    # tokenize→explode→distinct build once and the main job reuses it
-    # (unpersisted, the build ran twice per call — ADVICE r4)
-    # repartition("h") first: distinct, census, and BOTH sides of the
-    # candidate self-join below are then h-clustered — one exchange of
-    # the posting table instead of four (see dedup_exact_substring's
-    # wins build for the mechanics; the self-join's equi-keys include
-    # h, so HashPartitioning(h) on the shared cache satisfies both
-    # sides with no further shuffle)
+    # postings the _postings way: explode_outer of the materialized
+    # distinct shingle array (so (doc, shingle) rows are unique without
+    # a distinct, and each doc's n_sh rides its postings instead of a
+    # per-doc count joined back onto the pairs). Persisted: the census
+    # decision job builds it once and the main job reuses it.
+    # repartition("h") first: the census and BOTH sides of the
+    # candidate self-join are then h-clustered off one exchange of the
+    # posting table (the self-join's equi-keys include h, so
+    # HashPartitioning(h) on the shared cache satisfies both sides).
     post = _fresh_persist(
         "ngram_post",
-        toked.select(
-            "doc_id",
-            "lang",
-            (F.length("text") / 100).cast("int").alias("len_bucket"),
-            F.explode(_gram_hashes()).alias("h"),
+        _hashed_shingle_table(spark, sf_dir)
+        .select(
+            "doc_id", "lang", "len_bucket", F.explode_outer("sh").alias("h"), "n_sh"
         )
-        .repartition("h")
-        .distinct(),  # distinct (doc, shingle) — co-occurrence count = |a ∩ b|
+        .repartition("h"),
     )
-    ns = post.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     # df-cap (see docstring): the stop-shingle census is bounded by the
     # boilerplate vocabulary, not the corpus — broadcastable by nature.
-    # The per-doc side tables (ns, hot arrays) grow with the corpus, so
-    # no forced broadcast there: AQE picks broadcast when they fit and
-    # a shuffled ID join when they don't; an empty census (None) skips
-    # the anti-join AND the add-back joins outright (_capped_census).
+    # The per-doc hot arrays grow with the corpus, so no forced
+    # broadcast there; an empty census (None) skips the anti-join AND
+    # the add-back joins outright.
     hot = _capped_census("ngram_census", post, NGRAM_DF_CAP)
     cold = post if hot is None else post.join(F.broadcast(hot), "h", "left_anti")
     a, b = cold.alias("a"), cold.alias("b")
@@ -389,15 +370,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("a.doc_id").alias("id_a"),
             F.col("b.doc_id").alias("id_b"),
+            F.col("a.n_sh").alias("na"),
+            F.col("b.n_sh").alias("nb"),
         )
         .agg(F.count(F.lit(1)).alias("inter_cold"))
-        .join(ns.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
-        .join(ns.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
     )
     if hot is not None:
-        pairs, hot_common = _with_hot_addback(
-            pairs, _hot_doc_arrays(post.select("doc_id", "h"), hot)
-        )
+        pairs, hot_common = _with_hot_addback(pairs, _hot_doc_arrays(post, hot))
         inter = F.col("inter_cold") + hot_common
     else:
         inter = F.col("inter_cold")
@@ -711,36 +690,36 @@ def dedup_lifecycle_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pending.finish(rows)
 
 
-def _over_cap_keys(postings: DataFrame, cap: int) -> DataFrame:
-    """Posting keys whose doc-frequency exceeds ``cap`` — bounded by
-    the boilerplate vocabulary, not the corpus, hence broadcastable
-    (the one frame in this family that IS provably small)."""
+def _over_cap_keys(
+    postings: DataFrame, cap: int, keys: tuple[str, ...] = ("h",)
+) -> DataFrame:
+    """Posting keys (the ``keys`` columns) whose doc-frequency exceeds
+    ``cap``, from a map-side-combined count with fixed state per key, so
+    a hot key is never collected. Bounded by the boilerplate
+    vocabulary, not the corpus, hence broadcastable (the one frame in
+    this family that IS provably small)."""
     return (
-        postings.groupBy("h")
+        postings.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > cap)
-        .select("h")
+        .select(*keys)
     )
 
 
-def _capped_census(key: str, postings: DataFrame, cap: int) -> DataFrame | None:
-    """Materialize the over-cap census ONCE — persisted (it is bounded
-    by the boilerplate vocabulary, so tiny by construction) — and
-    return it, or ``None`` when it is empty: the natural-corpus case.
+def _capped_census(
+    name: str, postings: DataFrame, cap: int, keys: tuple[str, ...] = ("h",)
+) -> DataFrame | None:
+    """The over-cap census, persisted under ``name`` and materialized
+    ONCE by the branch-deciding ``head(1)``; ``None`` when it is empty
+    (every natural corpus).
 
-    This is the round-5 shave of the branch-deciding job (VERDICT r4
-    ask #4): the census used to be an UNPERSISTED frame, so the
-    driver-side ``head(1)`` ran the full posting aggregation once to
-    decide the branch and the main job then re-ran the SAME aggregation
-    inside its broadcast-anti-join subtree. Persisting the (tiny)
-    census means the decision job's aggregation is the only one, and —
-    the larger saving — a ``None`` return lets callers skip the
-    anti-join ENTIRELY, dropping the census subtree + broadcast
-    exchange + anti-join scan from the main job on every natural
-    corpus. Exactness is unaffected: an anti-join against an empty set
-    is the identity, and the add-back correction is only defined for
-    the non-empty case anyway."""
-    big = _fresh_persist(key, _over_cap_keys(postings, cap))
+    Persisted, the decision job's aggregation is the only one (the main
+    job reads the tiny cache instead of re-aggregating the postings),
+    and a ``None`` return lets callers drop the anti-join, its census
+    subtree and its broadcast exchange from the plan. Exactness is
+    unaffected: an anti-join against an empty set is the identity, and
+    the add-back correction is only defined for the non-empty case."""
+    big = _fresh_persist(name, _over_cap_keys(postings, cap, keys))
     return big if big.head(1) else None
 
 
@@ -788,47 +767,33 @@ def _with_hot_addback(pairs: DataFrame, hot_arrays: DataFrame):
     return joined, hot_common
 
 
-#: ``_posting_pairs`` default for ``over_cap``: compute the census
-#: inside the plan (the standalone/test path). Distinct from ``None``,
-#: which since round 5 means "census already checked and EMPTY — skip
-#: the anti-join outright" (what ``_capped_census`` returns on every
-#: natural corpus).
-_CENSUS_UNCHECKED = object()
-
-
 def _posting_pairs(
     postings: DataFrame,
-    cap: int,
+    over_cap: DataFrame | None,
     payload: str | None = None,
-    over_cap=_CENSUS_UNCHECKED,
+    keys: tuple[str, ...] = ("h",),
 ) -> DataFrame:
-    """Candidate pairs from an inverted index of (doc_id, h) postings:
-    census FIRST (map-side-combined count, fixed state per key — the
-    dedup.py rule: never collect a hot bucket), broadcast anti-join of
-    over-``cap`` keys, THEN a bounded collect_list and an in-codegen
-    pair fan-out over each sorted posting list. Emitting pairs from
-    posting LISTS instead of a self-join halves the exchanges of the
-    posting table (measured 3.5 → 1.3 s at sf1 on
-    dedup_exact_substring: the self-join re-shuffled both aliases; the
-    list explode is one shuffle and the per-list fan-out is a
-    transform over ≤ cap ids). Returns one row per unordered pair
+    """Candidate pairs from an inverted index of ``(doc_id, *keys)``
+    postings: broadcast anti-join of the ``over_cap`` census (from
+    ``_over_cap_keys``/``_capped_census``; ``None`` declares it
+    known-empty and skips the anti-join), THEN a bounded collect_list
+    per key and an in-codegen pair fan-out over each sorted posting
+    list. Emitting pairs from posting LISTS instead of a self-join
+    halves the exchanges of the posting table (measured 3.5 → 1.3 s at
+    sf1 on dedup_exact_substring: the self-join re-shuffled both
+    aliases; the list explode is one shuffle and the per-list fan-out
+    is a transform over ≤ cap ids). Returns one row per unordered pair
     (id_a < id_b) per shared posting key — aggregate downstream.
 
     ``payload`` names an extra per-posting column to RIDE THE PAIRS
     (as ``pa``/``pb``): a downstream per-doc attribute (e.g. shingle
     count) then needs no post-aggregation join back — at tens of
     millions of candidate rows those joins cost more than the fan-out
-    itself. ``over_cap`` passes a precomputed census (from
-    ``_capped_census``) so callers that also need the hot-key set
-    don't pay the aggregation twice; passing ``None`` declares the
-    census KNOWN-EMPTY and skips the anti-join (identity against an
-    empty set) — the natural-corpus fast path."""
-    if over_cap is _CENSUS_UNCHECKED:
-        over_cap = _over_cap_keys(postings, cap)
+    itself."""
     cold = (
         postings
         if over_cap is None
-        else postings.join(F.broadcast(over_cap), "h", "left_anti")
+        else postings.join(F.broadcast(over_cap), list(keys), "left_anti")
     )
     if payload is None:
         member = F.col("doc_id")
@@ -842,7 +807,7 @@ def _posting_pairs(
             "p.y.pl AS pb",
         ]
     posts = (
-        cold.groupBy("h")
+        cold.groupBy(*keys)
         .agg(F.collect_list(member).alias("ids"))
         .filter(F.size("ids") >= 2)
         # array_sort on structs orders by the first field (doc_id), so
@@ -875,7 +840,7 @@ SUBSTR_MODULUS = 11
 #: generation (the NGRAM_DF_CAP recipe): natural 15-token runs are
 #: near-unique (df 1-2), so the cap only fires on pathological
 #: boilerplate, where a shared window IS non-discriminative.
-SUBSTR_DF_CAP = int(os.environ.get("SPARK_GRAFT_SUBSTR_DF_CAP", "64"))
+SUBSTR_DF_CAP = 64
 
 _SUBSTR_CORPUS_SQL = f"""
     SELECT doc_id, text FROM documents
@@ -1018,9 +983,7 @@ def dedup_exact_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # add-back to land on, exactly as in the census formulation.
     cold = (
         _posting_pairs(
-            wins.filter(F.col("df") <= SUBSTR_DF_CAP).drop("df"),
-            SUBSTR_DF_CAP,
-            over_cap=None,
+            wins.filter(F.col("df") <= SUBSTR_DF_CAP).drop("df"), over_cap=None
         )
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("c_cold"))
@@ -1152,7 +1115,7 @@ def text_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     big = _capped_census("contain_census", sh, NGRAM_DF_CAP)
     inter = (
-        _posting_pairs(sized, NGRAM_DF_CAP, payload="n", over_cap=big)
+        _posting_pairs(sized, big, payload="n")
         .groupBy("id_a", "pa", "id_b", "pb")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1233,24 +1196,6 @@ def _band_table(sig: DataFrame) -> DataFrame:
         + ")"
     )
     return sig.select("doc_id", F.posexplode(buckets).alias("band", "bucket"))
-
-
-def _band_census(bands: DataFrame) -> DataFrame:
-    """Over-cap (band, bucket) keys. Skew guard: a bucket with d
-    members emits d(d-1)/2 candidates, and boilerplate-dominated docs
-    collapse whole bands into ONE bucket. Hot buckets are counted with
-    a map-side-combined agg (fixed state per key — never a
-    collect_list that would OOM on the hot bucket itself), then
-    anti-joined away broadcast-side; the over-cap list is bounded by
-    the boilerplate population, not the corpus. A skipped bucket is
-    non-discriminative by definition — the standard LSH bucket-cap
-    recall trade, mirrored in the golden replica."""
-    return (
-        bands.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > BAND_BUCKET_CAP)
-        .select("band", "bucket")
-    )
 
 
 def _jaccard_verify(
@@ -1346,32 +1291,19 @@ def _minhash_verified_pairs(
     # the shingle table feeds three plan legs (signatures + both sides
     # of candidate verification); persist it so the interpreted
     # shingling transform runs once, not three times (at 100 TB this is
-    # a checkpointed intermediate table for the same reason)
+    # a checkpointed intermediate table for the same reason). No eager
+    # count: _lsh_candidates' bands.count() populates this cache as a
+    # byproduct, and the verify legs then read it.
     sh = _fresh_persist(
         "minhash_shingles",
-        _hashed_shingle_table(spark, sf_dir).select("doc_id", "sh"),
+        shingle_table(_prefix_corpus(read_table(spark, sf_dir, "documents"))),
         StorageLevel.MEMORY_AND_DISK,
     )
-    # no eager sh.count() here: _lsh_candidates' bands.count() (r13)
-    # materializes this cache as a byproduct of building the band
-    # table, and the verify legs below then read the populated cache —
-    # an extra count job was measured neutral once bands was cached
-    post = sh.select("doc_id", F.explode("sh").alias("h"))
-    # NOT persisted (unlike simhash's sigs — tried in r5 and reverted,
-    # measured 2.48 → 3.09 s at sf1): both self-join sides and the
-    # census broadcast subtree here are IDENTICAL plans, so
-    # ReuseExchange already computes the signature pipeline once
-    # inside the single job; a persist only adds a job boundary and a
-    # cache write. Simhash differs because its vote agg feeds legs
-    # with non-identical exchanges.
-    # banding lives in _lsh_candidates. Notes that still govern its
-    # shape: the census anti-join is kept IN-PLAN (a driver-side head(1)
-    # short-circuit was tried in r5 and reverted — without a cached
-    # upstream it runs the whole signature pipeline as its own job),
-    # and candidate pairs carry IDs only through the band shuffle — the
-    # shingle arrays join back AFTER dedup, so the wide payload never
-    # rides the (band, bucket) exchange.
-    cand = _lsh_candidates(post)
+    # the signature pipeline is NOT persisted: the band table it feeds
+    # is, and candidate pairs carry IDs only through the band shuffle —
+    # the shingle arrays join back AFTER dedup, so the wide payload
+    # never rides the (band, bucket) exchange
+    cand = _lsh_candidates(sh.select("doc_id", F.explode("sh").alias("h")))
     return _jaccard_verify(cand, sh, "id_a", "id_b", ordered=ordered)
 
 
@@ -1379,53 +1311,21 @@ def _lsh_candidates(post: DataFrame) -> DataFrame:
     """Raw band-bucket candidate pairs (id_a < id_b, deduped) — the
     banding stage of dedup_minhash_lsh.
 
-    The band table is persisted and materialized BEFORE it branches
-    (r13): it feeds the census aggregate plus candidate generation,
-    and the un-persisted shape duplicated the whole signature
-    pipeline statically (plan audit, r13). Cached, the signature
-    pipeline runs once and the legs read (doc_id, band, bucket) rows
-    — 4 ints/doc, the same bounded-intermediate class as simhash's
-    cached ``sigs``.
-
-    r14 (guide §3.4, the _posting_pairs/mm_dedup_phash recipe):
-    candidate pairs fan out from per-bucket sorted doc-id LISTS
-    instead of the bucket SELF-JOIN — one exchange of the cached band
-    rows (the groupBy) replaces two self-join input exchanges plus a
-    third cache scan, and the census becomes a driver-side head(1) on
-    a persisted (tiny, boilerplate-bounded) over-cap frame: every
-    natural corpus (census empty at all driver SFs) then skips the
-    anti-join subtree outright. The census STAYS a fixed-state count
-    aggregate computed before any collect_list (the dedup.py rule:
-    never collect a hot bucket — the cold side's lists are ≤
-    BAND_BUCKET_CAP by construction). Pair set is IDENTICAL: same
-    (band, bucket) co-membership, same cap filter, same dedup —
-    pinned by the golden parquet."""
-    sig = minhash_signatures_agg(post)
-    bands = _fresh_persist("minhash_bands", _band_table(sig))
+    The band table is persisted and materialized BEFORE it branches:
+    it feeds the census and the pair fan-out, and un-persisted both
+    legs would re-run the signature pipeline. Cached, they read
+    (doc_id, band, bucket) rows — 4 ints/doc. Pairs fan out from
+    per-bucket sorted id lists (_posting_pairs keyed by (band,
+    bucket)), one exchange of the cached rows, and the census is
+    _capped_census's: every natural corpus skips the anti-join. A
+    bucket over BAND_BUCKET_CAP is non-discriminative by definition —
+    the standard LSH bucket-cap recall trade, mirrored in the golden
+    replica."""
+    bands = _fresh_persist("minhash_bands", _band_table(minhash_signatures_agg(post)))
     bands.count()
-    big = _fresh_persist("minhash_band_census", _band_census(bands))
-    cold = (
-        bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-        if big.head(1)
-        else bands
-    )
-    posts = (
-        cold.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(F.col("ids").alias("a"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(a, (x, i) -> "
-        "transform(slice(a, i + 2, size(a) - i - 1), "
-        "y -> struct(x AS id_a, y AS id_b))))"
-    )
-    return (
-        posts.select(F.explode(pair_expr).alias("p"))
-        .select("p.id_a", "p.id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
+    keys = ("band", "bucket")
+    big = _capped_census("minhash_census", bands, BAND_BUCKET_CAP, keys)
+    return _posting_pairs(bands, big, keys=keys).dropDuplicates(["id_a", "id_b"])
 
 
 @spark_query(
@@ -1499,11 +1399,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     refilter lifecycle at signature level."""
     sh = _fresh_persist(
         "incr_mh_shingles",
-        _hashed_shingle_table(spark, sf_dir).select("doc_id", "sh"),
+        shingle_table(_prefix_corpus(read_table(spark, sf_dir, "documents"))),
         StorageLevel.MEMORY_AND_DISK,
     )
-    post = sh.select("doc_id", F.explode("sh").alias("h"))
-    sig = minhash_signatures_agg(post)
+    sig = minhash_signatures_agg(sh.select("doc_id", F.explode("sh").alias("h")))
     # the frozen LSH table stand-in: ONE exchange on the band key,
     # persisted — census, delta filter, and both probe-join sides all
     # consume it partition-local (the dedup_incremental posting
@@ -1511,11 +1410,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = _fresh_persist(
         "incr_mh_bands", _band_table(sig).repartition("band", "bucket")
     )
-    big = _fresh_persist("incr_mh_census", _band_census(bands))
+    keys = ("band", "bucket")
+    big = _capped_census("incr_mh_census", bands, BAND_BUCKET_CAP, keys)
     kept = (
-        bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
-        if big.head(1)
-        else bands
+        bands if big is None else bands.join(F.broadcast(big), list(keys), "left_anti")
     )
     d, o = kept.filter(F.col("doc_id") >= INCR_DELTA_MIN).alias("d"), kept.alias("o")
     cand = (
@@ -1629,19 +1527,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # same hot-bucket guard as the MinHash band join (see there): a
     # 16-bit chunk shared by a boilerplate cluster is one bucket with
-    # the whole cluster in it
-    big = _fresh_persist(
-        "simhash_band_census",
-        banded.groupBy("band", "chunk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > BAND_BUCKET_CAP)
-        .select("band", "chunk"),
-    )
-    # empty census (every natural corpus) ⇒ no anti-join in the plan
-    # at all — the _capped_census recipe; sigs are already cached, so
-    # the decision head(1) is a cheap cache-side agg
-    if big.head(1):
-        banded = banded.join(F.broadcast(big), ["band", "chunk"], "left_anti")
+    # the whole cluster in it. sigs are cached, so the census decision
+    # is a cheap cache-side agg
+    keys = ("band", "chunk")
+    big = _capped_census("simhash_census", banded, BAND_BUCKET_CAP, keys)
+    if big is not None:
+        banded = banded.join(F.broadcast(big), list(keys), "left_anti")
     a, b = banded.alias("a"), banded.alias("b")
     hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (

@@ -17,7 +17,6 @@ materializing the whole partition; feature vectors come back as
 from __future__ import annotations
 
 import hashlib
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -27,6 +26,7 @@ from pyspark.sql import types as T
 
 from overturelink_data_pipeline_spark.operators.dedup import (
     _fresh_persist as _fresh_persist_dedup,
+    _posting_pairs,
 )
 from overturelink_data_pipeline_spark.registry import spark_query
 from overturelink_data_pipeline_spark.session import (
@@ -431,7 +431,7 @@ def _mm_phash_oracle() -> str:
 #: corpora — it exists for the ubiquitous-asset case (default
 #: thumbnail, blank frame) where one payload cluster would otherwise
 #: emit d(d-1)/2 candidate pairs.
-MM_BAND_BUCKET_CAP = int(os.environ.get("SPARK_GRAFT_MM_BUCKET_CAP", "256"))
+MM_BAND_BUCKET_CAP = 256
 
 #: The 28 unordered byte-pairs (j, k), j < k, of the 8 pHash bytes.
 _PHASH_BAND_PAIRS = [(j, k) for j in range(8) for k in range(j + 1, 8)]
@@ -478,28 +478,23 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-agg shape). The cap never fires on
     md5-derived natural corpora (measured: max 16-bit bucket size 2 at
     sf0.1), so the oracle's brute-force all-pairs scan stays
-    bit-identical; scripts/bench_skew.py plants a hot identical asset
-    to demonstrate the bounded-candidate behavior.
+    bit-identical; scripts/bench_skew.py (last present in commit
+    0f75094) planted a hot identical asset to demonstrate the
+    bounded-candidate behavior.
 
-    Scale mechanics mirror dedup_simhash: only (media_id, band_idx,
-    band_val) crosses the candidate shuffle — never payloads or decoded
-    pixels."""
+    Scale mechanics mirror dedup_simhash: only (media_id, packed hash,
+    band_idx, band_val) crosses the candidate shuffle — never payloads
+    or decoded pixels."""
     ph = _fresh_persist_dedup("mm_phash", _phash_table(spark, sf_dir))
     ph.count()  # materialize before the plan branches
-    # r13 rework of the candidate join (guide §3.4 + the dedup family's
-    # _posting_pairs recipe): the phash cache previously had SIX
-    # consumers — census, BOTH sides of a bucket self-join, the hot
-    # star leg, and two verify joins back for the hash bytes (the
-    # stage profile showed four ~0.7 s cache-scan stages per run plus
-    # the two rejoin shuffles). Now the 64-bit hash rides the postings
-    # as ONE packed BIGINT, pairs fan out from per-bucket collect_list
-    # arrays (one shuffle, no self-join), hamming verifies inline
-    # (bit_count of one XOR — byte-wise XOR concatenated is word XOR),
-    # and the census is materialized once with the _capped_census
-    # empty-fast-path: a natural corpus (the cap never fires on
-    # md5-derived corpora — max bucket size 2 at sf0.1) runs census +
-    # posting build only, with the anti-join and star-leg subtrees
-    # dropped from the plan instead of riding it dead.
+    # the 64-bit hash rides the postings as ONE packed BIGINT, so pairs
+    # fan out from per-bucket sorted lists (_posting_pairs, payload pk)
+    # and hamming verifies inline (bit_count of one XOR — byte-wise XOR
+    # concatenated is word XOR): one shuffle of the band rows, no
+    # self-join and no verify joins back into the cache. The census
+    # stays its own (the star leg needs each hot bucket's min_id), with
+    # the _capped_census empty fast path: a natural corpus drops the
+    # anti-join and star-leg subtrees from the plan.
     # shiftleft|OR, not Horner multiply: b0 >= 128 would overflow the
     # signed BIGINT top byte and raise under an ANSI session (the
     # driver's default); bitwise shifts carry no overflow semantics
@@ -514,56 +509,25 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col(f"b{j}") * 256 + F.col(f"b{k}")).cast("int")
         for j, k in _PHASH_BAND_PAIRS
     ]
+    keys = ("band_idx", "band_val")
     bands = ph.select(
-        "media_id",
+        F.col("media_id").alias("doc_id"),
         pk.alias("pk"),
-        F.posexplode(F.array(*band_vals)).alias("band_idx", "band_val"),
+        F.posexplode(F.array(*band_vals)).alias(*keys),
     )
     # map-side-combined bucket census; the over-cap list is bounded by
-    # the hot-asset population, never the corpus — broadcastable.
-    # Persisted + head(1) so the empty (natural-corpus) case skips the
-    # anti-join and hot-star subtrees outright.
+    # the hot-asset population, never the corpus — broadcastable
     big = _fresh_persist_dedup(
         "mm_phash_census",
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.count(F.lit(1)).alias("n"), F.min("media_id").alias("min_id"))
+        bands.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"), F.min("doc_id").alias("min_id"))
         .filter(F.col("n") > MM_BAND_BUCKET_CAP)
-        .select("band_idx", "band_val", "min_id"),
+        .select(*keys, "min_id"),
     )
     hot = bool(big.head(1))
-    cold = (
-        bands.join(
-            F.broadcast(big.select("band_idx", "band_val")),
-            ["band_idx", "band_val"],
-            "left_anti",
-        )
-        if hot
-        else bands
-    )
-    # pair fan-out from sorted posting lists (struct sorts by its
-    # first field, media_id, so id_a < id_b), packed hash riding as
-    # the payload — no self-join, no verify joins
-    posts = (
-        cold.groupBy("band_idx", "band_val")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("media_id", "pk"))
-            ).alias("ids")
-        )
-        .filter(F.size("ids") >= 2)
-        .select(F.col("ids").alias("a"))
-    )
-    pair_expr = F.expr(
-        "flatten(transform(a, (x, i) -> "
-        "transform(slice(a, i + 2, size(a) - i - 1), "
-        "y -> struct(x AS x, y AS y))))"
-    )
-    cand = posts.select(F.explode(pair_expr).alias("p")).select(
-        F.col("p.x.media_id").alias("id_a"),
-        F.col("p.x.pk").alias("pka"),
-        F.col("p.y.media_id").alias("id_b"),
-        F.col("p.y.pk").alias("pkb"),
-    )
+    cand = _posting_pairs(
+        bands, big.select(*keys) if hot else None, payload="pk", keys=keys
+    ).withColumnsRenamed({"pa": "pka", "pb": "pkb"})
     if hot:
         # star pairs for over-cap buckets: O(membership), not
         # O(membership²); the anchor's hash arrives by one bounded
@@ -572,11 +536,11 @@ def mm_dedup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("media_id").alias("id_a"), pk.alias("pka")
         )
         cand_hot = (
-            bands.join(F.broadcast(big), ["band_idx", "band_val"])
-            .filter(F.col("media_id") != F.col("min_id"))
+            bands.join(F.broadcast(big), list(keys))
+            .filter(F.col("doc_id") != F.col("min_id"))
             .select(
                 F.col("min_id").alias("id_a"),
-                F.col("media_id").alias("id_b"),
+                F.col("doc_id").alias("id_b"),
                 F.col("pk").alias("pkb"),
             )
             .join(anchors, "id_a")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from overturelink_data_pipeline_spark.operators.dedup import _posting_pairs
 from overturelink_data_pipeline_spark.registry import spark_query
 from overturelink_data_pipeline_spark.session import (
     ensure_parallelism,
@@ -825,15 +826,15 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB plan shape: the exact set intersection never materializes —
     the inverted index groups distinct (source, shingle) postings by
-    shingle, and each key's source SET is bounded by the number of
+    shingle, and each key's source list is bounded by the number of
     SOURCES (a config-scale constant, unlike the per-doc posting lists
-    the dedup family must cap), so the collect_set is safe at any
-    corpus size and pair fan-out per key is ≤ S². repartition("sh")
-    up front makes the per-source distinct AND the set-collect run
-    partition-local off one exchange (the dedup_exact_substring
-    recipe); the S-row size table joins with an explicit broadcast
-    hint — provably bounded by the source population. Output is
-    ≤ S(S−1)/2 rows regardless of data size."""
+    the dedup family must cap), so _posting_pairs runs with no census
+    at any corpus size and pair fan-out per key is ≤ S².
+    repartition("sh") up front makes the per-source distinct AND the
+    list collect run partition-local off one exchange (the
+    dedup_exact_substring recipe); the S-row size table joins with an
+    explicit broadcast hint — provably bounded by the source
+    population. Output is ≤ S(S−1)/2 rows regardless of data size."""
     docs = ensure_parallelism(read_table(spark, sf_dir, "documents"))
     t = docs.select("source", tokens(F.col("text")).alias("t"))
     idx = F.expr(
@@ -847,20 +848,9 @@ def corpus_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["source", "sh"])
     )
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
-    inv = (
-        sh.groupBy("sh")
-        .agg(F.array_sort(F.collect_set("source")).alias("ss"))
-        .filter(F.size("ss") >= 2)
-    )
-    pair_expr = F.expr(
-        "flatten(transform(ss, (x, i) -> "
-        "transform(slice(ss, i + 2, size(ss) - i - 1), "
-        "y -> struct(x AS sa, y AS sb))))"
-    )
     shared = (
-        inv.select(F.explode(pair_expr).alias("p"))
-        .select(F.col("p.sa").alias("src_a"), F.col("p.sb").alias("src_b"))
-        .groupBy("src_a", "src_b")
+        _posting_pairs(sh.withColumnRenamed("source", "doc_id"), None, keys=("sh",))
+        .groupBy(F.col("id_a").alias("src_a"), F.col("id_b").alias("src_b"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
     za = F.broadcast(sizes.select(F.col("source").alias("src_a"), F.col("n").alias("na")))

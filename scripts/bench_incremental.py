@@ -57,7 +57,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 from overturelink_data_pipeline_spark.operators.dedup import (
-    NGRAM_DF_CAP, _incremental_probe, _postings,
+    NGRAM_DF_CAP, _incremental_probe, _over_cap_keys, _postings,
 )
 
 BUCKETS = 32
@@ -74,14 +74,9 @@ t0 = time.time()
     .mode("overwrite")
     .saveAsTable("frozen_post")
 )
-(
-    spark.table("frozen_post").groupBy("h")
-    .agg(F.count(F.lit(1)).alias("n"))
-    .filter(F.col("n") > NGRAM_DF_CAP)
-    .select("h")
-    .write.mode("overwrite")
-    .saveAsTable("frozen_census")
-)
+_over_cap_keys(spark.table("frozen_post"), NGRAM_DF_CAP).write.mode(
+    "overwrite"
+).saveAsTable("frozen_census")
 build_s = round(time.time() - t0, 2)
 
 index = spark.table("frozen_post")
@@ -242,7 +237,8 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 from overturelink_data_pipeline_spark.operators.dedup import (
-    BAND_BUCKET_CAP, N_BANDS, N_HASHES, _gram_hashes, minhash_signatures_agg,
+    BAND_BUCKET_CAP, N_BANDS, N_HASHES, _gram_hashes, _over_cap_keys,
+    minhash_signatures_agg,
 )
 
 BUCKETS = 32
@@ -283,18 +279,13 @@ band_frame(
     "band", "bucket"
 ).mode("overwrite").saveAsTable("frozen_bands")
 bt = spark.table("frozen_bands")
-(
-    bt.groupBy("band", "bucket")
-    .agg(F.count(F.lit(1)).alias("n"))
-    .filter(F.col("n") > BAND_BUCKET_CAP)
-    .select("band", "bucket")
-    .write.mode("overwrite")
-    .saveAsTable("frozen_band_census")
-)
+_over_cap_keys(bt, BAND_BUCKET_CAP, ("band", "bucket")).write.mode(
+    "overwrite"
+).saveAsTable("frozen_bands_census")
 build_s = round(time.time() - t0, 2)
 
 index = spark.table("frozen_bands")
-census = spark.table("frozen_band_census")
+census = spark.table("frozen_bands_census")
 has_hot = bool(census.head(1))
 kept = (
     index.join(F.broadcast(census), ["band", "bucket"], "left_anti")

@@ -188,6 +188,25 @@ def test_lifecycle_query_warm_path_runs_pinned_job_count(spark, sf_dir):
     assert got == _WARM_QUERY_JOBS
 
 
+#: Spark jobs of a ``dedup_ngram_jaccard`` call (the table read and the
+#: census decision) and of writing its result to the noop sink.
+_NGRAM_JACCARD_JOBS = (5, 5)
+
+
+def test_ngram_jaccard_runs_pinned_job_count(spark, sf_dir):
+    """``dedup_ngram_jaccard`` is pinned: its postings carry each doc's
+    ``n_sh`` and are unique by construction, so the query runs no
+    distinct and no per-doc count join onto the pairs."""
+    from overturelink_data_pipeline_spark import registry
+
+    registry.load_all()
+    fn = registry.QUERIES["dedup_ngram_jaccard"]
+    held = []
+    got = (_jobs(spark, lambda: held.append(fn(spark, sf_dir))),)
+    got += (_jobs(spark, held[0].write.format("noop").mode("overwrite").save),)
+    assert got == _NGRAM_JACCARD_JOBS
+
+
 def test_postings_count_reads_the_materialized_shingle_array(spark):
     """``n_sh`` is ``size`` of the materialized ``sh`` column, so the
     shingle hashes are computed once per doc, not once per posting."""

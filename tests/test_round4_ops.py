@@ -176,47 +176,61 @@ def test_hll_estimate_within_sketch_error(spark, sf_dir):
 
 
 def test_posting_pairs_matches_bruteforce_reference(spark):
-    """Property: _posting_pairs == the self-join reference on random
-    posting tables, in both plain and payload mode."""
+    """Property: _posting_pairs over the _over_cap_keys census == the
+    self-join reference on random posting tables, in both plain and
+    payload mode, for a one-column and a two-column posting key."""
     import itertools
     import random
 
-    from overturelink_data_pipeline_spark.operators.dedup import _posting_pairs
+    from overturelink_data_pipeline_spark.operators.dedup import (
+        _over_cap_keys,
+        _posting_pairs,
+    )
 
     rng = random.Random(7)
-    rows = [
+    h_rows = [
         (doc, f"h{rng.randint(0, 40)}")
         for doc in range(60)
         for _ in range(rng.randint(1, 6))
     ]
-    rows = list(set(rows))
-    # plant a hot key ABOVE the cap so the census/anti-join guard is
-    # exercised in both modes (r4 review: seed 7's natural max bucket
-    # was 8 < cap, leaving the guard untested)
-    rows += [(900 + i, "hot") for i in range(12)]
-    df = spark.createDataFrame(rows, "doc_id long, h string")
+    # band-table shape: a doc holds one bucket per band, and the same
+    # bucket value in two bands is two different keys
+    band_rows = [
+        (doc, band, rng.randint(0, 12)) for doc in range(60) for band in range(4)
+    ]
     cap = 9
-    # reference: per-key doc sets, pairs from keys with 2..cap docs
-    by_h: dict = {}
-    for doc, h in rows:
-        by_h.setdefault(h, set()).add(doc)
-    want = sorted(
-        (a, b)
-        for docs in by_h.values()
-        if 2 <= len(docs) <= cap
-        for a, b in itertools.combinations(sorted(docs), 2)
-    )
-    got = sorted(
-        (r["id_a"], r["id_b"]) for r in _posting_pairs(df, cap).collect()
-    )
-    assert got == want
-    # payload mode: same pairs, each side carrying its payload value
-    dfp = df.withColumn("n", (F.col("doc_id") * 10).cast("long"))
-    gotp = sorted(
-        (r["id_a"], r["pa"], r["id_b"], r["pb"])
-        for r in _posting_pairs(dfp, cap, payload="n").collect()
-    )
-    assert gotp == sorted((a, a * 10, b, b * 10) for a, b in want)
+    for keys, rows, hot, schema in [
+        (("h",), h_rows, ("hot",), "doc_id long, h string"),
+        (("band", "bucket"), band_rows, (1, 99), "doc_id long, band int, bucket int"),
+    ]:
+        # plant a hot key ABOVE the cap so the census/anti-join guard is
+        # exercised in both modes (seed 7's natural h keys all sit below it)
+        rows = list(set(rows)) + [(900 + i, *hot) for i in range(12)]
+        df = spark.createDataFrame(rows, schema)
+        # reference: per-key doc sets, pairs from keys with 2..cap docs
+        by_key: dict = {}
+        for doc, *key in rows:
+            by_key.setdefault(tuple(key), set()).add(doc)
+        want = sorted(
+            (a, b)
+            for docs in by_key.values()
+            if 2 <= len(docs) <= cap
+            for a, b in itertools.combinations(sorted(docs), 2)
+        )
+        big = _over_cap_keys(df, cap, keys)
+        assert hot in {tuple(r) for r in big.collect()}
+        got = sorted(
+            (r["id_a"], r["id_b"])
+            for r in _posting_pairs(df, big, keys=keys).collect()
+        )
+        assert got == want
+        # payload mode: same pairs, each side carrying its payload value
+        dfp = df.withColumn("n", (F.col("doc_id") * 10).cast("long"))
+        gotp = sorted(
+            (r["id_a"], r["pa"], r["id_b"], r["pb"])
+            for r in _posting_pairs(dfp, big, payload="n", keys=keys).collect()
+        )
+        assert gotp == sorted((a, a * 10, b, b * 10) for a, b in want)
 
 
 def test_streaming_validator_roundtrip_fuzz(spark, tmp_path):

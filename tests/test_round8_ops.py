@@ -44,10 +44,11 @@ def test_lsh_band_table_merge_equals_rebuild(spark):
     per-doc (signature slices hash independently of corpus content);
     the census and probe consume whatever row set the table holds."""
     from overturelink_data_pipeline_spark.operators.dedup import (
-        _band_census,
+        BAND_BUCKET_CAP,
         _band_table,
         _gram_hashes,
         _jaccard_verify,
+        _over_cap_keys,
         minhash_signatures_agg,
     )
 
@@ -99,7 +100,7 @@ def test_lsh_band_table_merge_equals_rebuild(spark):
             # full band set, anti-join hot buckets, delta side = the
             # probing crawl, then exact-jaccard verification
             all_bands = index_bands.unionByName(bands(crawl))
-            big = _band_census(all_bands)
+            big = _over_cap_keys(all_bands, BAND_BUCKET_CAP, ("band", "bucket"))
             kept = (
                 all_bands.join(F.broadcast(big), ["band", "bucket"], "left_anti")
                 if big.head(1)
